@@ -3,8 +3,7 @@
 The reference keeps a ``dict[str, DataFrame]`` "data inventory" of
 eagerly-loaded pandas frames (reference main.py:240,254,272). Here the
 catalog is lazy: each name maps to a parquet scan whose filters and
-column pruning Catalyst pushes into the reader, and tables can also be
-registered as temp views for ``spark.sql`` access.
+column pruning Catalyst pushes into the reader.
 """
 
 from __future__ import annotations
@@ -41,20 +40,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(
                 col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for spark.sql entry point)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

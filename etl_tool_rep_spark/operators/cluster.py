@@ -10,10 +10,11 @@ approximation):
 repeated until no label changes. Each iteration is one join + one
 aggregation (shuffle by vertex); convergence takes O(diameter)
 iterations — near-dup clusters are tiny and star-shaped, so 2-4
-rounds in practice. ``localCheckpoint`` truncates the growing lineage
-each round (without it, iteration k re-executes all k-1 prior joins
-and the driver eventually OOMs planning the plan tree — the classic
-iterative-Spark failure at scale).
+rounds in practice. A pin truncates the growing lineage each round
+(without it, iteration k re-executes all k-1 prior joins and the
+driver eventually OOMs planning the plan tree — the classic
+iterative-Spark failure at scale); its durability follows the session
+(``session.pin``).
 
 This is one of the declared non-SQL-expressible operators (rows-only
 oracle): the fixpoint loop has no single-query SQL equivalent.
@@ -24,37 +25,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def connected_components(pairs: DataFrame,
                          src: str = "id_1", dst: str = "id_2",
-                         max_iterations: int = 20,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         max_iterations: int = 20) -> DataFrame:
     """Cluster ids from an undirected edge list.
 
     Returns (id, cluster_id) where cluster_id is the minimum vertex id
     reachable from ``id``; isolated vertices are not emitted (callers
-    left-join and coalesce to self). Deterministic for any input.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint()`` into that directory — on a real cluster
-    an executor loss then recovers from storage instead of killing the
-    loop's lineage (same durability flag as operators/graph.pagerank);
-    when None, executor-local ``localCheckpoint`` (local mode)."""
-    spark_ = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark_.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def cp(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint()
-
+    left-join and coalesce to self). Deterministic for any input."""
     edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
              .unionByName(
                  pairs.select(F.col(dst).alias("a"),
                               F.col(src).alias("b")))
              .distinct())
-    edges = cp(edges)
+    edges = pin(edges)
     # candidate-pair graphs are usually far smaller than the corpus:
     # right-size the iteration's shuffle width so per-round fixed cost
     # doesn't dominate (AQE coalesces stage-by-stage, but the loop's
@@ -81,7 +68,7 @@ def connected_components(pairs: DataFrame,
         new_labels = (labels.unionByName(neighbor_labels)
                       .groupBy("id")
                       .agg(F.min("label").alias("label")))
-        new_labels = cp(new_labels)
+        new_labels = pin(new_labels)
         changed = (new_labels.alias("n")
                    .join(labels.alias("o"), "id")
                    .filter(F.col("n.label") != F.col("o.label"))

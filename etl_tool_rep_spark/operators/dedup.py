@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exprs import let_bind
+from ..session import pin
 
 # Mersenne prime 2^31-1: permutation arithmetic a*h+b stays < 2^62,
 # safely inside BIGINT.
@@ -168,9 +169,9 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
               .withColumn("_sh", word_shingle_hashes(F.col("_txt")))
               .withColumn("_sig", _minhash_sig_udf(k)(F.col("_sh")))
               .drop("_txt"))
-    # materialize once (lineage truncated; blocks GC'd with the plan)
-    # so the four downstream branches don't recompute the signatures
-    base = base.localCheckpoint(eager=True)
+    # materialize once so the four downstream branches don't recompute
+    # the signatures
+    base = pin(base)
 
     band_structs = F.array(*[
         F.struct(F.lit(j).alias("band"),
@@ -236,17 +237,6 @@ element_at(transform(array({counts}), c ->
 """
 
 
-def simhash64(text_col_sql: str) -> Column:
-    """64-bit SimHash over whitespace tokens (frequency-weighted:
-    repeated tokens contribute repeatedly). Single aggregate pass
-    builds all 64 bit-counters at once, then bit assembly.
-
-    Takes a SQL expression string (usually a backticked column name)
-    rather than a Column — see _SIMHASH_COUNTS_SQL note."""
-    counts = _SIMHASH_COUNTS_SQL.format(text=text_col_sql)
-    return F.expr(_SIMHASH_ASSEMBLE_SQL.format(counts=counts))
-
-
 def simhash_candidate_pairs(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id",
                             max_hamming: int = 3) -> DataFrame:
@@ -267,7 +257,7 @@ def simhash_candidate_pairs(df: DataFrame, text_col: str = "text",
               .withColumn("_sh", F.expr(
                   _SIMHASH_ASSEMBLE_SQL.format(counts="`_cnt`")))
               .select("_id", "_sh"))
-    base = base.localCheckpoint(eager=True)
+    base = pin(base)
     band_structs = F.array(*[
         F.struct(F.lit(j).alias("band"),
                  F.shiftrightunsigned("_sh", j * 16)
@@ -302,9 +292,8 @@ def gram_set(df: DataFrame, text_col: str = "text",
     mirrors the SQL oracle — unlike MinHash, which keeps a
     truncated-shingle fallback).
 
-    The exploded-distinct set is materialized once (executor-local
-    checkpoint; prefer persist/reliable checkpoint on a real
-    cluster): every caller fans it out to 2-3 branches (join sides +
+    The exploded-distinct set is pinned once (``session.pin``):
+    every caller fans it out to 2-3 branches (join sides +
     per-doc counts) and the shingle explode + distinct shuffle would
     otherwise re-run per branch."""
     tri = (df.filter(F.size(F.split(F.col(text_col), r"\s+")) >= n)
@@ -313,7 +302,7 @@ def gram_set(df: DataFrame, text_col: str = "text",
                      F.explode(word_shingles(F.col(text_col), n))
                       .alias("_g"))
              .distinct())
-    return tri.localCheckpoint(eager=False)
+    return pin(tri, eager=False)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",

@@ -5,11 +5,7 @@ the canonical iterative-Spark shape (same discipline as
 ``cluster.connected_components``): lineage truncated per round by a
 checkpoint, convergence measured by max rank delta.
 
-Durability: ``localCheckpoint`` keeps blocks on executors only — fine
-for local[*] and tests, but on a real cluster a lost executor kills
-the lineage with no recompute path. Pass ``checkpoint_dir`` to switch
-every round to a RELIABLE ``checkpoint()`` (HDFS/object-store backed)
-— the 100-TB setting. The flag changes durability only, not results.
+Durability of the per-round cuts follows the session (``session.pin``).
 
 Dangling-node mass (vertices with no out-edges) is folded back
 uniformly each round, so ranks always sum to 1 — the original
@@ -27,18 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              damping: float = 0.85, max_iterations: int = 30,
-             tol: float = 1e-7,
-             checkpoint_dir: str | None = None) -> DataFrame:
+             tol: float = 1e-7) -> DataFrame:
     """PageRank over a directed edge list; returns (id, rank) with
     ranks summing to 1. Undirected graphs: pass each edge in both
     directions. Deterministic up to float summation order.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint()`` into that directory (cluster-durable);
-    when None, executor-local ``localCheckpoint`` (local mode).
 
     Truncation cadence: measured at sf0.1 (local[32]), per-round
     eager truncation BEATS batching rounds into one lazy
@@ -49,27 +42,18 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     one checkpointed job per round, plan depth constant."""
     check_every = 5
     truncate_every = 1
-    sc = edges.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        sc.setCheckpointDir(checkpoint_dir)
-
-    def cp(df: DataFrame, eager: bool = True) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
-    e = cp(edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .distinct())
-    verts = cp(e.select(F.col("s").alias("id"))
-               .unionByName(e.select(F.col("d").alias("id")))
-               .distinct())
+    e = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+            .distinct())
+    verts = pin(e.select(F.col("s").alias("id"))
+                .unionByName(e.select(F.col("d").alias("id")))
+                .distinct())
     n = verts.count()
     out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # out-degree is static: fold it into the edge list ONCE so every
     # round costs a single (ranks ⋈ weighted-edges) join instead of
     # rank ⋈ edges ⋈ deg — max_iterations joins saved, identical
     # arithmetic (same pattern as queries/tier20.pagerank_exact)
-    ew = cp(e.join(out_deg, "s"))
+    ew = pin(e.join(out_deg, "s"))
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
 
     for i in range(max_iterations):
@@ -97,14 +81,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         if (i + 1) % check_every == 0 or i == max_iterations - 1:
             # lazy checkpoint: the delta aggregate is the action that
             # materializes this round — one job for update + probe
-            ck = cp(stepped, eager=False)
+            ck = pin(stepped, eager=False)
             delta = ck.agg(
                 F.max(F.abs(F.col("rank") - F.col("_prev")))).first()[0]
             ranks = ck.select("id", "rank")
             if delta is not None and delta < tol:
                 break
         elif (i + 1) % truncate_every == 0:
-            ranks = cp(stepped.select("id", "rank"))
+            ranks = pin(stepped.select("id", "rank"))
         else:
             ranks = stepped.select("id", "rank")
     return ranks.select("id", "rank")

@@ -49,6 +49,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import session
+
 __all__ = ["grouped_row_number", "global_row_number",
            "grouped_prefix_sum", "lead_bucket"]
 
@@ -197,7 +199,7 @@ def grouped_prefix_sum(df: DataFrame, group_by: Sequence[str],
     # whose upstream is expensive relative to t's (bucketed,
     # census-sized) materialization (guide §2.4 / §3.3)
     if pin:
-        t = t.localCheckpoint(eager=False)
+        t = session.pin(t, eager=False)
     # offsets aggregate each EARLIER bucket's full-bucket total with
     # the same fn (sum of sums / max of maxes)
     offs = _offsets(t, gcols, {name: (fns[fn](col), fn)

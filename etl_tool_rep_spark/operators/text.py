@@ -12,10 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# BPE-ish tokenizer regex: letter runs | digit runs | single
-# non-alnum-non-space symbols.
-TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 PUNCT_RE = r"[^A-Za-z0-9\s]"
 
 # tiny marker-word sets per language for the n-gram/stopword heuristic
@@ -30,11 +26,6 @@ CJK_RE = r"[一-鿿]"
 
 def n_words(text: Column) -> Column:
     return F.size(F.split(text, r"\s+")).cast("bigint")
-
-
-def n_tokens_bpe(text: Column) -> Column:
-    """Token count under the BPE-ish regex."""
-    return F.regexp_count(text, F.lit(TOKEN_RE)).cast("bigint")
 
 
 def approx_llm_tokens(text: Column) -> Column:

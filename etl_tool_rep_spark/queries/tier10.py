@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number
+from ..session import pin
 from .registry import query
 
 
@@ -422,9 +423,8 @@ def market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.collect_set("l_partkey").alias("_s")))
     # three consumers (n, part_cnt, pairs) — materialize the basket
     # shuffle once instead of recomputing it per branch (was 3x the
-    # collect_set aggregation and the dominant cost of the query);
-    # reliable checkpoint instead of executor-local on a real cluster
-    baskets = baskets.localCheckpoint(eager=False)
+    # collect_set aggregation and the dominant cost of the query)
+    baskets = pin(baskets, eager=False)
     items = baskets.select(F.explode("_s").alias("l_partkey"))
     n = baskets.agg(F.count(F.lit(1)).alias("n"))
     part_cnt = items.groupBy("l_partkey").agg(

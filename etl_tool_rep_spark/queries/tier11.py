@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import grouped_prefix_sum
+from ..session import pin
 from .registry import query
 
 
@@ -87,11 +88,10 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc-count-sized 3-int rows; pin so the bucketed prefix sum's
     # two consumers (window branch + offsets branch) share one
     # computation instead of re-tokenizing per branch
-    joined = (toks.join(news, "doc_id", "left")
-              .select("doc_id",
-                      F.col("n_tok").cast("bigint").alias("n_tok"),
-                      nw.cast("bigint").alias("new_words"))
-              .localCheckpoint(eager=False))
+    joined = pin(toks.join(news, "doc_id", "left")
+                 .select("doc_id",
+                         F.col("n_tok").cast("bigint").alias("n_tok"),
+                         nw.cast("bigint").alias("new_words")), eager=False)
     t = grouped_prefix_sum(joined, [], [F.asc("doc_id")],
                            lead="doc_id",
                            sums={"_cv": "new_words", "_ct": "n_tok"})

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.dedup import normalize_text, word_shingles
+from ..session import pin
 from .registry import query
 
 
@@ -119,9 +120,8 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe, so the shingle pass planned and ran twice), and the
     # pinned pair table is duplicate-gram-collapsed before both
     # shuffles. Weighting by c keeps occurrence semantics identical.
-    g2 = (tri.groupBy("g", "doc_id")
-          .agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+    g2 = pin(tri.groupBy("g", "doc_id")
+             .agg(F.count(F.lit(1)).alias("c")), eager=False)
     firsts = g2.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"),
                    F.col("c")).otherwise(0)

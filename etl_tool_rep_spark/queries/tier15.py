@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.dedup import normalize_text, word_shingles
 from ..operators.skew import salted_agg_count, salted_join
+from ..session import pin
 from .registry import query
 
 
@@ -306,10 +307,9 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy(F.col("p").getField("0").alias("a"),
                         F.col("p").getField("1").alias("b"))
                .agg(F.sum("cnt").cast("bigint").alias("c")))
-        top = (pr.orderBy(F.col("c").desc(), F.col("a").asc(),
-                          F.col("b").asc())
-                 .limit(1)
-                 .localCheckpoint(eager=True))  # one 3-col row/round
+        top = pin(pr.orderBy(F.col("c").desc(), F.col("a").asc(),
+                             F.col("b").asc())
+                    .limit(1))  # one 3-col row/round
         tops.append(top.select(
             F.lit(k).cast("int").alias("merge_round"),
             F.col("a").alias("left_sym"),
@@ -323,12 +323,12 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         pat = F.concat(F.lit(" "), F.col("a"), F.lit("  "), F.col("b"),
                        F.lit(" "))
         rep = F.concat(F.lit(" "), F.col("a"), F.col("b"), F.lit(" "))
-        v = (v.crossJoin(F.broadcast(top))
-              .select(F.trim(F.replace(F.replace(padded, pat, rep),
-                                       F.lit("  "), F.lit(" ")))
-                       .alias("seq"), "cnt")
-              .localCheckpoint(eager=False))  # rounds chain: keep the
-        # plan tree flat instead of nesting 3 rewrites deep
+        # rounds chain: keep the plan tree flat instead of nesting 3
+        # rewrites deep
+        v = pin(v.crossJoin(F.broadcast(top))
+                 .select(F.trim(F.replace(F.replace(padded, pat, rep),
+                                          F.lit("  "), F.lit(" ")))
+                          .alias("seq"), "cnt"), eager=False)
     out = tops[0]
     for t in tops[1:]:
         out = out.unionByName(t)
@@ -404,10 +404,9 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy(F.col("p").getField("0").alias("a"),
                         F.col("p").getField("1").alias("b"))
                .agg(F.sum("cnt").cast("bigint").alias("c")))
-        top = (pr.orderBy(F.col("c").desc(), F.col("a").asc(),
-                          F.col("b").asc())
-                 .limit(1).select("a", "b")
-                 .localCheckpoint(eager=True))
+        top = pin(pr.orderBy(F.col("c").desc(), F.col("a").asc(),
+                             F.col("b").asc())
+                    .limit(1).select("a", "b"))
 
         def _rewrite(frame):
             padded = F.concat(F.lit(" "),
@@ -424,8 +423,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             return (frame.crossJoin(F.broadcast(top))
                          .select(*keep, rewritten.alias("seq")))
 
-        v = _rewrite(v).localCheckpoint(eager=False)
-        enc = _rewrite(enc).localCheckpoint(eager=False)
+        v = pin(_rewrite(v), eager=False)
+        enc = pin(_rewrite(enc), eager=False)
     return (dwords.join(enc, "w")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_words"),

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import grouped_prefix_sum
+from ..session import pin
 from .registry import query
 
 
@@ -162,11 +163,11 @@ def ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("value", "c1", "c2"))
     n = s.agg(F.sum(F.when(F.col("a"), 1).otherwise(0)).alias("n1"),
               F.sum(F.when(F.col("a"), 0).otherwise(1)).alias("n2"))
-    g = (cum.crossJoin(F.broadcast(n))  # 1-row scalar attach
-            .select("value", "n1", "n2",
-                    F.abs(F.col("c1") * F.col("n2")
-                          - F.col("c2") * F.col("n1")).alias("gap"))
-         .localCheckpoint(eager=False))
+    g = pin(cum.crossJoin(F.broadcast(n))  # 1-row scalar attach
+               .select("value", "n1", "n2",
+                       F.abs(F.col("c1") * F.col("n2")
+                             - F.col("c2") * F.col("n1")).alias("gap")),
+            eager=False)
     mx = g.groupBy().agg(F.max("gap").alias("max_gap"))
     return (g.crossJoin(F.broadcast(mx))  # 1-row scalar attach
              .filter(F.col("gap") == F.col("max_gap"))

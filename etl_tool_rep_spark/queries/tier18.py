@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _HOPS = 4
@@ -84,24 +85,22 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded by distinct pairs instead of raw line counts
     li = (load(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_suppkey").distinct())
-    e = (li.alias("x").join(
-            li.alias("y"),
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-         .select(F.col("x.l_suppkey").alias("a"),
-                 F.col("y.l_suppkey").alias("b"))
-         .distinct()
-         .localCheckpoint(eager=True))
+    e = pin(li.alias("x").join(
+               li.alias("y"),
+               (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+               & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
+            .select(F.col("x.l_suppkey").alias("a"),
+                    F.col("y.l_suppkey").alias("b"))
+            .distinct())
     src = li.agg(F.min("l_suppkey")).first()[0]
     settled = (e.sparkSession.createDataFrame(
         [(src, 0)], schema="id long, dist int"))
     frontier = settled
     for k in range(1, _HOPS + 1):
-        new = (e.join(frontier.select(F.col("id").alias("a")), "a")
-                .select(F.col("b").alias("id")).distinct()
-                .join(settled, "id", "left_anti")
-                .select("id", F.lit(k).cast("int").alias("dist"))
-                .localCheckpoint(eager=True))
+        new = pin(e.join(frontier.select(F.col("id").alias("a")), "a")
+                   .select(F.col("b").alias("id")).distinct()
+                   .join(settled, "id", "left_anti")
+                   .select("id", F.lit(k).cast("int").alias("dist")))
         # settled = union of per-round checkpointed frontiers: its
         # lineage is already flat, no extra checkpoint job needed
         settled = settled.unionByName(new)

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.dedup import gram_set
+from ..session import pin
 from . import shared_sql
 from .registry import query
 
@@ -335,11 +336,10 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count_if instead of two corpus aggregations; a bucket with no
     # 'en' tokens yields tc = 0, exactly what the old left join's
     # COALESCE produced)
-    feats = words.select(
+    feats = pin(words.select(
         "doc_id", "lang",
         ((F.ascii(F.substring(F.col("wd"), 1, 1)) * 31
-          + F.length(F.col("wd"))) % 64).alias("b")) \
-        .localCheckpoint(eager=False)
+          + F.length(F.col("wd"))) % 64).alias("b")), eager=False)
     stats = feats.groupBy("b").agg(
         F.count(F.lit(1)).cast("bigint").alias("rc"),
         F.count_if(F.col("lang") == "en").cast("bigint").alias("tc"))
@@ -475,18 +475,16 @@ def neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import blocked_copair_count
 
     li = load(spark, sf_dir, "lineitem")
-    e = (li.select(F.col("l_suppkey").alias("s"),
-                   F.col("l_partkey").alias("p"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    e = pin(li.select(F.col("l_suppkey").alias("s"),
+                      F.col("l_partkey").alias("p"))
+              .distinct(), eager=False)
     deg = e.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     # truncate before the symmetrizing union: co feeds both branches,
     # and the part-key self-join + shuffled groupBy (the expensive
     # stage) must not re-run per branch
-    co = (blocked_copair_count(e, key="p", member="s",
-                               out_1="s1", out_2="s2", out_n="shared")
-          .filter(F.col("shared") >= 2)
-          .localCheckpoint(eager=False))
+    co = pin(blocked_copair_count(e, key="p", member="s",
+                                  out_1="s1", out_2="s2", out_n="shared")
+             .filter(F.col("shared") >= 2), eager=False)
     sym = (co.select(F.col("s1").alias("src"), F.col("s2").alias("dst"),
                      "shared")
              .unionAll(co.select(F.col("s2").alias("src"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import grouped_row_number
+from ..session import pin
 from .registry import query
 
 
@@ -363,13 +364,12 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     TAU = 3
     NP = TAU + 1
     p = load(spark, sf_dir, "part")
-    names = (p.select("p_name").distinct()
-              .select(F.col("p_name").alias("_n"),
-                      F.length("p_name").alias("_l"))
-              # r14 census pin: vocabulary-sized, consumed by pieces,
-              # probes AND the identity arm of dmap under different
-              # projections (3 part scans in the before-plan)
-              .localCheckpoint(eager=False))
+    # r14 census pin: vocabulary-sized, consumed by pieces, probes AND
+    # the identity arm of dmap under different projections (3 part
+    # scans in the before-plan)
+    names = pin(p.select("p_name").distinct()
+                 .select(F.col("p_name").alias("_n"),
+                         F.length("p_name").alias("_l")), eager=False)
 
     # even partition: piece i of an l-char string starts (1-based) at
     # 1 + i*(l div NP) + min(i, l mod NP), length (l div NP) + [i < l mod NP]
@@ -421,9 +421,8 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 census pin: verified is result-sized, but its subtree (the
     # PassJoin piece/probe explode join + banded DP) is the whole
     # matching cost and the dmap union consumes it TWICE
-    verified = (cand.select("_na", "_nb", d.alias("_d"))
-                .filter(F.col("_d") >= 0)
-                .localCheckpoint(eager=False))
+    verified = pin(cand.select("_na", "_nb", d.alias("_d"))
+                   .filter(F.col("_d") >= 0), eager=False)
     # directed map: both orientations plus exact-name self pairs
     dmap = (verified
             .union(verified.select(F.col("_nb"), F.col("_na"), "_d"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ..session import pin
 from . import shared_sql
 from .registry import query
 
@@ -78,23 +79,19 @@ def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair graph is orders of magnitude smaller than the
     corpus (near-dup candidates only); each round is one
     (edges join labels) shuffle + a min-aggregate, lineage-truncated
-    per round like operators/graph.py. At 100 TB swap
-    localCheckpoint for reliable checkpoint (cluster durability),
-    exactly as pagerank does behind its flag.
+    per round like operators/graph.py; durability follows session.pin.
     """
     docs = load(spark, sf_dir, "documents")
     # truncate the pair pipeline's lineage BEFORE the symmetrizing
     # union: pairs feeds both union branches, and without this the
     # gram self-join + jaccard filter (the dominant cost) would run
     # twice when the eager edge checkpoint materializes
-    pairs = (D.ngram_jaccard_pairs(docs, min_jaccard=0.05)
-              .select("id_1", "id_2")
-              .localCheckpoint(eager=False))
-    edges = (pairs.select(F.col("id_1").alias("a"),
-                          F.col("id_2").alias("b"))
-             .unionByName(pairs.select(F.col("id_2").alias("a"),
-                                       F.col("id_1").alias("b")))
-             .localCheckpoint(eager=True))
+    pairs = pin(D.ngram_jaccard_pairs(docs, min_jaccard=0.05)
+                 .select("id_1", "id_2"), eager=False)
+    edges = pin(pairs.select(F.col("id_1").alias("a"),
+                             F.col("id_2").alias("b"))
+                .unionByName(pairs.select(F.col("id_2").alias("a"),
+                                          F.col("id_1").alias("b"))))
     lbl = (edges.select(F.col("a").alias("id")).distinct()
            .select("id", F.col("id").alias("lbl")))
     for _ in range(_COMP_HOPS):
@@ -102,12 +99,11 @@ def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         F.col("lbl").alias("_nl")), "a")
                   .groupBy(F.col("b").alias("id"))
                   .agg(F.min("_nl").alias("_m")))
-        lbl = (lbl.join(nb_min, "id", "left")
-               .select("id", F.least(F.col("lbl"),
-                                     F.coalesce(F.col("_m"),
-                                                F.col("lbl")))
-                        .alias("lbl"))
-               .localCheckpoint(eager=True))
+        lbl = pin(lbl.join(nb_min, "id", "left")
+                  .select("id", F.least(F.col("lbl"),
+                                        F.coalesce(F.col("_m"),
+                                                   F.col("lbl")))
+                           .alias("lbl")))
     return lbl.select(F.col("id").cast("bigint").alias("doc_id"),
                       F.col("lbl").cast("bigint").alias("component"))
 
@@ -148,10 +144,9 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in both engines.
     """
     e = load(spark, sf_dir, "events")
-    uh = (e.select(F.date_trunc("hour", F.col("ts")).alias("h"),
-                   "user_id")
-           .distinct()
-           .localCheckpoint(eager=False))
+    uh = pin(e.select(F.date_trunc("hour", F.col("ts")).alias("h"),
+                      "user_id")
+              .distinct(), eager=False)
     hours = uh.select("h").distinct()
     expanded = (uh.withColumn("k", F.explode(F.sequence(F.lit(0),
                                                         F.lit(23))))
@@ -242,7 +237,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round, one (ranks ⋈ deg ⋈ edges) shuffle keyed by the
     source node and one integer sum keyed by the target — the same
     volume profile as operators/graph.pagerank; lineage is truncated
-    per round (reliable checkpoint on a real cluster). N arrives as
+    per round (``session.pin``). N arrives as
     a broadcast 1-row aggregate, never a driver action.
     """
     # pre-distinct (order, supplier) BEFORE the self-join — same
@@ -264,11 +259,10 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # damping round then needs a single join against ranks instead of
     # rank ⋈ deg ⋈ edges (12 joins saved across the loop; identical
     # arithmetic, the oracle is unchanged)
-    edges_w = (edges.join(deg, "a")
-                    .select(F.col("a").alias("_ea"),
-                            F.col("b").alias("_eb"), "d")
-                    .localCheckpoint(eager=True))
-    nodes = deg.select(F.col("a").alias("id")).localCheckpoint(eager=True)
+    edges_w = pin(edges.join(deg, "a")
+                       .select(F.col("a").alias("_ea"),
+                               F.col("b").alias("_eb"), "d"))
+    nodes = pin(deg.select(F.col("a").alias("id")))
     nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     # r13 (guide §2.4): the vertex count rides the rank frame as a
     # constant column instead of a per-round crossJoin(broadcast(nn))
@@ -292,14 +286,13 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "_n"))
         s = c.groupBy("id").agg(F.sum("c").cast("bigint").alias("s"),
                                 F.max("_n").alias("_n"))
-        r = (s.select("id",
-                      (F.floor((F.lit(1 - _PR_DAMP) / F.col("_n")
-                                + F.lit(_PR_DAMP)
-                                * (F.col("s") / F.lit(1e12)))
-                               * F.lit(1e12) + F.lit(0.5))
-                       / F.lit(1e12)).alias("r"),
-                      "_n")
-              .localCheckpoint(eager=True))
+        r = pin(s.select("id",
+                         (F.floor((F.lit(1 - _PR_DAMP) / F.col("_n")
+                                   + F.lit(_PR_DAMP)
+                                   * (F.col("s") / F.lit(1e12)))
+                                  * F.lit(1e12) + F.lit(0.5))
+                          / F.lit(1e12)).alias("r"),
+                         "_n"))
     return r.select(F.col("id").cast("bigint").alias("id"),
                     F.col("r").alias("pr"))
 
@@ -366,9 +359,8 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: classic iterative relaxation — each round joins the
     current distance frame to the weighted edge list and takes the
-    elementwise min. Lineage truncated per round (localCheckpoint
-    locally; reliable checkpoint on a cluster — operators/graph.py
-    discussion applies). Unreachable-within-{rounds} nodes carry the
+    elementwise min. Lineage truncated per round (``session.pin``).
+    Unreachable-within-{rounds} nodes carry the
     INF sentinel internally and are filtered at the end on BOTH
     engines.
 
@@ -386,13 +378,12 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("l_orderkey") % 4 == 0)
           .distinct())
     x, y = li.alias("x"), li.alias("y")
-    wedges = (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                     & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-               .groupBy(F.col("x.l_suppkey").alias("a"),
-                        F.col("y.l_suppkey").alias("b"))
-               .agg(F.countDistinct("x.l_orderkey").cast("bigint")
-                     .alias("w"))
-               .localCheckpoint(eager=True))
+    wedges = pin(x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+                        & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
+                  .groupBy(F.col("x.l_suppkey").alias("a"),
+                           F.col("y.l_suppkey").alias("b"))
+                  .agg(F.countDistinct("x.l_orderkey").cast("bigint")
+                        .alias("w")))
     src = li.agg(F.min("l_suppkey").cast("bigint").alias("s")) \
             .collect()[0]["s"]
     d = (wedges.select(F.col("a").alias("id")).distinct()
@@ -406,13 +397,12 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                             (F.col("d") + F.col("w")).alias("_cand"))
                     .groupBy("id")
                     .agg(F.min("_cand").alias("_best")))
-        d = (d.join(relaxed, "id", "left")
-              .select("id",
-                      F.least("d", F.coalesce("_best",
-                                              F.lit(_BF_INF)
-                                              .cast("bigint")))
-                       .alias("d"))
-              .localCheckpoint(eager=True))
+        d = pin(d.join(relaxed, "id", "left")
+                 .select("id",
+                         F.least("d", F.coalesce("_best",
+                                                 F.lit(_BF_INF)
+                                                 .cast("bigint")))
+                          .alias("d")))
     return (d.filter(F.col("d") < _BF_INF)
              .select("id", F.col("d").alias("dist")))
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _P = 1_000_000_007      # Karp-Rabin modulus (matches operators/text)
@@ -195,9 +196,8 @@ def minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two sides AND both verify attaches (4 plan copies of the
     # tokenize+shingle pass before the pin; multi-consumer recompute,
     # BENCH_r12_note pattern)
-    sh = (_with_shingles(load(spark, sf_dir, "documents"))
-          .select("doc_id", "_sh")
-          .localCheckpoint(eager=False))
+    sh = pin(_with_shingles(load(spark, sf_dir, "documents"))
+             .select("doc_id", "_sh"), eager=False)
     def _perm_min(a: int, b: int):
         # one-arg lambda via closure: PySpark maps the Python arity
         # onto the HOF arity, so default-arg tricks break analysis
@@ -217,11 +217,10 @@ def minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the banded keys too: the self-join's two sides otherwise
     # re-run the 16-permutation minima per side (4 rows per doc —
     # metadata-sized)
-    banded = (sh.withColumn("_mh", mh)
-                .select("doc_id",
-                        F.posexplode(F.array(*bkeys))
-                         .alias("band", "bkey"))
-                .localCheckpoint(eager=False))
+    banded = pin(sh.withColumn("_mh", mh)
+                   .select("doc_id",
+                           F.posexplode(F.array(*bkeys))
+                            .alias("band", "bkey")), eager=False)
     cand = (banded.alias("a")
             .join(banded.alias("b"), ["band", "bkey"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -620,9 +619,8 @@ def hyperplane_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_col = term if sig_col is None else sig_col + term
     n2 = F.expr("aggregate(transform(qv, x -> x * x),"
                 " cast(0 as bigint), (a, b) -> a + b)")
-    sigs = (base.select("vec_id", "qv", sig_col.alias("sig"),
-                        n2.alias("n2"))
-                .localCheckpoint(eager=True))
+    sigs = pin(base.select("vec_id", "qv", sig_col.alias("sig"),
+                           n2.alias("n2")))
     bands = sigs.select(
         "vec_id",
         F.posexplode(F.array(*[

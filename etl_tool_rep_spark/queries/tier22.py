@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _DIM = 64           # embedding dimensionality (FIXTURES.md)
@@ -122,8 +123,7 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer centroid matrix per round — index metadata, same posture
     as operators/kmeans.py."""
     em = load(spark, sf_dir, "embeddings")
-    vecs = (em.select("vec_id", F.expr(_QV_SPARK).alias("qv"))
-              .localCheckpoint(eager=True))
+    vecs = pin(em.select("vec_id", F.expr(_QV_SPARK).alias("qv")))
     init = (vecs.filter(F.col("vec_id") < _KM_K)
                 .orderBy("vec_id").collect())
     cents = {int(r["vec_id"]): [int(x) for x in r["qv"]]
@@ -257,7 +257,7 @@ def mmr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     query inside applyInPandas groups). The per-round argmax ships
     ONE row to the driver to gate the next round, the same
     bounded-decision pattern as `bpe_merge_train`; rel/div frames
-    are candidate-pool-sized and localCheckpointed once."""
+    are candidate-pool-sized and pinned once."""
     em = load(spark, sf_dir, "embeddings")
     vecs = (em.filter(F.col("vec_id") <= _MMR_NCAND)
               .select("vec_id", F.expr(_QV_SPARK).alias("qv")))
@@ -271,18 +271,16 @@ def mmr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
     cand = vecs.filter(F.col("vec_id") >= 1)
-    rel = (cand.select("vec_id", _dot(q0_lit).alias("rel"))
-               .localCheckpoint(eager=True))
+    rel = pin(cand.select("vec_id", _dot(q0_lit).alias("rel")))
     a, b = cand.alias("a"), cand.alias("b")
-    div = (a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("j"),
-                    F.col("b.vec_id").alias("k"),
-                    F.aggregate(
-                        F.zip_with("a.qv", "b.qv",
-                                   lambda x, y: x * y),
-                        F.lit(0).cast("bigint"),
-                        lambda acc, v: acc + v).alias("d"))
-            .localCheckpoint(eager=True))
+    div = pin(a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
+               .select(F.col("a.vec_id").alias("j"),
+                       F.col("b.vec_id").alias("k"),
+                       F.aggregate(
+                           F.zip_with("a.qv", "b.qv",
+                                      lambda x, y: x * y),
+                           F.lit(0).cast("bigint"),
+                           lambda acc, v: acc + v).alias("d")))
 
     sel: list[int] = []
     picks: list[tuple[int, int, int]] = []

@@ -38,12 +38,6 @@ def _wh_sql(cs: str, i: str) -> str:
             f" j -> {cs}[j])), (acc, c) -> (acc * {_B} + c) % {_P})")
 
 
-def _wh_spark(cs: str, i: str) -> str:
-    return (f"aggregate(transform(sequence({i} - {_W} + 1, {i}),"
-            f" j -> element_at({cs}, j)), cast(0 as bigint),"
-            f" (acc, c) -> pmod(acc * {_B} + c, {_P}))")
-
-
 def _cdc_chunks_arrow(batches):
     """Vectorized CDC kernel (one numpy pass per document): emits
     (doc_id, fp, ln) chunk rows. Exact integer arithmetic mod 1e9+7,

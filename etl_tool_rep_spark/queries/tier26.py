@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 
@@ -118,14 +119,13 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four branches consume it (sz/freq/pref/sets), and leaving the
     # reuse to AQE's stage cache is scheduling-order-dependent —
     # concurrent sibling stages each recompute the explode+distinct
-    sh = words.select(
+    sh = pin(words.select(
         "doc_id",
         F.explode(F.expr(
             "CASE WHEN size(ws) >= 3 THEN "
             " transform(sequence(1, size(ws) - 2), "
             "  i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1])) "
-            "ELSE array() END")).alias("t")).distinct() \
-        .localCheckpoint(eager=False)
+            "ELSE array() END")).alias("t")).distinct(), eager=False)
     sz = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"))
     freq = sh.groupBy("t").agg(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 
@@ -557,10 +558,9 @@ def blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once (the oracle's `truth AS MATERIALIZED` twin):
     # n_true and n_hit both consume it, and each reference would
     # otherwise re-run the whole prefix-filter pipeline
-    truth = (prefix_filter_jaccard(spark, sf_dir)
-             .select(F.col("a_id").alias("a"),
-                     F.col("b_id").alias("b"))
-             .localCheckpoint(eager=False))
+    truth = pin(prefix_filter_jaccard(spark, sf_dir)
+                .select(F.col("a_id").alias("a"),
+                        F.col("b_id").alias("b")), eager=False)
     docs = load(spark, sf_dir, "documents")
     d = docs.select("doc_id", "lang", "n_chars")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 # quantized natural log of a positive BIGINT, on a 1e-6 grid —
@@ -476,14 +477,13 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: pin the token frame and the census — toks feeds the
     # census and the scoring join, freq feeds the corpus scalars and
     # the same join; unpinned, the tokenize ran 3x (r13-open plan)
-    toks = docs.select(
+    toks = pin(docs.select(
         "doc_id",
         F.explode(F.expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
-        .alias("w")).localCheckpoint(eager=False)
-    freq = (toks.groupBy("w").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False))
+        .alias("w")), eager=False)
+    freq = pin(toks.groupBy("w").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")), eager=False)
     corpus = freq.agg(F.sum("cnt").cast("bigint").alias("t"),
                       F.count(F.lit(1)).cast("bigint").alias("v"))
     scored = (toks.join(freq, "w")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _KCORE_K = 3
@@ -115,7 +116,7 @@ def kcore_decomposition(spark: SparkSession,
     is a semi-join of the edge list against the surviving node set
     followed by a map-side-combinable degree count. Rounds are a
     fixed constant; on a cluster each round's frontier shrinks
-    monotonically, and `localCheckpoint` truncates the plan exactly
+    monotonically, and `pin` truncates the plan exactly
     like the other iterative operators in `operators/graph.py`.
     """
     # pre-distinct (order, supplier) BEFORE the self-join: a supplier
@@ -127,12 +128,11 @@ def kcore_decomposition(spark: SparkSession,
     li = (load(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_suppkey").distinct())
     x, y = li.alias("x"), li.alias("y")
-    edges = (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                    & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-             .select(F.col("x.l_suppkey").alias("a"),
-                     F.col("y.l_suppkey").alias("b"))
-             .distinct()
-             .localCheckpoint())
+    edges = pin(x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+                       & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
+                .select(F.col("x.l_suppkey").alias("a"),
+                        F.col("y.l_suppkey").alias("b"))
+                .distinct())
     deg0 = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree0"))
     # r13 DELTA PEEL — the same restructure the DuckDB oracle got in
@@ -150,20 +150,19 @@ def kcore_decomposition(spark: SparkSession,
     cur = deg0.select("node", F.col("degree0").alias("deg"))
     drops = []
     for r in range(1, _KCORE_ROUNDS + 1):
-        dropped = (cur.filter(F.col("deg") < _KCORE_K)
-                   .select("node").localCheckpoint())
+        dropped = pin(cur.filter(F.col("deg") < _KCORE_K)
+                      .select("node"))
         drops.append(dropped.withColumn(
             "peel_round", F.lit(r).cast("bigint")))
         dec = (edges.join(dropped.withColumnRenamed("node", "b"), "b")
                .groupBy(F.col("a").alias("node"))
                .agg(F.count(F.lit(1)).cast("bigint").alias("_dec")))
-        cur = (cur.filter(F.col("deg") >= _KCORE_K)
-               .join(dec, "node", "left")
-               .select("node",
-                       (F.col("deg")
-                        - F.coalesce(F.col("_dec"), F.lit(0)))
-                       .alias("deg"))
-               .localCheckpoint())
+        cur = pin(cur.filter(F.col("deg") >= _KCORE_K)
+                  .join(dec, "node", "left")
+                  .select("node",
+                          (F.col("deg")
+                           - F.coalesce(F.col("_dec"), F.lit(0)))
+                          .alias("deg")))
     peeled = drops[0]
     for d in drops[1:]:
         peeled = peeled.unionByName(d)
@@ -350,20 +349,18 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("s")))
     wr = Window.partitionBy("prio").orderBy(F.asc("s"), F.asc("prio"))
     ranked = scores.withColumn("rk", F.row_number().over(wr))
-    qhat = (ranked.groupBy("prio")
-            .agg(F.max("mu_cents").alias("mu_cents"),
-                 F.max("n_cal").alias("n_cal"),
-                 F.max(F.when(
-                     F.col("rk") == F.least(
-                         F.expr("CAST((9 * (n_cal + 1) + 9) DIV 10"
-                                " AS BIGINT)"),
-                         F.col("n_cal")),
-                     F.col("s"))).alias("q_cents"))
-            # r14 census pin: |prio| rows, but the subtree (calibration
-            # join + per-group rank window) was re-planned by BOTH the
-            # test aggregate and the final attach join — 5 orders
-            # scans in the before-plan
-            .localCheckpoint(eager=False))
+    # r14 census pin: |prio| rows, but the subtree (calibration join +
+    # per-group rank window) was re-planned by BOTH the test aggregate
+    # and the final attach join — 5 orders scans in the before-plan
+    qhat = pin(ranked.groupBy("prio")
+               .agg(F.max("mu_cents").alias("mu_cents"),
+                    F.max("n_cal").alias("n_cal"),
+                    F.max(F.when(
+                        F.col("rk") == F.least(
+                            F.expr("CAST((9 * (n_cal + 1) + 9) DIV 10"
+                                   " AS BIGINT)"),
+                            F.col("n_cal")),
+                        F.col("s"))).alias("q_cents")), eager=False)
     test = (base.filter(~F.col("is_cal"))
             .join(F.broadcast(qhat), "prio")
             .groupBy("prio")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number, grouped_prefix_sum
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -210,15 +211,14 @@ def decision_stump_train(spark: SparkSession,
                                 lead="cents", out="rk")
               .crossJoin(F.broadcast(stats.select("n"))))
     ks = spark.range(1, 10).select(F.col("id").alias("k"))
-    cand = (ranked.join(
+    # r14 census pin: cand is <= 9 rows but its subtree is the whole
+    # bucketed two-phase rank (global_row_number's internal frame is
+    # planned twice: offsets + join) — pinning here cuts the
+    # before-plan's 6 orders scans to 3
+    cand = pin(ranked.join(
         F.broadcast(ks),
         F.col("rk") == F.expr("(k * n) DIV 10"))
-        .select(F.col("cents").alias("thr")).distinct()
-        # r14 census pin: cand is <= 9 rows but its subtree is the
-        # whole bucketed two-phase rank (global_row_number's internal
-        # frame is planned twice: offsets + join) — pinning here cuts
-        # the before-plan's 6 orders scans to 3
-        .localCheckpoint(eager=False))
+        .select(F.col("cents").alias("thr")).distinct(), eager=False)
     split = (F.broadcast(cand.crossJoin(stats))
              .join(lab, F.lit(True))
              .groupBy("thr", "pos", "n")
@@ -333,11 +333,11 @@ def naive_bayes_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab and the scoring fan), each of which otherwise re-plans
     # and re-runs the tokenize+explode (5 documents scans in the
     # r13-open plan)
-    toks = docs.select(
+    toks = pin(docs.select(
         "doc_id", "lang",
         F.explode(F.expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
-        .alias("w")).localCheckpoint(eager=False)
+        .alias("w")), eager=False)
     cls = toks.groupBy(F.col("lang").alias("c")).agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
     prior = cls.withColumn(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _PCA_ROUNDS = 6
@@ -138,29 +139,26 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # space; a 1024-salt attempt blew the map-side hash to 4M groups
     # and regressed.
     salt = F.pmod(F.xxhash64(F.col("a.vec_id")), F.lit(_GRAM_SALTS))
-    gram = (a.join(b, F.col("a.vec_id") == F.col("b.vec_id"))
-            .groupBy(F.col("a.i").alias("i"),
-                     F.col("b.i").alias("j"), salt.alias("_salt"))
-            .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("pg"))
-            .groupBy("i", "j")
-            .agg(F.sum(F.col("pg").cast("decimal(38,0)")).alias("g"))
-            .localCheckpoint())
+    gram = pin(a.join(b, F.col("a.vec_id") == F.col("b.vec_id"))
+               .groupBy(F.col("a.i").alias("i"),
+                        F.col("b.i").alias("j"), salt.alias("_salt"))
+               .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("pg"))
+               .groupBy("i", "j")
+               .agg(F.sum(F.col("pg").cast("decimal(38,0)")).alias("g")))
     v = gram.select("i").distinct().select(
         F.col("i").alias("j"),
         F.lit(1000000).cast("bigint").alias("vq"))
     for _ in range(_PCA_ROUNDS):
         # pin u: it feeds both the max and the rescale; d-sized
         # frame, and the recompute would re-run the gram join
-        u = (gram.join(F.broadcast(v), "j")
-             .groupBy("i")
-             .agg(F.sum(F.col("g") * F.col("vq")).alias("u"))
-             .localCheckpoint(eager=False))
+        u = pin(gram.join(F.broadcast(v), "j")
+                .groupBy("i")
+                .agg(F.sum(F.col("g") * F.col("vq")).alias("u")), eager=False)
         mx = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        v = (u.crossJoin(F.broadcast(mx))
-             .select(F.col("i").alias("j"),
-                     F.expr("CAST(u * 1000000 DIV m AS BIGINT)")
-                     .alias("vq"))
-             .localCheckpoint())
+        v = pin(u.crossJoin(F.broadcast(mx))
+                .select(F.col("i").alias("j"),
+                        F.expr("CAST(u * 1000000 DIV m AS BIGINT)")
+                        .alias("vq")))
     num = (gram
            .join(F.broadcast(v.select(F.col("j").alias("i"),
                                       F.col("vq").alias("va"))), "i")
@@ -238,12 +236,12 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable sum — two shuffles per round over the distinct edge
     list, score vectors are node-sized. The edge build is one
     DISTINCT over a 2-column projection. At 100 TB: identical plan,
-    localCheckpoint -> reliable checkpoint, AQE handles hub skew.
+    AQE handles hub skew; pin durability follows session.pin.
     """
     li = load(spark, sf_dir, "lineitem")
-    edges = (li.select(F.col("l_suppkey").alias("s"),
-                       F.col("l_partkey").alias("p"))
-             .distinct().localCheckpoint())
+    edges = pin(li.select(F.col("l_suppkey").alias("s"),
+                          F.col("l_partkey").alias("p"))
+                .distinct())
     h = edges.select("s").distinct().withColumn(
         "hq", F.lit(1000000).cast("bigint"))
     for _ in range(_HITS_ROUNDS):
@@ -260,10 +258,9 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.sum(F.col("aq").cast("decimal(38,0)"))
                    .alias("t")))
         hmx = hr.agg(F.max("t").alias("m"))
-        h = (hr.crossJoin(F.broadcast(hmx))
-             .select("s", F.expr("CAST(t * 1000000 DIV m AS BIGINT)")
-                     .alias("hq"))
-             .localCheckpoint())
+        h = pin(hr.crossJoin(F.broadcast(hmx))
+                .select("s", F.expr("CAST(t * 1000000 DIV m AS BIGINT)")
+                        .alias("hq")))
     deg = edges.groupBy("s").agg(
         F.count(F.lit(1)).cast("bigint").alias("out_degree"))
     return (h.join(deg, "s")
@@ -337,13 +334,13 @@ def perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     od = load(spark, sf_dir, "orders")
     epoch = F.lit("1970-01-01").cast("date")
-    feats = od.select(
+    feats = pin(od.select(
         F.expr("CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)"
                " DIV 100000").alias("x1"),
         (F.datediff(F.col("o_orderdate").cast("date"), epoch) % 7)
         .cast("bigint").alias("x2"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(-1)
-        .cast("bigint").alias("y")).localCheckpoint()
+        .cast("bigint").alias("y")))
     # range(1)-rooted weights: createDataFrame would plant an opaque
     # LogicalRDD at the root of every epoch's weight frame; Range(1)
     # gives the explain-audit propagator a STRUCTURAL 1-row bound that

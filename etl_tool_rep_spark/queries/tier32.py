@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -119,9 +120,8 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(FLOOR(CAST(FLOOR(CAST(embedding[1] AS DOUBLE)"
                f" * 1000000.0 + 0.5) AS DOUBLE)"
                f" / {_CELL}) AS BIGINT)").alias("gy"))
-    cells = (pts.groupBy("gx", "gy")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-             .localCheckpoint())
+    cells = pin(pts.groupBy("gx", "gy")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
     offs = spark.createDataFrame(
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx long, dy long")
@@ -133,28 +133,25 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (F.col("ngy") == F.col("gy") + F.col("dy")))
             .groupBy("gx", "gy", "cnt")
             .agg(F.sum("ncnt").cast("bigint").alias("nbr_cnt")))
-    core = (dens.filter(F.col("nbr_cnt") >= _MINPTS)
-            .withColumn("key", (F.col("gx") + 50000) * 100000
-                        + (F.col("gy") + 50000))
-            .localCheckpoint())
+    core = pin(dens.filter(F.col("nbr_cnt") >= _MINPTS)
+               .withColumn("key", (F.col("gx") + 50000) * 100000
+                           + (F.col("gy") + 50000)))
     cb = core.select(F.col("gx").alias("bgx"),
                      F.col("gy").alias("bgy"),
                      F.col("key").alias("bkey"))
-    adj = (core.crossJoin(F.broadcast(offs))
-           .join(cb, (F.col("bgx") == F.col("gx") + F.col("dx"))
-                 & (F.col("bgy") == F.col("gy") + F.col("dy")))
-           .select(F.col("key").alias("akey"), "bkey")
-           .localCheckpoint())
+    adj = pin(core.crossJoin(F.broadcast(offs))
+              .join(cb, (F.col("bgx") == F.col("gx") + F.col("dx"))
+                    & (F.col("bgy") == F.col("gy") + F.col("dy")))
+              .select(F.col("key").alias("akey"), "bkey"))
     lab = core.select("key", F.col("key").alias("lab"))
     for _ in range(_DBSCAN_ROUNDS):
         nl = lab.select(F.col("key").alias("bkey"),
                         F.col("lab").alias("nlab"))
-        lab = (lab.join(adj, lab.key == adj.akey)
-               .join(nl, "bkey")
-               .groupBy("key", "lab")
-               .agg(F.min("nlab").alias("mn"))
-               .select("key", F.least("lab", "mn").alias("lab"))
-               .localCheckpoint())
+        lab = pin(lab.join(adj, lab.key == adj.akey)
+                  .join(nl, "bkey")
+                  .groupBy("key", "lab")
+                  .agg(F.min("nlab").alias("mn"))
+                  .select("key", F.least("lab", "mn").alias("lab")))
     return (core.join(lab, "key")
             .select("gx", "gy", "cnt", "nbr_cnt",
                     F.col("lab").cast("bigint").alias("cluster")))
@@ -406,26 +403,25 @@ def stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum(F.when(F.col("cents") <= F.col("thr"),
                                F.col("y")).otherwise(0))
                   .cast("bigint").alias("posl")))
-    gain = (split.filter("nl > 0 AND nl < n")
-            .withColumn("gain_q", F.expr(
-                "CAST(FLOOR(("
-                " (CAST(2 AS DOUBLE) * pos * (n - pos))"
-                "   / (CAST(n AS DOUBLE) * n)"
-                " - CAST(nl AS DOUBLE) / n"
-                "   * ((CAST(2 AS DOUBLE) * posl * (nl - posl))"
-                "      / (CAST(nl AS DOUBLE) * nl))"
-                " - CAST(n - nl AS DOUBLE) / n"
-                "   * ((CAST(2 AS DOUBLE) * (pos - posl)"
-                "       * ((n - nl) - (pos - posl)))"
-                "      / (CAST(n - nl AS DOUBLE) * (n - nl)))"
-                ") * 1000000000.0 + 0.5) AS BIGINT)"))
-            # r14 census pin: gain is <= |folds| x |candidates| (~45)
-            # rows, but its subtree (5x fold fan-out + per-fold window
-            # + candidate/stats joins) is the whole training cost and
-            # was re-planned by THREE consumers (mx, best, rule) — 10
-            # orders scans in the before-plan. Different projections
-            # per consumer => the r13 pin heuristic applies.
-            .localCheckpoint(eager=False))
+    # r14 census pin: gain is <= |folds| x |candidates| (~45) rows, but
+    # its subtree (5x fold fan-out + per-fold window + candidate/stats
+    # joins) is the whole training cost and was re-planned by THREE
+    # consumers (mx, best, rule) — 10 orders scans in the before-plan.
+    # Different projections per consumer => the r13 pin heuristic
+    # applies.
+    gain = pin(split.filter("nl > 0 AND nl < n")
+               .withColumn("gain_q", F.expr(
+                   "CAST(FLOOR(("
+                   " (CAST(2 AS DOUBLE) * pos * (n - pos))"
+                   "   / (CAST(n AS DOUBLE) * n)"
+                   " - CAST(nl AS DOUBLE) / n"
+                   "   * ((CAST(2 AS DOUBLE) * posl * (nl - posl))"
+                   "      / (CAST(nl AS DOUBLE) * nl))"
+                   " - CAST(n - nl AS DOUBLE) / n"
+                   "   * ((CAST(2 AS DOUBLE) * (pos - posl)"
+                   "       * ((n - nl) - (pos - posl)))"
+                   "      / (CAST(n - nl AS DOUBLE) * (n - nl)))"
+                   ") * 1000000000.0 + 0.5) AS BIGINT)")), eager=False)
     mx = (gain.groupBy("f").agg(F.max("gain_q").alias("gmax"))
           .withColumnRenamed("f", "mf"))
     best = (gain.join(mx, (F.col("f") == F.col("mf"))

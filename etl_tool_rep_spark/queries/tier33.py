@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number, grouped_row_number
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -110,11 +111,11 @@ def maximal_independent_set(spark: SparkSession,
     li = (load(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_suppkey").distinct())
     x, y = li.alias("x"), li.alias("y")
-    edges = (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                    & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-             .select(F.col("x.l_suppkey").alias("a"),
-                     F.col("y.l_suppkey").alias("b"))
-             .distinct().localCheckpoint())
+    edges = pin(x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+                       & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
+                .select(F.col("x.l_suppkey").alias("a"),
+                        F.col("y.l_suppkey").alias("b"))
+                .distinct())
     nodes = edges.select(F.col("a").alias("node")).distinct()
     und = nodes.withColumn(
         "pri", F.expr("(node * 2654435761) % 2147483648"
@@ -127,17 +128,16 @@ def maximal_independent_set(spark: SparkSession,
                                 F.col("pri").alias("npri")), "b")
                .groupBy("a").agg(F.min("npri").alias("minp"))
                .withColumnRenamed("a", "node"))
-        mis = (und.join(nbr, "node", "left")
-               .filter(F.col("minp").isNull()
-                       | (F.col("pri") < F.col("minp")))
-               .select("node").localCheckpoint())
+        mis = pin(und.join(nbr, "node", "left")
+                  .filter(F.col("minp").isNull()
+                          | (F.col("pri") < F.col("minp")))
+                  .select("node"))
         mis_parts.append(mis.withColumn(
             "mis_round", F.lit(r).cast("bigint")))
         rem = (edges.join(mis.withColumnRenamed("node", "a"), "a")
                .select(F.col("b").alias("node")).distinct())
-        und = (und.join(mis, "node", "left_anti")
-               .join(rem, "node", "left_anti")
-               .localCheckpoint())
+        und = pin(und.join(mis, "node", "left_anti")
+                  .join(rem, "node", "left_anti"))
     mis_all = mis_parts[0]
     for p in mis_parts[1:]:
         mis_all = mis_all.unionAll(p)
@@ -208,7 +208,7 @@ def quantile_normalization(spark: SparkSession,
         .cast("bigint").alias("cents"))
     # r13 pin: vals feeds the group census, both rank engines and the
     # scalar attach — four re-scans of orders unpinned
-    vals = vals.localCheckpoint(eager=False)
+    vals = pin(vals, eager=False)
     ngs = vals.groupBy("prio").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng"))
     grp = (grouped_row_number(vals, ["prio"],
@@ -298,9 +298,8 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: pin the bigram census — c1/cont/tt and the final join all
     # consume bc, re-running the tokenize+bigram explode per branch
     # (4 documents scans in the r13-open plan) without the pin
-    bc = (big.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False))
+    bc = pin(big.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")), eager=False)
     c1 = bc.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("ctot"),
         F.count(F.lit(1)).cast("bigint").alias("ntypes"))
@@ -379,15 +378,14 @@ def topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-list x inverted-index sized, never corpus x corpus.
     """
     docs = load(spark, sf_dir, "documents")
-    toks = (docs.select(
+    # r13 pin: toks feeds the df census and BOTH sides of the
+    # co-occurrence join — tokenize+distinct ran 3x unpinned
+    toks = pin(docs.select(
         "doc_id", "lang",
         F.explode(F.expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
         .alias("w"))
-        .distinct()
-        # r13 pin: toks feeds the df census and BOTH sides of the
-        # co-occurrence join — tokenize+distinct ran 3x unpinned
-        .localCheckpoint(eager=False))
+        .distinct(), eager=False)
     freq = toks.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("df"))
     top = freq.withColumn("rk", F.row_number().over(

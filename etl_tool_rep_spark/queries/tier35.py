@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -244,19 +245,18 @@ def changepoint_detect(spark: SparkSession,
                               Window.currentRow)).cast("bigint"))
            .withColumn("st", F.sum("cents").over(wp)
                        .cast("bigint")))
-    gains = (seq.filter(F.col("i") < F.col("n"))
-             .select("prio", "d", "i", "n", "ps", "st",
-                     F.expr("CAST(FLOOR(("
-                            " CAST(ps AS DOUBLE) * ps / i"
-                            " + CAST(st - ps AS DOUBLE) * (st - ps)"
-                            "   / (n - i)"
-                            " - CAST(st AS DOUBLE) * st / n"
-                            ") / 10000.0 + 0.5) AS BIGINT)")
-                     .alias("gain_q"))
-             # r14 census pin: |prio| x |days| rows, but the daily
-             # census + three windows above were re-planned by THREE
-             # consumers (mx, best, detail) — the stump_cv pattern
-             .localCheckpoint(eager=False))
+    # r14 census pin: |prio| x |days| rows, but the daily census +
+    # three windows above were re-planned by THREE consumers (mx,
+    # best, detail) — the stump_cv pattern
+    gains = pin(seq.filter(F.col("i") < F.col("n"))
+                .select("prio", "d", "i", "n", "ps", "st",
+                        F.expr("CAST(FLOOR(("
+                               " CAST(ps AS DOUBLE) * ps / i"
+                               " + CAST(st - ps AS DOUBLE) * (st - ps)"
+                               "   / (n - i)"
+                               " - CAST(st AS DOUBLE) * st / n"
+                               ") / 10000.0 + 0.5) AS BIGINT)")
+                        .alias("gain_q")), eager=False)
     mx = (gains.groupBy("prio").agg(F.max("gain_q").alias("gmax"))
           .withColumnRenamed("prio", "mprio"))
     best = (gains.join(F.broadcast(mx),

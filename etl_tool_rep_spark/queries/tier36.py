@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number, grouped_prefix_sum
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -121,10 +122,9 @@ def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 pin: d2 feeds anchors, candidates and the positives union
     # (15 documents scans in the r13-open plan, all of this 3-column
     # projection)
-    d2 = docs.select(
+    d2 = pin(docs.select(
         "doc_id", "lang",
-        F.expr("(doc_id * 2654435761) % 2147483648").alias("h")) \
-        .localCheckpoint(eager=False)
+        F.expr("(doc_id * 2654435761) % 2147483648").alias("h")), eager=False)
     anchors = (d2.filter(F.col("doc_id") % 50 == 0)
                .select(F.col("doc_id").alias("anchor_id"),
                        "lang", "h"))

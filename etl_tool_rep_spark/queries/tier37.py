@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -111,12 +112,11 @@ def markov_stationary_exact(spark: SparkSession,
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(F.col("event_type").alias("src"),
                     F.lead("event_type").over(w).alias("dst"))
-    tm = (seq.filter(F.col("dst").isNotNull())
-          .groupBy("src", "dst")
-          .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-          .withColumn("rt", F.sum("c").over(
-              Window.partitionBy("src")).cast("bigint"))
-          .localCheckpoint())
+    tm = pin(seq.filter(F.col("dst").isNotNull())
+             .groupBy("src", "dst")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+             .withColumn("rt", F.sum("c").over(
+                 Window.partitionBy("src")).cast("bigint")))
     states = tm.select(F.col("src").alias("state")).distinct()
     nst = states.agg(F.count(F.lit(1)).alias("ns"))
     pi = (states.crossJoin(F.broadcast(nst))
@@ -129,11 +129,10 @@ def markov_stationary_exact(spark: SparkSession,
              .agg(F.sum(F.expr("mass * c DIV rt")).cast("bigint")
                   .alias("raw")))
         tot = m.agg(F.sum("raw").alias("t"))
-        pi = (m.crossJoin(F.broadcast(tot))
-              .select(F.col("dst").alias("state"),
-                      F.expr("CAST(raw * 1000000 DIV t AS BIGINT)")
-                      .alias("mass"))
-              .localCheckpoint())
+        pi = pin(m.crossJoin(F.broadcast(tot))
+                 .select(F.col("dst").alias("state"),
+                         F.expr("CAST(raw * 1000000 DIV t AS BIGINT)")
+                         .alias("mass")))
     hrate = (pi.join(tm, pi.state == tm.src)
              .agg(F.sum(F.expr(
                  f"mass * c * ({_LNQ.format(v='rt')}"

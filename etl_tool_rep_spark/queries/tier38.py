@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 # integer cents from the events value column (shared with tier2)
@@ -472,8 +473,7 @@ def cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 census pin: the distinct (user, type) frame feeds the size
     # census AND both self-join sides (4 events scans + 3 distinct
     # recomputes in the before-plan)
-    e = (ev.select("user_id", "event_type").distinct()
-         .localCheckpoint(eager=False))
+    e = pin(ev.select("user_id", "event_type").distinct(), eager=False)
     sz = (e.groupBy("event_type")
           .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     a = e.alias("a")
@@ -626,12 +626,11 @@ def triple_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. Here the class universe (50) makes the cap a no-op; see
     SCALE.md for the measured basket-size distribution."""
     li = load(spark, sf_dir, "lineitem")
-    baskets = (li.select(F.col("l_orderkey").alias("o"),
-                         (F.col("l_partkey") % 50).alias("i"))
-               .groupBy("o").agg(F.collect_set("i").alias("_s0"))
-               .filter(F.size("_s0") <= _TB_CAP)
-               .select(F.array_sort("_s0").alias("_s"))
-               .localCheckpoint(eager=False))
+    baskets = pin(li.select(F.col("l_orderkey").alias("o"),
+                            (F.col("l_partkey") % 50).alias("i"))
+                  .groupBy("o").agg(F.collect_set("i").alias("_s0"))
+                  .filter(F.size("_s0") <= _TB_CAP)
+                  .select(F.array_sort("_s0").alias("_s")), eager=False)
     triples_expr = F.expr("""
         flatten(transform(_s, x ->
           flatten(transform(filter(_s, y -> y > x), y ->

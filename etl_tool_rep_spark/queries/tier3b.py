@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 CHUNK, STRIDE = 120, 80
@@ -108,9 +109,9 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one row per (doc, token), so count(*) per token equals the old
     # countDistinct over raw tokens, without a distinct pass or a
     # second tokenize (toks previously fed both censuses)
-    tf = (toks.groupBy("doc_id", "token")
-              .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-              .localCheckpoint(eager=False))
+    tf = pin(toks.groupBy("doc_id", "token")
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("tf")),
+             eager=False)
     df = (tf.groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("df")))
     # in-plan scalar (broadcast 1-row crossJoin), not a .count() job
@@ -178,12 +179,11 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, rows with tf = 0 dropped exactly like the missing
     # groups), and dl rides along so the old dlen join disappears.
     # The doc-sized frame is pinned for its three consumers.
-    per_doc = (toks.groupBy("doc_id")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("dl"),
-                    *[F.count_if(F.col("token") == t).cast("bigint")
-                      .alias(f"_tf_{i}")
-                      for i, t in enumerate(QUERY_TERMS)])
-               .localCheckpoint(eager=False))
+    per_doc = pin(toks.groupBy("doc_id")
+                  .agg(F.count(F.lit(1)).cast("bigint").alias("dl"),
+                       *[F.count_if(F.col("token") == t).cast("bigint")
+                         .alias(f"_tf_{i}")
+                         for i, t in enumerate(QUERY_TERMS)]), eager=False)
     # corpus stats stay in-plan: a 1-row (n_docs, avgdl) aggregate is
     # broadcast-crossJoined instead of collect()ed (mirrors the
     # oracle's CROSS JOIN stats)

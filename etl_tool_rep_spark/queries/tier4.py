@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from .registry import query
 
 _BITS = 10
@@ -129,8 +130,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     them while they fit (local fixtures) and falls back to shuffle
     joins at cluster scale. Edge construction is a per-order pair
     expansion on the orderkey shuffle (baskets <= 7 suppliers),
-    localCheckpointed once for the three consuming branches (prefer
-    persist/reliable checkpoint on a multi-executor cluster).
+    pinned once for the three consuming branches.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # per-order pair expansion (one shuffle on orderkey, map-side
@@ -145,7 +145,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.collect_set("l_suppkey").alias("_s"))
                .select(F.explode(pairs_expr).alias("_p"))
                .select("_p.a", "_p.b").distinct())
-    edges = edges.localCheckpoint(eager=True)
+    edges = pin(edges)
 
     adj = edges.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
     # interval bitset: row = (lo word, words[lo..hi]) covering only
@@ -177,7 +177,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"a": out_a, "_lo": out_lo, "_w": out_w})
 
     sigs = adj.mapInPandas(sig_batches, "a long, _lo int, _w array<long>")
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = pin(sigs)
     sa = sigs.select("a", F.col("_lo").alias("_la"),
                      F.col("_w").alias("_wa"))
     sb = sigs.select(F.col("a").alias("b"), F.col("_lo").alias("_lb"),
@@ -265,11 +265,10 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # r13: pin — words feeds the census and the scoring join, freq
     # the corpus scalar and the same join (tokenize ran 3x unpinned)
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("wd")) \
-        .localCheckpoint(eager=False)
-    freq = (words.groupBy("wd").agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=False))
+    words = pin(docs.select(
+        "doc_id", F.explode(F.split("text", r"\s+")).alias("wd")), eager=False)
+    freq = pin(words.groupBy("wd").agg(F.count(F.lit(1)).alias("cnt")),
+               eager=False)
     tot = freq.agg(F.sum("cnt").alias("total"))
     neglog = F.round(
         -F.log(F.col("cnt").cast("double") / F.col("total")), 6) \

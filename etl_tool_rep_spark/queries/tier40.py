@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number
+from ..session import pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -112,7 +113,7 @@ def incremental_minhash_dedup(spark: SparkSession,
     per-source frame is dimension-sized (<= |sources| rows), the
     only driver materialization."""
     docs = load(spark, sf_dir, "documents")
-    sh = _with_shingles(docs).localCheckpoint(eager=True)
+    sh = pin(_with_shingles(docs))
 
     def _perm_min(a: int, b: int):
         return F.array_min(F.transform(

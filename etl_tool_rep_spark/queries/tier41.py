@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -196,7 +197,7 @@ def incremental_dedup_retire(spark: SparkSession,
     the standing corpus; the final frame is <= |sources| rows (the
     only driver materialization, plus two bounded scalars)."""
     docs = load(spark, sf_dir, "documents")
-    sh = _with_shingles(docs).localCheckpoint(eager=True)
+    sh = pin(_with_shingles(docs))
 
     def _perm_min(a: int, b: int):
         return F.array_min(F.transform(

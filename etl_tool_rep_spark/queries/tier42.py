@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
+from ..session import pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 
@@ -245,8 +246,7 @@ def _dup_positions(spark: SparkSession,
     # race (the r12 bimodality signature, BENCH_r12_note.md) — pin
     # it once, mirroring the oracle's materialized `g` CTE, exactly
     # the tier26/tier27 fix pattern.
-    gv = (g.join(coll.hint("shuffle_hash"), "_h", "left_semi")
-          .localCheckpoint(eager=False))
+    gv = pin(g.join(coll.hint("shuffle_hash"), "_h", "left_semi"), eager=False)
     gc = (gv.groupBy("_h", "gram")
           .agg(F.count(F.lit(1)).alias("gcnt"))
           .filter(F.col("gcnt") >= 2).select("_h", "gram"))

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
+from ..session import pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -313,7 +314,7 @@ def minhash_estimate_census(spark: SparkSession,
     equi-join back to signatures + shingle sets, all map-side
     arithmetic; output is <= 11 buckets."""
     docs = load(spark, sf_dir, "documents")
-    sh = _with_shingles(docs).localCheckpoint(eager=True)
+    sh = pin(_with_shingles(docs))
 
     def _perm_min(a: int, b: int):
         return F.array_min(F.transform(

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _shuffle_width_default() -> int:
@@ -95,3 +95,28 @@ def get_spark(app_name: str = "etl_tool_rep_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage — the one place the
+    engine chooses between Spark's two checkpoint kinds.
+
+    Durability follows the SparkContext: when it has a checkpoint
+    directory (``spark.checkpoint.dir`` at startup, or
+    ``setCheckpointDir``) the pin is a reliable ``checkpoint()`` whose
+    blocks survive executor loss; otherwise it is a
+    ``localCheckpoint()`` that keeps blocks on the executors only —
+    fine for local mode, fatal to the lineage on a cluster that loses
+    one. Results are the same either way.
+
+    When to pin (measured over the r14 repeated-scan census): pin TINY
+    frames that sit over EXPENSIVE subtrees and feed several
+    consumers; never pin a full-data frame — materializing the whole
+    table to save one re-plan lost every A/B (0.76-0.95x).
+
+    ``eager=False`` defers the write to the frame's first action. A
+    lazy reliable checkpoint then computes its input twice: once for
+    that action and once more to write the checkpoint files."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

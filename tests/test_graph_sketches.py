@@ -1,12 +1,22 @@
 """PageRank vs numpy power iteration; heavy-hitter exactness on
 skewed synthetic data."""
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
+from etl_tool_rep_spark.operators.cluster import connected_components
 from etl_tool_rep_spark.operators.graph import pagerank
 from etl_tool_rep_spark.operators.sketches import heavy_hitters
+
+_WORKER = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "durable_pin_worker.py")
 
 
 def _co_supplier_edges(spark, sf_dir):
@@ -75,17 +85,32 @@ def test_heavy_hitters_exact_on_skew(spark):
     assert got["key_0"] == 1000 and got["key_1"] == 500
 
 
-def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
-    """checkpoint_dir switches to cluster-durable checkpoint();
-    results must be identical to the localCheckpoint path."""
+def test_pagerank_reliable_checkpoint_matches_local(spark, sf_dir,
+                                                   tmp_path):
+    """With spark.checkpoint.dir set, every session.pin is a reliable
+    checkpoint: pagerank and connected_components return what the
+    local-pin path returns, and a registry query (kmeans_exact) still
+    passes its oracle while writing checkpoint files. The durable side
+    runs in its own driver process, because a SparkContext's checkpoint
+    directory cannot be unset and would leak into every later test."""
+    assert spark.sparkContext.getCheckpointDir() is None
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (2, 1), (4, 1)], ["src", "dst"])
-    local = {r["id"]: r["rank"]
+    local = {str(r["id"]): r["rank"]
              for r in pagerank(edges, max_iterations=20).collect()}
-    durable = {r["id"]: r["rank"]
-               for r in pagerank(
-                   edges, max_iterations=20,
-                   checkpoint_dir=str(tmp_path / "ckpt")).collect()}
-    assert local == durable
-    import os
-    assert os.listdir(tmp_path / "ckpt")  # checkpoints actually wrote
+    local_cc = sorted([r["id"], r["cluster_id"]]
+                      for r in connected_components(edges, "src", "dst")
+                      .collect())
+
+    ckpt, out = tmp_path / "ckpt", tmp_path / "out.json"
+    proc = subprocess.run(
+        [sys.executable, _WORKER, str(ckpt), sf_dir, str(out)],
+        capture_output=True, text=True, timeout=600,
+        cwd=os.path.dirname(os.path.dirname(_WORKER)))
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    durable = json.loads(out.read_text())
+
+    assert durable["ranks"] == pytest.approx(local, abs=1e-12)
+    assert durable["components"] == local_cc
+    assert durable["kmeans_ok"]
+    assert durable["kmeans_new_files"] > 0

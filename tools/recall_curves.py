@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_tool_rep_spark.session import get_spark  # noqa: E402
+from etl_tool_rep_spark.session import get_spark, pin  # noqa: E402
 
 K = 10
 N_QUERIES = 32
@@ -52,7 +52,7 @@ def ivf_curve(spark, em, truth, queries, nlist_mod: int) -> list[dict]:
                        F.col("embedding").alias("centroid_vec")))
     nlist = cents.count()
     assigned = ivf_assign(em, cents, "vec_id", "embedding")
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
     out = []
     for nprobe in (1, 2, 4, 8, 16):
         t0 = time.perf_counter()
