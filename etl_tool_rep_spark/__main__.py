@@ -36,7 +36,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="drop failing rules instead of aborting "
                          "(reference per-rule isolation)")
     ap.add_argument("--single-file", action="store_true",
-                    help="coalesce csv output to one file")
+                    help="write csv output as one file (parts are "
+                         "written in parallel, then concatenated)")
     args = ap.parse_args(argv)
 
     from .engine import ETLEngine

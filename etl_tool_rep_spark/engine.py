@@ -16,12 +16,20 @@ A user of the reference tool maps 1:1 onto this API:
 
 Unlike the reference (eager pandas in session RAM, main.py:190), the
 inventory is lazy DataFrames — nothing materializes until run/export.
+The one eager step of a load, CSV schema inference (two Spark jobs per
+file), runs in a background thread: ``add_file`` and
+``add_mapping_file`` return at once and the loads of several uploads
+overlap. The first call that needs a table (``primary``, ``columns``,
+``run``, ``data_inventory``, ``mapping_dfs``) waits for its load and
+raises its load error, if any.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline import compile_pipeline, parse_pipeline
@@ -29,35 +37,58 @@ from .pipeline.spec import Rule, export_pipeline
 from .sinks import write_csv
 from .sources import smart_load
 
+# Shared by every engine. A load carries the caller's job group, local
+# properties and job tags, so its jobs are attributed to the caller.
+_LOADS = ThreadPoolExecutor(thread_name_prefix="etl-load")
+
+
+def _done(df: DataFrame) -> Future:
+    f: Future = Future()
+    f.set_result(df)
+    return f
+
 
 class ETLEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.data_inventory: dict[str, DataFrame] = {}
-        self.mapping_dfs: dict[str, DataFrame] = {}
+        self._inventory: dict[str, Future] = {}
+        self._mappings: dict[str, Future] = {}
         self.rules: list[Rule] = []
         self._primary: str | None = None
 
     # -- inventory (reference main.py:240-305) --------------------------
+    def _load(self, path: str) -> Future:
+        return _LOADS.submit(
+            inheritable_thread_target(self.spark)(smart_load),
+            self.spark, path)
+
     def add_file(self, path: str, name: str | None = None) -> str:
         name = name or os.path.splitext(os.path.basename(path))[0]
-        self.data_inventory[name] = smart_load(self.spark, path)
+        self._inventory[name] = self._load(path)
         return name
 
     def add_mapping_file(self, path: str, name: str | None = None) -> str:
         """Mapping tables are keyed by file stem (main.py:286-288)."""
         name = name or os.path.splitext(os.path.basename(path))[0]
-        self.mapping_dfs[name] = smart_load(self.spark, path)
+        self._mappings[name] = self._load(path)
         return name
 
     def add_dataframe(self, name: str, df: DataFrame,
                       mapping: bool = False) -> None:
-        (self.mapping_dfs if mapping else self.data_inventory)[name] = df
+        (self._mappings if mapping else self._inventory)[name] = _done(df)
+
+    @property
+    def data_inventory(self) -> dict[str, DataFrame]:
+        return {k: f.result() for k, f in self._inventory.items()}
+
+    @property
+    def mapping_dfs(self) -> dict[str, DataFrame]:
+        return {k: f.result() for k, f in self._mappings.items()}
 
     def set_primary(self, name: str) -> None:
-        if name not in self.data_inventory:
+        if name not in self._inventory:
             raise KeyError(f"{name!r} not in data inventory "
-                           f"({sorted(self.data_inventory)})")
+                           f"({sorted(self._inventory)})")
         self._primary = name
 
     def columns(self) -> list[str]:
@@ -67,7 +98,7 @@ class ETLEngine:
     def primary(self) -> DataFrame:
         if self._primary is None:
             raise RuntimeError("no primary table selected")
-        return self.data_inventory[self._primary]
+        return self._inventory[self._primary].result()
 
     # -- pipeline (reference main.py:327-412) ---------------------------
     def import_pipeline_json(self, spec) -> None:

@@ -12,12 +12,12 @@ Reproduces the semantics of the reference's ``apply_rules_engine``
 * Lookup (main.py:159-171) is a string-coerced (both sides
   ``astype(str)``, main.py:168-169), last-duplicate-wins
   (``dict(zip(...))``, main.py:168), miss->NULL broadcast equi-join.
-  Faithful Spark plan: dedup the mapping with a row_number window over
-  a load-order column (descending -> last wins), cast both keys to
-  string, left join with an explicit ``F.broadcast`` hint. Mapping
-  tables are small dimension tables by construction, so the broadcast
-  never shuffles the fact table — at 100 TB the probe side streams
-  map-side only.
+  Faithful Spark plan: dedup the mapping, read as one partition, with a
+  row_number window over a load-order column (descending -> last wins;
+  no shuffle), cast both keys to string, left join with an explicit
+  ``F.broadcast`` hint. Mapping tables are small dimension tables by
+  construction, so the broadcast never shuffles the fact table — at
+  100 TB the probe side streams map-side only.
 * Conditional (main.py:148-157) is ``CASE WHEN <expr> THEN lit
   ELSE lit END``; NULL-valued conditions fall to ELSE in both pandas
   eval and SQL (SURVEY.md §2.1 pt 6) — no special handling.
@@ -60,8 +60,13 @@ def dedup_last_wins(mapping: DataFrame, key_col: str,
                     val_col: str) -> DataFrame:
     """Keep the LAST row per string-coerced key — the reference's
     ``dict(zip(keys, vals))`` semantics (main.py:168). Plain
-    ``dropDuplicates`` keeps an arbitrary row; this is deterministic."""
-    m = with_load_order(mapping)
+    ``dropDuplicates`` keeps an arbitrary row; this is deterministic.
+
+    The mapping is read as one partition (``coalesce(1)`` keeps split
+    order), which already satisfies the window's distribution: no
+    shuffle. A Lookup broadcasts the result, so the mapping is bounded
+    by the broadcast size and collected whole either way."""
+    m = with_load_order(mapping.coalesce(1))
     key_str = F.col(key_col).cast("string").alias("_lk_key")
     w = Window.partitionBy("_lk_key").orderBy(F.col(_ORDER_COL).desc())
     return (m.select(key_str, F.col(val_col).alias("_lk_val"),

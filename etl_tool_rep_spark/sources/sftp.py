@@ -131,10 +131,12 @@ def sftp_load(df: DataFrame, host: str, port: int, username: str,
     outputs only; large results belong on object storage."""
     import glob
     import shutil
+
+    from ..sinks import write_csv
     staging = tempfile.mkdtemp(prefix="sftp_out_")
     try:
         out_dir = os.path.join(staging, "csv")
-        df.coalesce(1).write.option("header", True).csv(out_dir)
+        write_csv(df, out_dir, single_file=True)
         part = glob.glob(os.path.join(out_dir, "part-*.csv"))[0]
         ssh = _client(host, port, username, password)
         try:

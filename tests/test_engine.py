@@ -2,8 +2,10 @@
 rules -> run -> export) through the ETLEngine facade."""
 
 import os
+import time
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from etl_tool_rep_spark.engine import ETLEngine
 from etl_tool_rep_spark.sources import smart_load
@@ -68,3 +70,39 @@ def test_engine_errors(spark, workdir):
         eng.run()
     with pytest.raises(KeyError):
         eng.set_primary("nope")
+
+
+def test_missing_file_fails_at_first_use(spark, workdir):
+    """Loads run in the background: add_file returns, and the first
+    call that needs the table raises the load's own error."""
+    eng = ETLEngine(spark)
+    eng.set_primary(eng.add_file(str(workdir / "nope.csv")))
+    eng.add_mapping_file(str(workdir / "customer_mapping.csv"))
+    eng.import_pipeline_json(PIPELINE_JSON)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        eng.run()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        eng.data_inventory
+    assert list(eng.mapping_dfs) == ["customer_mapping"]
+
+
+def test_loads_run_in_caller_job_group(spark, workdir):
+    sc = spark.sparkContext
+    sc.setJobGroup("engine-loads", "engine loads")
+    try:
+        eng = ETLEngine(spark)
+        eng.set_primary(eng.add_file(str(workdir / "orders_main.csv")))
+        eng.add_mapping_file(str(workdir / "customer_mapping.csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert eng.columns() == ["row_id", "cust_id", "amount", "status"]
+    assert list(eng.mapping_dfs) == ["customer_mapping"]
+    status = sc.statusTracker()
+    deadline = time.time() + 10
+    # two schema-inference jobs per CSV; the listener bus updates the
+    # tracker asynchronously
+    while len(status.getJobIdsForGroup("engine-loads")) < 4 \
+            and time.time() < deadline:
+        time.sleep(0.1)
+    assert len(status.getJobIdsForGroup("engine-loads")) == 4

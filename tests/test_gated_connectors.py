@@ -9,6 +9,7 @@ clean NotImplementedError when the gate is closed.
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import types
 
@@ -95,6 +96,33 @@ def test_sftp_load_round_trip(spark, tmp_path, fake_paramiko):
     assert list(back["v"]) == ["x", "y"]
     # staging dir is cleaned up after the put
     assert any(op == "put" for op, *_ in _FakeSSH.calls if op == "put")
+
+
+def test_sftp_load_puts_the_single_file_export(spark, tmp_path,
+                                               monkeypatch):
+    """The pushed file is byte-identical to a coalesced one-file CSV
+    write of the same frame, here from four partitions."""
+    rows = [(i, f"v,{i}") for i in range(100)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+                               "id long, v string")
+    ref = tmp_path / "ref"
+    df.coalesce(1).write.option("header", True).csv(str(ref))
+    (want,) = [p.read_bytes() for p in ref.glob("part-*")]
+    put = []
+
+    class Client:
+        def open_sftp(self):
+            return types.SimpleNamespace(
+                put=lambda local, remote: put.append(
+                    (pathlib.Path(local).read_bytes(), remote)),
+                close=lambda: None)
+
+        def close(self):
+            pass
+
+    monkeypatch.setattr(sftp, "_client", lambda *a: Client())
+    sftp.sftp_load(df, "host", 22, "user", "pw", "/remote/out.csv")
+    assert put == [(want, "/remote/out.csv")]
 
 
 def test_sftp_gated_without_paramiko(spark):

@@ -73,6 +73,35 @@ def test_cli_help_without_repo_cwd(tmp_path):
     assert "--pipeline" in p.stdout
 
 
+def test_python_workers_import_package_from_foreign_cwd(tmp_path,
+                                                         sf_dir):
+    """The driver has the package on sys.path only: no PYTHONPATH and
+    a cwd outside the repo. Python workers must still import it; they
+    run bootstrap_ci's kernel, which is checked against its oracle."""
+    code = (
+        "import sys\n"
+        f"sys.path[:0] = [{REPO!r}, {os.path.join(REPO, 'tools')!r}]\n"
+        "from check_oracle import duck_connection, normalize_rows\n"
+        "from etl_tool_rep_spark.queries import ORACLES, QUERIES\n"
+        "from etl_tool_rep_spark.session import get_spark\n"
+        "spark = get_spark('foreign_cwd', extra_conf={\n"
+        "    'spark.driver.memory': '1g',\n"
+        "    'spark.sql.shuffle.partitions': '4'})\n"
+        f"df = QUERIES['bootstrap_ci'](spark, {sf_dir!r})\n"
+        "got = normalize_rows(df.columns, [tuple(r) for r in df.collect()])\n"
+        f"con = duck_connection({sf_dir!r})\n"
+        "rel = con.sql(ORACLES['bootstrap_ci'])\n"
+        "want = normalize_rows(rel.columns, rel.fetchall())\n"
+        "print('MATCH' if got == want and got[1] else 'DIFF')\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    p = subprocess.run([sys.executable, "-c", code], cwd=str(tmp_path),
+                       env=env, capture_output=True, text=True,
+                       timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert p.stdout.strip().splitlines()[-1] == "MATCH"
+
+
 def test_sdist_build_packages_the_source(tmp_path):
     pytest.importorskip("setuptools")
     p = subprocess.run(

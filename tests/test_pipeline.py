@@ -214,3 +214,33 @@ def test_in_list_rule_runs(main_df):
     ])
     by_rid = {r["rid"]: r["st"] for r in rows}
     assert by_rid[1] == "Y" and by_rid[3] == "N" and by_rid[5] == "N"
+
+
+def test_lookup_last_wins_across_splits_without_shuffle(main_df, spark,
+                                                        tmp_path):
+    """A mapping CSV read as several splits, with each key repeated in
+    every split: the row that comes last in the file wins, and the
+    dedup runs on one partition, so the plan has no hash exchange."""
+    path = tmp_path / "m.csv"
+    lines = ["id,name"] + [f"{i % 4},v{i:04d}" for i in range(400)]
+    path.write_text("\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")  # splits are planned when the job runs
+    try:
+        mapping = spark.read.option("header", True) \
+            .option("inferSchema", True).csv(str(path))
+        assert mapping.rdd.getNumPartitions() >= 2
+        out = compile_pipeline(main_df, parse_pipeline([
+            {"name": "rid", "type": "Direct Map", "source": "row_id"},
+            {"name": "nm", "type": "Lookup", "map_name": "m",
+             "in_col": "cust_id", "key_col": "id", "val_col": "name"},
+        ]), {"m": mapping})
+        by_rid = {r["rid"]: r["nm"] for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert by_rid == {1: "v0397", 2: "v0398", 3: "v0399", 4: None,
+                      5: None}
+    assert "BroadcastExchange" in plan
+    assert "Exchange hashpartitioning" not in plan

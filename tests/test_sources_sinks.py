@@ -2,12 +2,18 @@
 ways must load identically through smart_load; writers round-trip."""
 
 import os
+import pathlib
+import re
+import time
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_tool_rep_spark.catalog import load
 from etl_tool_rep_spark.sinks import write_csv, write_partitioned
+from etl_tool_rep_spark.sinks import writers
 from etl_tool_rep_spark.sources import (read_excel, read_sniffed,
                                         smart_load)
 from etl_tool_rep_spark.sources.sftp import sftp_extract
@@ -77,6 +83,124 @@ def test_write_csv_single_file_roundtrip(spark, slice_df, tmp_path):
     assert len(parts) == 1
     back = smart_load(spark, os.path.join(out, parts[0]))
     assert _rows(back) == _rows(slice_df)
+
+
+# Column names that a naive line split would get wrong: a comma, a
+# quote, a line break and non-ASCII text (Spark quotes the first three).
+_TRICKY = ["a,b", 'say "hi"', "two\nlines", "café ü"]
+
+
+@pytest.fixture(scope="module")
+def tricky_df(spark):
+    rows = [(i, f"x,{i}", f"l\n{i}" if i % 7 == 0 else str(i),
+             "é" * (i % 3)) for i in range(200)]
+    schema = T.StructType([T.StructField(n, T.LongType() if n == "a,b"
+                                         else T.StringType())
+                           for n in _TRICKY])
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+                               schema)
+    assert df.columns == _TRICKY and df.rdd.getNumPartitions() == 4
+    return df
+
+
+def _parts(d) -> list[bytes]:
+    """The data files of a CSV output directory, in content order (part
+    names carry a per-write UUID)."""
+    return sorted(p.read_bytes() for p in pathlib.Path(d).glob("part-*"))
+
+
+def _layout(d) -> list[str]:
+    """File names with the per-write UUID masked (_SUCCESS, .crc too)."""
+    return sorted(re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}",
+                         "UUID", f) for f in os.listdir(d))
+
+
+def _coalesced(df, path, mode="overwrite"):
+    df.coalesce(1).write.mode(mode).option("header", True).csv(path)
+
+
+@pytest.mark.parametrize("frame", ["tricky", "empty"])
+def test_single_file_bytes_match_coalesce(spark, tricky_df, tmp_path,
+                                          frame):
+    df = tricky_df if frame == "tricky" else tricky_df.limit(0)
+    _coalesced(df, str(tmp_path / "ref"))
+    write_csv(df, str(tmp_path / "got"), single_file=True)
+    ref, got = _parts(tmp_path / "ref"), _parts(tmp_path / "got")
+    assert got == ref and len(got) == 1
+    if frame == "empty":
+        assert got[0].count(b"\n") == 2  # header only; one quoted \n
+    assert _layout(tmp_path / "got") == _layout(tmp_path / "ref")
+    assert sorted(os.listdir(tmp_path)) == ["got", "ref"]  # no temp dir
+
+
+@pytest.mark.parametrize("mode", ["overwrite", "append", "ignore",
+                                  "error"])
+def test_single_file_modes_match_coalesce(spark, tricky_df, tmp_path,
+                                          mode):
+    """Onto an existing output, each mode leaves the same files (and
+    raises the same error) as the coalesced write."""
+    new = tricky_df.filter(F.col("`a,b`") % 3 == 0)
+    results = {}
+    for side in ("ref", "got"):
+        out = str(tmp_path / side)
+        _coalesced(tricky_df, out)
+        try:
+            if side == "ref":
+                _coalesced(new, out, mode)
+            else:
+                write_csv(new, out, mode=mode, single_file=True)
+            results[side] = _parts(out)
+        except AnalysisException as exc:
+            results[side] = exc.getCondition()
+    assert results["got"] == results["ref"]
+    assert results["got"] != [] and sorted(os.listdir(tmp_path)) == [
+        "got", "ref"]
+
+
+def test_single_file_write_runs_in_parallel(spark, tricky_df, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("single-file-export", "single-file export")
+    try:
+        write_csv(tricky_df, str(tmp_path / "out"), single_file=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    status = sc.statusTracker()
+    deadline = time.time() + 10
+    while True:  # the listener bus updates the tracker asynchronously
+        stages = [s for j in status.getJobIdsForGroup("single-file-export")
+                  for s in status.getJobInfo(j).stageIds]
+        infos = [status.getStageInfo(s) for s in stages]
+        if (stages and all(infos)) or time.time() > deadline:
+            break
+        time.sleep(0.1)
+    assert max(i.numTasks for i in infos) > 1
+
+
+def test_single_file_failures_leave_output_and_no_temp(
+        spark, tricky_df, tmp_path, monkeypatch):
+    out = str(tmp_path / "out")
+    _coalesced(tricky_df, out)
+    before = _parts(out)
+    boom = spark.range(10).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+         .otherwise(F.col("id")).alias("id"))
+    with pytest.raises(Exception, match="boom"):
+        write_csv(boom, out, single_file=True)
+    # a later part whose header differs from the first part's must
+    # fail the merge, not be concatenated
+    monkeypatch.setattr(writers, "_read_header",
+                        lambda fs, part: b"not,the,header\n")
+    with pytest.raises(IOError, match="CSV header"):
+        write_csv(tricky_df, out, single_file=True)
+    assert _parts(out) == before
+    assert os.listdir(tmp_path) == ["out"]
+
+
+def test_header_end_is_quote_aware():
+    head = b'"a,b","q\\"x","new\nline",back\\,"bs\\\\\\"q"\n'
+    assert writers._header_end(head + b"1,2,3,4,5\n") == len(head)
+    assert writers._header_end(head[:-1]) is None
 
 
 def test_write_partitioned_prunes(spark, sf_dir, tmp_path):
