@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 # SQL-literal plan-size ceiling: codebooks/centroid sets inlined as
 # parsed SQL text must stay under ~1 MB; bigger constants ship as a
 # broadcast 1-row table instead (see ivf_assign and SCALE.md)
@@ -259,8 +261,8 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
         ccol = "_cents"
         while ccol in vectors.columns:
             ccol += "_"
-        cent_row = spark.createDataFrame(
-            [(units,)], T.StructType([T.StructField(
+        cent_row = local_frame(
+            spark, [(units,)], T.StructType([T.StructField(
                 ccol, T.ArrayType(T.ArrayType(T.DoubleType())))]))
         vectors = vectors.crossJoin(F.broadcast(cent_row))
         cent_lit = F.col(ccol)

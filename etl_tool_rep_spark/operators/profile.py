@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 _NUMERIC = (T.LongType, T.IntegerType, T.DoubleType, T.FloatType,
             T.DecimalType, T.ShortType)
 
@@ -87,6 +89,7 @@ def profile_table(df: DataFrame,
     out = [(c, row["_n"], row[f"_nulls_{c}"], dist[c],
             row[f"_min_{c}"], row[f"_max_{c}"], row[f"_mean_{c}"])
            for c in df.columns]
-    return df.sparkSession.createDataFrame(
-        out, "column string, n_rows long, n_nulls long, n_distinct long, "
-             "min_str string, max_str string, mean double")
+    return local_frame(
+        df.sparkSession, out,
+        "column string, n_rows long, n_nulls long, n_distinct long, "
+        "min_str string, max_str string, mean double")

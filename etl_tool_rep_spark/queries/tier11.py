@@ -317,7 +317,13 @@ def _poisson_partials(it):
             continue
         et = batch.column(0).to_numpy(zero_copy_only=False)
         eid = batch.column(1).to_numpy(zero_copy_only=False)
-        xl = batch.column(2).to_numpy(zero_copy_only=False)
+        xl = batch.column(2)
+        if xl.null_count:
+            # as the oracle's SUM(w*x)/SUM(w): a NULL value adds its
+            # weight to n but nothing to the weighted sum (to_numpy
+            # would turn it into NaN, then into int64 garbage)
+            xl = xl.fill_null(0)
+        xl = xl.to_numpy(zero_copy_only=False)
         r1 = ((eid % M).astype(np.int64)[:, None] * A
               + bs[None, :] * 12345) % M
         u = (r1 * A + 12345) % M % 1000000

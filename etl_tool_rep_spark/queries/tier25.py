@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import local_frame
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 
@@ -121,7 +122,7 @@ def lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # returning — same boundedness class as the profile/centroid
         # collects audited in tools/explain_audit.py
         rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -186,7 +187,7 @@ def lakehouse_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("files_shrank",
                            F.lit(bool(n_files_after < n_files_before))))
         rows = agg.collect()                 # 1 row, then cleanup
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -236,6 +237,6 @@ def lakehouse_read_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("files_skipped",
                            F.lit(bool(len(kept) < total))))
         rows = agg.collect()                 # 1 row, then cleanup
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)

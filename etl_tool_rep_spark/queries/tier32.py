@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -122,8 +122,8 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                f" / {_CELL}) AS BIGINT)").alias("gy"))
     cells = pin(pts.groupBy("gx", "gy")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
-    offs = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
+    offs = local_frame(
+        spark, [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx long, dy long")
     n = cells.select(F.col("gx").alias("ngx"),
                      F.col("gy").alias("ngy"),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import local_frame
 from .registry import query
 
 # exact synthetic coordinates in integer hundredths of a degree
@@ -191,8 +192,8 @@ def spatial_radius_join(spark: SparkSession,
         "k", "x", "y",
         "CAST(FLOOR(CAST(x AS DOUBLE) / 100) AS BIGINT) AS cx",
         "CAST(FLOOR(CAST(y AS DOUBLE) / 100) AS BIGINT) AS cy")
-    offs = spark.createDataFrame(
-        [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
+    offs = local_frame(
+        spark, [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx long, dy long")
     b = cells.selectExpr("k AS bk", "x AS bx", "y AS by_",
                          "cx AS bcx", "cy AS bcy")
@@ -254,7 +255,7 @@ def spatial_cell_rollup(spark: SparkSession,
         " AS cy",
         f"CAST((({_LON100}) + 18000) * 256 DIV 36000 AS BIGINT)"
         " AS cx")
-    lv = spark.createDataFrame([(0,), (2,), (4,)], "shift long")
+    lv = local_frame(spark, [(0,), (2,), (4,)], "shift long")
     return (pts.crossJoin(F.broadcast(lv))
             .groupBy(
                 F.expr("CAST(8 - shift AS BIGINT)").alias("zoom_bits"),

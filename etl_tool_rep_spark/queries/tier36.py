@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number, grouped_prefix_sum
-from ..session import pin
+from ..session import local_frame, pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -258,7 +258,7 @@ def tail_index_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = v.orderBy(F.desc("cents")).limit(401)
     ranked = top.withColumn(
         "rk", F.row_number().over(Window.orderBy(F.desc("cents"))))
-    ks = spark.createDataFrame([(100,), (200,), (400,)], "k long")
+    ks = local_frame(spark, [(100,), (200,), (400,)], "k long")
     kth = (F.broadcast(ks)
            .join(ranked, F.col("rk") == F.col("k") + 1)
            .select("k", F.col("cents").alias("x_k")))

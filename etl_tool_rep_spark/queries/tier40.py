@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number
-from ..session import pin
+from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -181,7 +181,7 @@ def incremental_minhash_dedup(spark: SparkSession,
         # bounded driver materialization (<= |sources| rows) so the
         # on-disk index can be cleaned up before returning
         rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -347,7 +347,7 @@ def lakehouse_zorder_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
                .withColumn("pruned",
                            F.lit(len(kept) * 2 < total)))
         rows = agg.collect()          # 1-row frame, bounded
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

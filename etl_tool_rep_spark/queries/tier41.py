@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -106,7 +106,7 @@ def lakehouse_zorder_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("max_day"))
                .withColumn("pruned", F.lit(len(kept) * 2 < total)))
         rows = agg.collect()          # 1-row frame, bounded
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -274,6 +274,6 @@ def incremental_dedup_retire(spark: SparkSession,
         # bounded driver materialization (<= |sources| rows) so the
         # on-disk index can be cleaned up before returning
         rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
+        return local_frame(spark, rows, agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)

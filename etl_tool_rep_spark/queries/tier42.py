@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 
@@ -421,7 +421,7 @@ def lakehouse_time_travel(spark: SparkSession,
         # bounded driver materialization (<= 2x|statuses| rows) so
         # the on-disk table can be cleaned up before returning
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -508,7 +508,7 @@ def lakehouse_schema_evolution(spark: SparkSession,
         # bounded driver materialization (<= |channels|+1 rows) so
         # the on-disk table can be cleaned up before returning
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
-from ..session import pin
+from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
@@ -252,7 +252,7 @@ def lakehouse_vacuum_retention(spark: SparkSession,
         # bounded driver materialization (<= |statuses| rows) so the
         # on-disk table can be cleaned up before returning
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

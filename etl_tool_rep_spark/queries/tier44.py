@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import local_frame
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier22 import (_DIM, _IVF_DIST, _IVF_K, _IVF_NPROBE, _PQ_D,
@@ -335,7 +336,7 @@ def incremental_ann_index(spark: SparkSession,
         # bounded driver materialization (top-{n} rows) so the
         # on-disk index can be cleaned up before returning
         rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
+        return local_frame(spark, rows, res.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -442,7 +443,7 @@ def incremental_ann_retire(spark: SparkSession,
         # bounded driver materialization (top-{n} rows) so the
         # on-disk index can be cleaned up before returning
         rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
+        return local_frame(spark, rows, res.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

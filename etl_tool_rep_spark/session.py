@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def _shuffle_width_default() -> int:
@@ -25,6 +26,27 @@ def _shuffle_width_default() -> int:
                    16)
     except ValueError:
         return 32
+
+
+_MEMINFO = "/proc/meminfo"
+
+
+def _driver_memory_default() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else about 60 % of the
+    host's RAM in whole GB (a fixed 16g asked a 15 GB host for more
+    than it has), else 16g when the host's size cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(_MEMINFO) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kb = int(line.split()[1])
+                    return f"{max(kb * 6 // (10 * 1024 ** 2), 1)}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
 
 
 # the directory that holds the etl_tool_rep_spark package
@@ -69,7 +91,7 @@ _DEFAULTS: dict[str, str] = {
     # of the repo working dir
     "spark.sql.warehouse.dir": os.environ.get(
         "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": _driver_memory_default(),
     # streaming state lives in RocksDB (native memory + local disk),
     # not on the JVM heap: the HDFS-backed in-memory provider held
     # the whole state map on-heap, which is what pushed the sf10
@@ -136,3 +158,37 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager)
     return df.localCheckpoint(eager)
+
+
+def local_frame(spark: SparkSession, rows,
+                schema: StructType | str) -> DataFrame:
+    """A driver-built frame (``rows`` of tuples, lists, dicts or
+    ``Row``s under ``schema``, a ``StructType`` or DDL string) as a
+    JVM local relation — the one way the engine hands small driver
+    tables back to Spark.
+
+    ``spark.createDataFrame(list, schema)`` plans as ``Scan
+    ExistingRDD`` over a pickled Python RDD, so every job that reads
+    it starts Python workers to unpickle the rows. Here the rows
+    become one ``pyarrow.Table`` typed by Spark's own Arrow mapping
+    of ``schema``, which plans as a ``LocalTableScan``: no Python
+    worker, no pickling. Measured on a 4-core host: a 512-row frame
+    plus a noop write 0.37-0.40 s -> 0.08-0.11 s; bfs_distances at
+    sf0.1 (its seed row sits in every round's union lineage) 7.21 ->
+    5.07 s median, mmr_exact 2.26 -> 1.86 s.
+
+    Values mean what they mean on the list path: each row goes
+    through ``schema.toInternal`` first (positional tuples, dicts by
+    name, naive datetimes in the process's local time zone), and the
+    schema, nullability included, is the one given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

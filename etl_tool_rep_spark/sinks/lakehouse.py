@@ -81,6 +81,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.merge import merge_upsert
+from ..session import local_frame
 
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
@@ -420,7 +421,7 @@ class LakeTable:
         if not paths:
             # a commit can legitimately empty the table (e.g. DELETE
             # all) — readers get a typed empty frame, not a read error
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def snapshot(self, version: int | None = None) -> DataFrame:
@@ -652,7 +653,8 @@ class LakeTable:
                 T.StructField("_lk_fid", T.IntegerType()),
                 T.StructField("_lk_min", dtype),
                 T.StructField("_lk_max", dtype)])
-            ranges = self.spark.createDataFrame(
+            ranges = local_frame(
+                self.spark,
                 [(i, r[0], r[1]) for i, (_, r) in enumerate(ranged)],
                 ranges_schema)
             hit_ids = {

@@ -5,6 +5,10 @@ means (and hence the CI percentiles) cannot drift."""
 
 from __future__ import annotations
 
+import os
+import sys
+
+import duckdb
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
@@ -73,3 +77,29 @@ def test_bootstrap_ci_output_matches_reference_form(spark, sf_dir):
                   F.round(F.percentile("m", F.lit(0.975)), 6)
                   .alias("ci_hi"))).collect()}
     assert got == want
+
+
+def test_bootstrap_ci_null_values_match_oracle(spark, sf_dir, tmp_path):
+    """A NULL ``value`` weighs in each replicate's SUM(w) but adds
+    nothing to SUM(w*x), as in the DuckDB oracle; before, the kernel
+    turned it into NaN and then into int64 garbage (CI ~ -4e10)."""
+    sys.path.insert(0, os.path.join(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from check_oracle import duck_connection, normalize_rows
+
+    from etl_tool_rep_spark.queries import ORACLES, QUERIES
+
+    src = os.path.join(sf_dir, "events.parquet")
+    out = os.path.join(str(tmp_path), "events.parquet")
+    duckdb.sql(
+        "COPY (SELECT * REPLACE (CASE WHEN event_id % 50 = 0 THEN NULL"
+        f" ELSE value END AS value) FROM read_parquet('{src}'))"
+        f" TO '{out}' (FORMAT PARQUET)")
+    con = duck_connection(str(tmp_path))
+    assert con.sql("SELECT count(*) - count(value) FROM events"
+                   ).fetchone()[0] > 0
+    df = QUERIES["bootstrap_ci"](spark, str(tmp_path))
+    got = normalize_rows(df.columns, [tuple(r) for r in df.collect()])
+    rel = con.sql(ORACLES["bootstrap_ci"])
+    want = normalize_rows(rel.columns, rel.fetchall())
+    assert got[1] and got == want

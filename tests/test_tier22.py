@@ -6,6 +6,7 @@ inputs small enough to verify by hand/model).
 """
 
 import math
+import time
 
 import pytest
 
@@ -65,6 +66,21 @@ def test_kmeans_matches_python_model(spark, monkeypatch):
             + [_pad(0.0, 0.5 + 0.001 * i) for i in range(4)]
             + [_pad(0.5, 0.002 * i) for i in range(6)]
             + [_pad(-0.3, 0.3, 0.1 * i) for i in range(4)])
+    _check_kmeans(spark, monkeypatch, vecs)
+
+
+def test_kmeans_empty_final_cluster_reports_zero(spark, monkeypatch):
+    # vecs 0 and 1 are equal and far from the rest: the distance tie
+    # goes to cid 0 in every round, so cluster 1 ends empty (n = 0)
+    far = _pad(-0.5, -0.5)
+    vecs = ([far, far]
+            + [_pad(0.1 * i, 0.3) for i in range(6)]
+            + [_pad(0.3, 0.05 * i) for i in range(6)])
+    sizes = _check_kmeans(spark, monkeypatch, vecs)
+    assert sizes[1] == 0
+
+
+def _check_kmeans(spark, monkeypatch, vecs):
     rows = list(enumerate(vecs))
     monkeypatch.setattr(t22, "load", lambda s, d, n: _emb(spark, rows))
     got = QUERIES["kmeans_exact"](spark, "x").collect()
@@ -75,6 +91,29 @@ def test_kmeans_matches_python_model(spark, monkeypatch):
             (r["cid"], r["dim"])
         assert r["n"] == sizes[r["cid"]]
     assert sum(sizes.values()) == len(vecs)
+    return sizes
+
+
+def test_kmeans_exact_pass_is_eight_jobs(spark, sf_dir):
+    """Scan, pin, init collect, 2 per Lloyd round, and the consumer's
+    write: sizes come from the last round's sums and the result is a
+    local relation, so nothing re-runs the final assignment."""
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-exact-jobs", "kmeans_exact jobs")
+    try:
+        (QUERIES["kmeans_exact"](spark, sf_dir)
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    status = sc.statusTracker()
+    deadline = time.time() + 10
+    # the listener bus updates the tracker asynchronously
+    while len(status.getJobIdsForGroup("kmeans-exact-jobs")) < 8 \
+            and time.time() < deadline:
+        time.sleep(0.1)
+    time.sleep(0.5)
+    assert len(status.getJobIdsForGroup("kmeans-exact-jobs")) == 8
 
 
 def _mmr_model(qvs):
