@@ -66,17 +66,22 @@ def pixel_rule_sql(d: str, y: str, x: str) -> str:
     return f"(({s}) >> 23)"
 
 
+def pixel_grid(d: int, h: int, w: int):
+    """v(d, y, x) for y < h, x < w as an int64 numpy array — the
+    numpy form of ``pixel_rule_sql``."""
+    import numpy as np
+    y = np.arange(h, dtype=np.int64)[:, None]
+    x = np.arange(w, dtype=np.int64)[None, :]
+    s = (d * 73856093 + y * 19349663 + x * 83492791) % 2147483648
+    return ((s * 1103515245 + 12345) % 2147483648) >> 23
+
+
 def synth_pixels(doc_id: int) -> tuple[bytes, int, int]:
     """Generate the deterministic pixel buffer for one doc id ->
     (pixels row-major, width, height). numpy-vectorized."""
-    import numpy as np
     h = 8 + doc_id % 5
     w = 12 + doc_id % 7
-    y = np.arange(h, dtype=np.int64)[:, None]
-    x = np.arange(w, dtype=np.int64)[None, :]
-    s = (doc_id * 73856093 + y * 19349663 + x * 83492791) % 2147483648
-    v = ((s * 1103515245 + 12345) % 2147483648) >> 23
-    return v.astype(np.uint8).tobytes(), w, h
+    return pixel_grid(doc_id, h, w).astype("uint8").tobytes(), w, h
 
 
 def synth_png(doc_id: int) -> bytes:

@@ -142,19 +142,28 @@ def _band_key_sql(col: str, b: str) -> str:
     return expr
 
 
-_MINHASH_ORACLE = f"""
-    WITH {_SH_CTES}, mh AS (
-      SELECT doc_id, [{_MH_LIST_SQL}] AS mh FROM sh
-    ), bands AS (
+# the signature / band CTEs: `mh` holds each doc's 16 permutation
+# minima, `bands` one (doc_id, band, bkey) row per band
+_BANDS_CTE = f"""bands AS (
       SELECT doc_id, t.b AS band,
              {_band_key_sql('mh', 't.b')} AS bkey
       FROM mh, (SELECT unnest(range({_BANDS})) AS b) t
-    ), cand AS (
+    )"""
+
+_MH_CTES = f"""{_SH_CTES}, mh AS (
+      SELECT doc_id, [{_MH_LIST_SQL}] AS mh FROM sh
+    ), {_BANDS_CTE}"""
+
+# candidate pairs: two docs sharing any band bucket
+_CAND_CTE = """cand AS (
       SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
                   AND a.doc_id < b.doc_id
-    )
+    )"""
+
+_MINHASH_ORACLE = f"""
+    WITH {_MH_CTES}, {_CAND_CTE}
     SELECT c.id_1, c.id_2,
            CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT)
                AS inter_sh,
@@ -168,6 +177,44 @@ _MINHASH_ORACLE = f"""
     JOIN sh sa ON sa.doc_id = c.id_1
     JOIN sh sb ON sb.doc_id = c.id_2
     """
+
+
+def _signatures(sh: DataFrame) -> DataFrame:
+    """Add ``_mh``: the 16 affine-permutation minima of ``_sh``."""
+    def _perm_min(a: int, b: int):
+        # one-arg lambda via closure: PySpark maps the Python arity
+        # onto the HOF arity, so default-arg tricks break analysis
+        return F.array_min(F.transform(
+            F.col("_sh"),
+            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
+
+    return sh.withColumn("_mh", F.array(*[_perm_min(a, b)
+                                          for a, b in _PERMS]))
+
+
+def _band_rows(mh: DataFrame) -> DataFrame:
+    """(doc_id, band, bkey): each band's rows of ``_mh`` folded into
+    one BIGINT bucket key, the fold ``_band_key_sql`` states in SQL."""
+    bkeys = []
+    for b in range(_BANDS):
+        acc = F.element_at("_mh", _ROWS * b + 1)
+        for i in range(2, _ROWS + 1):
+            acc = F.pmod(acc * F.lit(_WORD_BASE)
+                         + F.element_at("_mh", _ROWS * b + i),
+                         F.lit(_P))
+        bkeys.append(acc)
+    return mh.select("doc_id",
+                     F.posexplode(F.array(*bkeys)).alias("band", "bkey"))
+
+
+def _candidate_pairs(bands: DataFrame) -> DataFrame:
+    """(id_1 < id_2) doc pairs sharing any band bucket."""
+    return (bands.alias("a")
+            .join(bands.alias("b"), ["band", "bkey"])
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("id_1"),
+                    F.col("b.doc_id").alias("id_2"))
+            .distinct())
 
 
 @query("minhash_lsh_exact", oracle=_MINHASH_ORACLE)
@@ -198,35 +245,11 @@ def minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BENCH_r12_note pattern)
     sh = pin(_with_shingles(load(spark, sf_dir, "documents"))
              .select("doc_id", "_sh"), eager=False)
-    def _perm_min(a: int, b: int):
-        # one-arg lambda via closure: PySpark maps the Python arity
-        # onto the HOF arity, so default-arg tricks break analysis
-        return F.array_min(F.transform(
-            F.col("_sh"),
-            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
-
-    mh = F.array(*[_perm_min(a, b) for a, b in _PERMS])
-    bkeys = []
-    for b in range(_BANDS):
-        acc = F.element_at("_mh", _ROWS * b + 1)
-        for i in range(2, _ROWS + 1):
-            acc = F.pmod(acc * F.lit(_WORD_BASE)
-                         + F.element_at("_mh", _ROWS * b + i),
-                         F.lit(_P))
-        bkeys.append(acc)
     # pin the banded keys too: the self-join's two sides otherwise
     # re-run the 16-permutation minima per side (4 rows per doc —
     # metadata-sized)
-    banded = pin(sh.withColumn("_mh", mh)
-                   .select("doc_id",
-                           F.posexplode(F.array(*bkeys))
-                            .alias("band", "bkey")), eager=False)
-    cand = (banded.alias("a")
-            .join(banded.alias("b"), ["band", "bkey"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("id_1"),
-                    F.col("b.doc_id").alias("id_2"))
-            .distinct())
+    banded = pin(_band_rows(_signatures(sh)), eager=False)
+    cand = _candidate_pairs(banded)
     sa = sh.select(F.col("doc_id").alias("id_1"),
                    F.col("_sh").alias("_sa"))
     sb = sh.select(F.col("doc_id").alias("id_2"),

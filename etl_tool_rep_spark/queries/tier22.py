@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -44,6 +44,36 @@ _QV_SPARK = (f"transform(embedding, x -> cast(floor(cast(x as double)"
 
 _QV_SQL = (f"list_transform(embedding, x -> CAST(floor("
            f"CAST(x AS DOUBLE) * {_Q} + 0.5) AS BIGINT))")
+
+_QV_CTE = f"""qv AS MATERIALIZED (
+      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
+    )"""
+
+
+def _head(vecs: DataFrame, n: int) -> dict[int, list[int]]:
+    """vec_id -> quantized vector for the vec_ids below ``n``: the
+    driver-side index metadata (init centroids, codebooks, query)."""
+    return {int(r["vec_id"]): [int(x) for x in r["qv"]]
+            for r in vecs.filter(F.col("vec_id") < n).collect()}
+
+
+def _sq_l2(c: Column) -> Column:
+    """BIGINT squared L2 distance from ``qv`` to the array ``c``."""
+    return F.aggregate(
+        F.zip_with("qv", c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("bigint"), lambda acc, v: acc + v)
+
+
+def _nearest(cents: list[list[int]]) -> Column:
+    """0-based index of the row of ``cents`` nearest to ``qv``: an
+    integer argmin (ties to the lowest index, array_position's first
+    minimum) against the k x dim centroids inlined as one parsed
+    BIGINT literal — a narrow map, no shuffle."""
+    cent_lit = F.expr("array(%s)" % ",".join(
+        "array(%s)" % ",".join(f"{x}L" for x in c) for c in cents))
+    dists = F.transform(cent_lit, _sq_l2)
+    return (F.array_position(dists, F.array_min(dists)) - 1) \
+        .cast("bigint")
 
 
 def _km_round_sql(r: int) -> str:
@@ -81,9 +111,7 @@ def _km_round_sql(r: int) -> str:
 
 
 _KM_ORACLE = f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
-    ), c0 AS (
+    WITH {_QV_CTE}, c0 AS (
       SELECT vec_id AS cid, t.i AS dim, qv[t.i + 1] AS c
       FROM qv CROSS JOIN (SELECT unnest(range({_DIM})) AS i) t
       WHERE vec_id < {_KM_K}
@@ -133,24 +161,13 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings")
     vecs = pin(em.select("vec_id", F.expr(_QV_SPARK).alias("qv")))
     # keyed by cid and read in sorted(cents) order: no orderBy needed
-    cents = {int(r["vec_id"]): [int(x) for x in r["qv"]]
-             for r in vecs.filter(F.col("vec_id") < _KM_K).collect()}
+    cents = _head(vecs, _KM_K)
 
     sizes: dict[int, int] = {}
     for _ in range(_KM_ITERS):
-        cent_lit = F.expr("array(%s)" % ",".join(
-            "array(%s)" % ",".join(f"{x}L" for x in cents[cid])
-            for cid in sorted(cents)))
-        dists = F.transform(
-            cent_lit,
-            lambda c: F.aggregate(
-                F.zip_with("qv", c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v))
         assigned = vecs.select(
             "vec_id", "qv",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("bigint").alias("cid"))
+            _nearest([cents[cid] for cid in sorted(cents)]).alias("cid"))
         sums = (assigned
                 .select("cid", F.posexplode("qv").alias("dim", "x"))
                 .groupBy("cid", "dim")
@@ -323,10 +340,8 @@ _PQ_K = 16      # codes per subspace: codebook = subvectors of vecs 0..15
 _PQ_TOPN = 10
 
 
-_PQ_ORACLE = f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
-    ), cb AS (
+# the PQ CTEs: codebooks `cb`, subdistances `sd`, codes `enc`
+_PQ_CTES = f"""cb AS (
       SELECT t.s, v.vec_id AS c, d.d,
              v.qv[{_PQ_D} * t.s + d.d] AS val
       FROM qv v
@@ -346,7 +361,10 @@ _PQ_ORACLE = f"""
                                   ORDER BY dist, c) AS rn
         FROM sd)
       WHERE rn = 1
-    ), adc AS (
+    )"""
+
+_PQ_ORACLE = f"""
+    WITH {_QV_CTE}, {_PQ_CTES}, adc AS (
       SELECT e.vec_id, CAST(SUM(q.dist) AS BIGINT) AS adc_dist
       FROM enc e
       JOIN (SELECT s, c, dist FROM sd WHERE vec_id = 0) q
@@ -357,6 +375,31 @@ _PQ_ORACLE = f"""
     WHERE vec_id <> 0
     ORDER BY adc_dist, vec_id LIMIT {_PQ_TOPN}
     """
+
+
+def _pq_tables(head: dict[int, list[int]]):
+    """``(cbs, tq)``: codebook ``cbs[s][c]`` is the 8-dim subvector
+    ``s`` of vec ``c``; ``tq[s][c]`` is the query's (vec 0) integer
+    subdistance to that code, the oracle's ``sd`` rows for vec 0."""
+    cbs = [[head[c][_PQ_D * s:_PQ_D * (s + 1)]
+            for c in range(_PQ_K)] for s in range(_PQ_M)]
+    q0 = head[0]
+    tq = [[sum((q0[_PQ_D * s + d] - cbs[s][c][d]) ** 2
+               for d in range(_PQ_D))
+           for c in range(_PQ_K)] for s in range(_PQ_M)]
+    return cbs, tq
+
+
+def _pq_sub_dists(cb: list[list[int]], s: int) -> Column:
+    """BIGINT squared distances from subspace ``s`` of ``qv`` to each
+    code of the literal codebook ``cb``."""
+    cb_lit = "array(%s)" % ",".join(
+        "array(%s)" % ",".join(f"{x}L" for x in cw) for cw in cb)
+    return F.expr(
+        f"transform({cb_lit}, cw -> aggregate("
+        f" zip_with(slice(qv, {_PQ_D * s + 1}, {_PQ_D}), cw,"
+        "  (x, y) -> (x - y) * (x - y)),"
+        " cast(0 as bigint), (a, b) -> a + b))")
 
 
 @query("ann_pq_exact", oracle=_PQ_ORACLE)
@@ -382,31 +425,15 @@ def ann_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     no window). Driver traffic: the 17 codebook/query rows, once."""
     em = load(spark, sf_dir, "embeddings")
     vecs = em.select("vec_id", F.expr(_QV_SPARK).alias("qv"))
-    head = {int(r["vec_id"]): [int(x) for x in r["qv"]]
-            for r in vecs.filter(F.col("vec_id") < _PQ_K).collect()}
+    head = _head(vecs, _PQ_K)
     if len(head) < _PQ_K:
         raise ValueError("ann_pq_exact: need vec_ids 0..%d present"
                          % (_PQ_K - 1))
-    # codebook[s][c] = 8-dim int subvector; query table tq[s][c] =
-    # integer subdistance of the query (vec 0) to that code — exact
-    # int arithmetic, mirrors the oracle's sd rows for vec_id = 0
-    cbs = [[head[c][_PQ_D * s:_PQ_D * (s + 1)]
-            for c in range(_PQ_K)] for s in range(_PQ_M)]
-    q0 = head[0]
-    tq = [[sum((q0[_PQ_D * s + d] - cbs[s][c][d]) ** 2
-               for d in range(_PQ_D))
-           for c in range(_PQ_K)] for s in range(_PQ_M)]
+    cbs, tq = _pq_tables(head)
 
     adc = None
     for s in range(_PQ_M):
-        cb_lit = "array(%s)" % ",".join(
-            "array(%s)" % ",".join(f"{x}L" for x in cbs[s][c])
-            for c in range(_PQ_K))
-        sub = F.expr(
-            f"transform({cb_lit}, cw -> aggregate("
-            f" zip_with(slice(qv, {_PQ_D * s + 1}, {_PQ_D}), cw,"
-            "  (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as bigint), (a, b) -> a + b))")
+        sub = _pq_sub_dists(cbs[s], s)
         code = (F.array_position(sub, F.array_min(sub))).cast("int")
         tq_lit = F.expr("array(%s)" % ",".join(
             f"{x}L" for x in tq[s]))
@@ -431,10 +458,9 @@ _IVF_DIST = ("list_reduce(list_transform(range({dim}),"
              " * ({a}[i + 1] - {b}[i + 1])), (x, y) -> x + y)")
 
 
-_IVF_ORACLE = f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
-    ), cents AS (
+# cells (`cents`), the query (`q`), every vector's cell (`asg`) and
+# the query's probed cells (`probes`)
+_IVF_CTES = f"""cents AS (
       SELECT vec_id AS cid, qv AS cv FROM qv WHERE vec_id < {_IVF_K}
     ), q AS (
       SELECT qv AS qq FROM qv WHERE vec_id = 0
@@ -454,7 +480,10 @@ _IVF_ORACLE = f"""
                  c.cid) AS rn
         FROM cents c CROSS JOIN q)
       WHERE rn <= {_IVF_NPROBE}
-    )
+    )"""
+
+_IVF_ORACLE = f"""
+    WITH {_QV_CTE}, {_IVF_CTES}
     SELECT v.vec_id,
            CAST({_IVF_DIST.format(dim=_DIM, a='v.qv', b='q.qq')}
                 AS BIGINT) AS dist,
@@ -466,6 +495,16 @@ _IVF_ORACLE = f"""
     WHERE v.vec_id <> 0
     ORDER BY dist, v.vec_id LIMIT {_IVF_TOPN}
     """
+
+
+def _ivf_probes(head: dict[int, list[int]]) -> list[int]:
+    """The query's (vec 0) nearest cells: same integer arithmetic and
+    (dist, cid) tie rule as the oracle's ``probes`` window, computed
+    on the driver from the cell heads."""
+    q0 = head[0]
+    return [c for _, c in sorted(
+        (sum((a - b) * (a - b) for a, b in zip(q0, head[c])), c)
+        for c in range(_IVF_K))[:_IVF_NPROBE]]
 
 
 @query("ivf_probe_exact", oracle=_IVF_ORACLE)
@@ -486,39 +525,16 @@ def ivf_probe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     no window, no all-pairs."""
     em = load(spark, sf_dir, "embeddings")
     vecs = em.select("vec_id", F.expr(_QV_SPARK).alias("qv"))
-    head = {int(r["vec_id"]): [int(x) for x in r["qv"]]
-            for r in vecs.filter(F.col("vec_id") < _IVF_K).collect()}
+    head = _head(vecs, _IVF_K)
     if 0 not in head or len(head) < _IVF_K:
         raise ValueError("ivf_probe_exact: need vec_ids 0..%d"
                          % (_IVF_K - 1))
-    q0 = head[0]
-
-    def _d(u, v):
-        return sum((a - b) * (a - b) for a, b in zip(u, v))
-
-    # probe cells: same integer arithmetic + (dist, cid) tie rule as
-    # the oracle's 8-row window — driver-side index metadata
-    probes = [cid for _, cid in sorted(
-        (_d(q0, head[c]), c) for c in range(_IVF_K))[:_IVF_NPROBE]]
-
-    cent_lit = F.expr("array(%s)" % ",".join(
-        "array(%s)" % ",".join(f"{x}L" for x in head[c])
-        for c in range(_IVF_K)))
-    dists = F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with("qv", c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"), lambda acc, v: acc + v))
-    q_lit = F.expr("array(%s)" % ",".join(f"{x}L" for x in q0))
-    qdist = F.aggregate(
-        F.zip_with("qv", q_lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"), lambda acc, v: acc + v)
+    probes = _ivf_probes(head)
+    q_lit = F.expr("array(%s)" % ",".join(f"{x}L" for x in head[0]))
     return (vecs
-            .withColumn("cid", (F.array_position(dists,
-                                                 F.array_min(dists))
-                                - 1).cast("bigint"))
+            .withColumn("cid", _nearest([head[c] for c in range(_IVF_K)]))
             .filter(F.col("cid").isin([int(p) for p in probes])
                     & (F.col("vec_id") != 0))
-            .select("vec_id", qdist.alias("dist"), "cid")
+            .select("vec_id", _sq_l2(q_lit).alias("dist"), "cid")
             .orderBy("dist", "vec_id")
             .limit(_IVF_TOPN))

@@ -198,13 +198,6 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("f_max", T.LongType()),
     ])
 
-    def frame_pixels(seed: int) -> bytes:
-        y = np.arange(_FH, dtype=np.int64)[:, None]
-        x = np.arange(_FW, dtype=np.int64)[None, :]
-        s = (seed * 73856093 + y * 19349663 + x * 83492791) % 2147483648
-        v = ((s * 1103515245 + 12345) % 2147483648) >> 23
-        return v.astype(np.uint8).tobytes()
-
     def stage(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             rows = []
@@ -212,10 +205,10 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc_id = int(doc_id)
                 n = 3 + doc_id % 4
                 container = png.pack_frames([
-                    png.encode_png(frame_pixels(doc_id * 101 + f),
-                                   _FW, _FH, 1,
-                                   filter_choice=lambda y, f=f:
-                                       (doc_id + f + y) % 5)
+                    png.encode_png(
+                        M.pixel_grid(doc_id * 101 + f, _FH, _FW)
+                        .astype(np.uint8).tobytes(), _FW, _FH, 1,
+                        filter_choice=lambda y, f=f: (doc_id + f + y) % 5)
                     for f in range(n)])
                 # REAL sample + decode path (operators/multimodal.py)
                 frames = M.sample_frames(container, _EVERY)

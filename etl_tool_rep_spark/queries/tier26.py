@@ -34,10 +34,9 @@ from .registry import query
 # PPJoin-style prefix-filtered set-similarity self-join
 # ---------------------------------------------------------------------------
 
-@query(
-    "prefix_filter_jaccard",
-    oracle="""
-    WITH words AS (
+# distinct 3-word shingles `sh`, set sizes `sz`, global shingle
+# frequencies `freq`, and each doc's shingles rarest-first (`ord`)
+_ORD_CTES = """words AS (
       SELECT doc_id,
              list_filter(string_split_regex(lower(text), '[^a-z]+'),
                          x -> x <> '') AS ws
@@ -58,7 +57,13 @@ from .registry import query
              ROW_NUMBER() OVER (PARTITION BY sh.doc_id
                                 ORDER BY freq.f, sh.t) AS rk,
              sz.n
-      FROM sh JOIN freq USING (t) JOIN sz USING (doc_id)),
+      FROM sh JOIN freq USING (t) JOIN sz USING (doc_id))"""
+
+
+@query(
+    "prefix_filter_jaccard",
+    oracle=f"""
+    WITH {_ORD_CTES},
     pref AS MATERIALIZED (
       SELECT doc_id, t FROM ord WHERE rk <= n // 2 + 1),
     cand AS MATERIALIZED (

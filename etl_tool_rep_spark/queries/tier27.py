@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..session import pin
 from .registry import query
+from .tier26 import _ORD_CTES
 
 
 # ---------------------------------------------------------------------------
@@ -456,29 +457,8 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cand0 additionally carries the PPJoin LENGTH filter (J >= 1/2 and
 # i <= min(na, nb) imply max <= 2*min), which prunes size-incompatible
 # pairs before the intersection join without changing the truth set.
-_TRUTH_CTE = """
-    words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS ws
-      FROM documents),
-    sh AS MATERIALIZED (
-      SELECT DISTINCT doc_id,
-             ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS t
-      FROM words, unnest(range(1, len(ws) - 1)) AS r(i)
-      WHERE len(ws) >= 3),
-    sz AS MATERIALIZED (
-           SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM sh GROUP BY 1),
-    freq AS MATERIALIZED (
-             SELECT t, CAST(COUNT(*) AS BIGINT) AS f
-             FROM sh GROUP BY 1),
-    ord AS (
-      SELECT sh.doc_id, sh.t,
-             ROW_NUMBER() OVER (PARTITION BY sh.doc_id
-                                ORDER BY freq.f, sh.t) AS rk,
-             sz.n
-      FROM sh JOIN freq USING (t) JOIN sz USING (doc_id)),
+_TRUTH_CTE = f"""
+    {_ORD_CTES},
     pref AS MATERIALIZED (
       SELECT doc_id, t, n FROM ord WHERE rk <= n // 2 + 1),
     cand0 AS MATERIALIZED (

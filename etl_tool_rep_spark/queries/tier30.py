@@ -24,7 +24,9 @@ token-identically in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from decimal import Decimal
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -120,9 +122,42 @@ def woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decision stump: best single split by Gini gain
 # ---------------------------------------------------------------------------
 
+# Gini impurity reduction of a split: pos of n rows positive, posl of
+# the nl rows at or below the threshold; gain on the 1e-9 grid
+_GAIN_Q_SQL = """CAST(FLOOR((
+               (CAST(2 AS DOUBLE) * pos * (n - pos))
+                 / (CAST(n AS DOUBLE) * n)
+               - CAST(nl AS DOUBLE) / n
+                 * ((CAST(2 AS DOUBLE) * posl * (nl - posl))
+                    / (CAST(nl AS DOUBLE) * nl))
+               - CAST(n - nl AS DOUBLE) / n
+                 * ((CAST(2 AS DOUBLE) * (pos - posl)
+                     * ((n - nl) - (pos - posl)))
+                    / (CAST(n - nl AS DOUBLE) * (n - nl)))
+             ) * 1000000000.0 + 0.5) AS BIGINT) AS gain_q"""
+
+
+def _gini_gain_q() -> Column:
+    """The BIGINT ``gain_q`` of the split in columns pos, n, posl, nl:
+    the parent's Gini impurity minus each side's, weighted by its
+    share of rows, quantized to the 1e-9 grid (decimal literals, as
+    the SQL parser reads them)."""
+    pos, n, posl, nl = (F.col(c) for c in ("pos", "n", "posl", "nl"))
+
+    def gini(p: Column, m: Column) -> Column:
+        return ((F.lit(2).cast("double") * p * (m - p))
+                / (m.cast("double") * m))
+
+    gain = (gini(pos, n)
+            - nl.cast("double") / n * gini(posl, nl)
+            - (n - nl).cast("double") / n * gini(pos - posl, n - nl))
+    return F.floor(gain * F.lit(Decimal("1000000000.0"))
+                   + F.lit(Decimal("0.5"))).cast("bigint")
+
+
 @query(
     "decision_stump_train",
-    oracle="""
+    oracle=f"""
     WITH lab AS (
       SELECT CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
                  AS cents,
@@ -154,17 +189,7 @@ def woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY c.thr, s.pos, s.n),
     gain AS (
       SELECT thr, nl, n - nl AS nr, posl, pos - posl AS posr,
-             CAST(FLOOR((
-               (CAST(2 AS DOUBLE) * pos * (n - pos))
-                 / (CAST(n AS DOUBLE) * n)
-               - CAST(nl AS DOUBLE) / n
-                 * ((CAST(2 AS DOUBLE) * posl * (nl - posl))
-                    / (CAST(nl AS DOUBLE) * nl))
-               - CAST(n - nl AS DOUBLE) / n
-                 * ((CAST(2 AS DOUBLE) * (pos - posl)
-                     * ((n - nl) - (pos - posl)))
-                    / (CAST(n - nl AS DOUBLE) * (n - nl)))
-             ) * 1000000000.0 + 0.5) AS BIGINT) AS gain_q
+             {_GAIN_Q_SQL}
       FROM split WHERE nl > 0 AND nl < n),
     mx AS (SELECT *, MAX(gain_q) OVER () AS gmax FROM gain),
     sel AS (
@@ -228,18 +253,7 @@ def decision_stump_train(spark: SparkSession,
                                F.col("y")).otherwise(0))
                   .cast("bigint").alias("posl")))
     gain = (split.filter("nl > 0 AND nl < n")
-            .withColumn("gain_q", F.expr(
-                "CAST(FLOOR(("
-                " (CAST(2 AS DOUBLE) * pos * (n - pos))"
-                "   / (CAST(n AS DOUBLE) * n)"
-                " - CAST(nl AS DOUBLE) / n"
-                "   * ((CAST(2 AS DOUBLE) * posl * (nl - posl))"
-                "      / (CAST(nl AS DOUBLE) * nl))"
-                " - CAST(n - nl AS DOUBLE) / n"
-                "   * ((CAST(2 AS DOUBLE) * (pos - posl)"
-                "       * ((n - nl) - (pos - posl)))"
-                "      / (CAST(n - nl AS DOUBLE) * (n - nl)))"
-                ") * 1000000000.0 + 0.5) AS BIGINT)")))
+            .withColumn("gain_q", _gini_gain_q()))
     wall = Window.partitionBy()
     staged = (gain
               .withColumn("gmax", F.max("gain_q").over(wall))

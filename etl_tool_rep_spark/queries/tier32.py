@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..session import local_frame, pin
 from .registry import query
+from .tier30 import _GAIN_Q_SQL, _gini_gain_q
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
         " AS BIGINT)")
@@ -273,7 +274,7 @@ def burst_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stump_cv",
-    oracle="""
+    oracle=f"""
     WITH lab AS (
       SELECT CAST(o_orderkey % 5 AS BIGINT) AS fold,
              CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT)
@@ -311,17 +312,7 @@ def burst_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY c.f, c.thr, s.pos, s.n),
     gain AS (
       SELECT f, thr, nl, posl, pos, n,
-             CAST(FLOOR((
-               (CAST(2 AS DOUBLE) * pos * (n - pos))
-                 / (CAST(n AS DOUBLE) * n)
-               - CAST(nl AS DOUBLE) / n
-                 * ((CAST(2 AS DOUBLE) * posl * (nl - posl))
-                    / (CAST(nl AS DOUBLE) * nl))
-               - CAST(n - nl AS DOUBLE) / n
-                 * ((CAST(2 AS DOUBLE) * (pos - posl)
-                     * ((n - nl) - (pos - posl)))
-                    / (CAST(n - nl AS DOUBLE) * (n - nl)))
-             ) * 1000000000.0 + 0.5) AS BIGINT) AS gain_q
+             {_GAIN_Q_SQL}
       FROM split WHERE nl > 0 AND nl < n),
     mx AS (
       SELECT f, MAX(gain_q) AS gmax FROM gain GROUP BY 1),
@@ -410,18 +401,7 @@ def stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Different projections per consumer => the r13 pin heuristic
     # applies.
     gain = pin(split.filter("nl > 0 AND nl < n")
-               .withColumn("gain_q", F.expr(
-                   "CAST(FLOOR(("
-                   " (CAST(2 AS DOUBLE) * pos * (n - pos))"
-                   "   / (CAST(n AS DOUBLE) * n)"
-                   " - CAST(nl AS DOUBLE) / n"
-                   "   * ((CAST(2 AS DOUBLE) * posl * (nl - posl))"
-                   "      / (CAST(nl AS DOUBLE) * nl))"
-                   " - CAST(n - nl AS DOUBLE) / n"
-                   "   * ((CAST(2 AS DOUBLE) * (pos - posl)"
-                   "       * ((n - nl) - (pos - posl)))"
-                   "      / (CAST(n - nl AS DOUBLE) * (n - nl)))"
-                   ") * 1000000000.0 + 0.5) AS BIGINT)")), eager=False)
+               .withColumn("gain_q", _gini_gain_q()), eager=False)
     mx = (gain.groupBy("f").agg(F.max("gain_q").alias("gmax"))
           .withColumnRenamed("f", "mf"))
     best = (gain.join(mx, (F.col("f") == F.col("mf"))

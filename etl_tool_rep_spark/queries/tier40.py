@@ -36,21 +36,16 @@ from ..operators.rank import global_row_number
 from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
-from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
-                     _WORD_BASE, _P, _band_key_sql, _with_shingles)
+from .tier21 import _MH_CTES, _band_rows, _signatures, _with_shingles
 
-_INCR_ORACLE = f"""
-    WITH {_SH_CTES}, mh AS (
-      SELECT doc_id, [{_MH_LIST_SQL}] AS mh FROM sh
-    ), bands AS (
-      SELECT doc_id, t.b AS band,
-             {_band_key_sql('mh', 't.b')} AS bkey
-      FROM mh, (SELECT unnest(range({_BANDS})) AS b) t
-    ), newb AS (
-      SELECT doc_id, band, bkey FROM bands WHERE doc_id % 5 = 0
-    ), cand AS (
+
+def _probe_sql(index: str, tail: str) -> str:
+    """The new batch's (``newb``, doc_id % 5 = 0) probe of the band
+    rows in ``index``, verified and tallied per source; ``tail``
+    ends the select list."""
+    return f"""cand AS (
       SELECT DISTINCT n.doc_id AS d, o.doc_id AS e
-      FROM newb n JOIN bands o
+      FROM newb n JOIN {index} o
         ON o.band = n.band AND o.bkey = n.bkey
        AND o.doc_id <> n.doc_id
     ), ver AS (
@@ -76,10 +71,53 @@ _INCR_ORACLE = f"""
            CAST(SUM(COALESCE(p.n_cand, 0)) AS BIGINT) AS sum_cand,
            CAST(SUM(CASE WHEN COALESCE(p.n_dup, 0) > 0
                          THEN nd.d ELSE 0 END) AS BIGINT) AS dup_id_sum,
-           CAST(2 AS BIGINT) AS n_versions
+           {tail}
     FROM newdocs nd LEFT JOIN perdoc p ON p.d = nd.d
     GROUP BY nd.source
 """
+
+_INCR_ORACLE = f"""
+    WITH {_MH_CTES}, newb AS (
+      SELECT doc_id, band, bkey FROM bands WHERE doc_id % 5 = 0
+    ), {_probe_sql('bands', 'CAST(2 AS BIGINT) AS n_versions')}"""
+
+
+def _probe_tally(sh: DataFrame, new_b: DataFrame,
+                 idx: DataFrame) -> DataFrame:
+    """Per-source tally of the new batch's band rows ``new_b`` probed
+    against the index snapshot ``idx``: each candidate is verified by
+    exact shingle intersection, and a new doc drops when it
+    duplicates an EARLIER doc (any standing doc, or a smaller id in
+    its own batch)."""
+    cand = (new_b.select(F.col("doc_id").alias("d"), "band", "bkey")
+            .join(idx, ["band", "bkey"])
+            .filter(F.col("doc_id") != F.col("d"))
+            .select("d", F.col("doc_id").alias("e"))
+            .distinct())
+    sa = sh.select(F.col("doc_id").alias("d"),
+                   F.col("_sh").alias("_sa"))
+    sb = sh.select(F.col("doc_id").alias("e"),
+                   F.col("_sh").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    dup = ((2 * inter >= F.size("_sa") + F.size("_sb") - inter)
+           & ((F.col("e") % 5 != 0) | (F.col("e") < F.col("d"))))
+    perdoc = (cand.join(sb, "e").join(sa, "d")
+              .groupBy("d")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
+                   F.sum(F.when(dup, 1).otherwise(0))
+                    .cast("bigint").alias("n_dup")))
+    per = (sh.filter(F.col("doc_id") % 5 == 0)
+           .select(F.col("doc_id").alias("d"), "source")
+           .join(perdoc, "d", "left")
+           .fillna(0, ["n_cand", "n_dup"]))
+    return (per.groupBy("source")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_new"),
+                 F.sum(F.when(F.col("n_dup") > 0, 1).otherwise(0))
+                  .cast("bigint").alias("n_dup_docs"),
+                 F.sum("n_cand").cast("bigint").alias("sum_cand"),
+                 F.sum(F.when(F.col("n_dup") > 0, F.col("d"))
+                       .otherwise(0)).cast("bigint")
+                  .alias("dup_id_sum")))
 
 
 @query("incremental_minhash_dedup", oracle=_INCR_ORACLE)
@@ -114,25 +152,7 @@ def incremental_minhash_dedup(spark: SparkSession,
     only driver materialization."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(_with_shingles(docs))
-
-    def _perm_min(a: int, b: int):
-        return F.array_min(F.transform(
-            F.col("_sh"),
-            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
-
-    mh = F.array(*[_perm_min(a, b) for a, b in _PERMS])
-    bkeys = []
-    for b in range(_BANDS):
-        acc = F.element_at("_mh", _ROWS * b + 1)
-        for i in range(2, _ROWS + 1):
-            acc = F.pmod(acc * F.lit(_WORD_BASE)
-                         + F.element_at("_mh", _ROWS * b + i),
-                         F.lit(_P))
-        bkeys.append(acc)
-    banded = (sh.withColumn("_mh", mh)
-                .select("doc_id",
-                        F.posexplode(F.array(*bkeys))
-                         .alias("band", "bkey")))
+    banded = _band_rows(_signatures(sh))
     is_new = F.col("doc_id") % 5 == 0
     new_b = banded.filter(is_new)
 
@@ -142,42 +162,8 @@ def incremental_minhash_dedup(spark: SparkSession,
                              batch_id="index-base")
         t.append(new_b, batch_id="batch-1")
         t.append(new_b, batch_id="batch-1")   # crash-retry: no-op
-        idx = t.snapshot()
-
-        cand = (new_b.select(F.col("doc_id").alias("d"),
-                             "band", "bkey")
-                .join(idx, ["band", "bkey"])
-                .filter(F.col("doc_id") != F.col("d"))
-                .select("d", F.col("doc_id").alias("e"))
-                .distinct())
-        sa = sh.select(F.col("doc_id").alias("d"),
-                       F.col("source").alias("src"),
-                       F.col("_sh").alias("_sa"))
-        sb = sh.select(F.col("doc_id").alias("e"),
-                       F.col("_sh").alias("_sb"))
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        dup = ((2 * inter >= F.size("_sa") + F.size("_sb") - inter)
-               & ((F.col("e") % 5 != 0) | (F.col("e") < F.col("d"))))
-        perdoc = (cand.join(sb, "e").join(sa.drop("src"), "d")
-                  .groupBy("d")
-                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
-                       F.sum(F.when(dup, 1).otherwise(0))
-                        .cast("bigint").alias("n_dup")))
-        per = (sh.filter(is_new)
-               .select(F.col("doc_id").alias("d"),
-                       F.col("source").alias("source"))
-               .join(perdoc, "d", "left")
-               .fillna(0, ["n_cand", "n_dup"]))
-        agg = (per.groupBy("source")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_new"),
-                    F.sum(F.when(F.col("n_dup") > 0, 1).otherwise(0))
-                     .cast("bigint").alias("n_dup_docs"),
-                    F.sum("n_cand").cast("bigint").alias("sum_cand"),
-                    F.sum(F.when(F.col("n_dup") > 0, F.col("d"))
-                          .otherwise(0)).cast("bigint")
-                     .alias("dup_id_sum"))
-               .withColumn("n_versions",
-                           F.lit(t.version()).cast("bigint")))
+        agg = _probe_tally(sh, new_b, t.snapshot()).withColumn(
+            "n_versions", F.lit(t.version()).cast("bigint"))
         # bounded driver materialization (<= |sources| rows) so the
         # on-disk index can be cleaned up before returning
         rows = agg.collect()
@@ -245,7 +231,8 @@ def jpeg_decode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     from ..operators.jpeg import decode_jpeg_gray, encode_jpeg_gray
-    from ..operators.multimodal import PAYLOAD_SCHEMA, PIXEL_STATS_SCHEMA
+    from ..operators.multimodal import (PAYLOAD_SCHEMA, PIXEL_STATS_SCHEMA,
+                                        fan_out_ids, pixel_grid)
 
     import numpy as np
     import pandas as pd
@@ -257,13 +244,8 @@ def jpeg_decode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             for d in ids:
                 d = int(d)
                 bh, bw = 1 + d % 3, 2 + d % 4
-                by = np.arange(bh, dtype=np.int64)[:, None]
-                bx = np.arange(bw, dtype=np.int64)[None, :]
-                s = (d * 73856093 + by * 19349663
-                     + bx * 83492791) % 2147483648
-                v = ((s * 1103515245 + 12345) % 2147483648) >> 23
-                px = np.repeat(np.repeat(v.astype(np.uint8), 8, axis=0),
-                               8, axis=1)
+                v = pixel_grid(d, bh, bw).astype(np.uint8)
+                px = np.repeat(np.repeat(v, 8, axis=0), 8, axis=1)
                 payloads.append(encode_jpeg_gray(
                     px.tobytes(), bw * 8, bh * 8))
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
@@ -282,8 +264,6 @@ def jpeg_decode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                              int(np.unique(v).size)))
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               PIXEL_STATS_SCHEMA])
-
-    from ..operators.multimodal import fan_out_ids
 
     d = load(spark, sf_dir, "documents")
     payloads = fan_out_ids(d.select("doc_id")).mapInPandas(

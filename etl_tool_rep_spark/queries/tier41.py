@@ -40,8 +40,8 @@ from ..catalog import load
 from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
-from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
-                     _WORD_BASE, _P, _band_key_sql, _with_shingles)
+from .tier21 import _MH_CTES, _band_rows, _signatures, _with_shingles
+from .tier40 import _probe_sql, _probe_tally
 
 # ---------------------------------------------------------------------------
 # z-order over (date, string) cluster keys
@@ -115,53 +115,18 @@ def lakehouse_zorder_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standing dedup index: retirement + compaction
 # ---------------------------------------------------------------------------
 
+_RET_TAIL = """CAST((SELECT COUNT(*) FROM idx) AS BIGINT) AS n_index_rows,
+           CAST(4 AS BIGINT) AS n_versions"""
+
 _RET_ORACLE = f"""
-    WITH {_SH_CTES}, mh AS (
-      SELECT doc_id, [{_MH_LIST_SQL}] AS mh FROM sh
-    ), bands AS (
-      SELECT doc_id, t.b AS band,
-             {_band_key_sql('mh', 't.b')} AS bkey
-      FROM mh, (SELECT unnest(range({_BANDS})) AS b) t
-    ), standing AS (
+    WITH {_MH_CTES}, standing AS (
       SELECT doc_id, band, bkey FROM bands
       WHERE doc_id % 5 <> 0 AND doc_id % 7 <> 3
     ), newb AS (
       SELECT doc_id, band, bkey FROM bands WHERE doc_id % 5 = 0
     ), idx AS (
       SELECT * FROM standing UNION ALL SELECT * FROM newb
-    ), cand AS (
-      SELECT DISTINCT n.doc_id AS d, o.doc_id AS e
-      FROM newb n JOIN idx o
-        ON o.band = n.band AND o.bkey = n.bkey
-       AND o.doc_id <> n.doc_id
-    ), ver AS (
-      SELECT c.d,
-             (2 * len(list_intersect(sa.sh, sb.sh))
-                >= len(sa.sh) + len(sb.sh)
-                   - len(list_intersect(sa.sh, sb.sh)))
-             AND (c.e % 5 <> 0 OR c.e < c.d) AS dup
-      FROM cand c JOIN sh sa ON sa.doc_id = c.d
-                  JOIN sh sb ON sb.doc_id = c.e
-    ), perdoc AS (
-      SELECT d, CAST(COUNT(*) AS BIGINT) AS n_cand,
-             CAST(SUM(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_dup
-      FROM ver GROUP BY d
-    ), newdocs AS (
-      SELECT doc_id AS d, source FROM sh WHERE doc_id % 5 = 0
-    )
-    SELECT nd.source,
-           CAST(COUNT(*) AS BIGINT) AS n_new,
-           CAST(SUM(CASE WHEN COALESCE(p.n_dup, 0) > 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-           CAST(SUM(COALESCE(p.n_cand, 0)) AS BIGINT) AS sum_cand,
-           CAST(SUM(CASE WHEN COALESCE(p.n_dup, 0) > 0
-                         THEN nd.d ELSE 0 END) AS BIGINT) AS dup_id_sum,
-           CAST((SELECT COUNT(*) FROM idx) AS BIGINT) AS n_index_rows,
-           CAST(4 AS BIGINT) AS n_versions
-    FROM newdocs nd LEFT JOIN perdoc p ON p.d = nd.d
-    GROUP BY nd.source
-"""
+    ), {_probe_sql('idx', _RET_TAIL)}"""
 
 
 @query("incremental_dedup_retire", oracle=_RET_ORACLE)
@@ -198,25 +163,7 @@ def incremental_dedup_retire(spark: SparkSession,
     only driver materialization, plus two bounded scalars)."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(_with_shingles(docs))
-
-    def _perm_min(a: int, b: int):
-        return F.array_min(F.transform(
-            F.col("_sh"),
-            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
-
-    mh = F.array(*[_perm_min(a, b) for a, b in _PERMS])
-    bkeys = []
-    for b in range(_BANDS):
-        acc = F.element_at("_mh", _ROWS * b + 1)
-        for i in range(2, _ROWS + 1):
-            acc = F.pmod(acc * F.lit(_WORD_BASE)
-                         + F.element_at("_mh", _ROWS * b + i),
-                         F.lit(_P))
-        bkeys.append(acc)
-    banded = (sh.withColumn("_mh", mh)
-                .select("doc_id",
-                        F.posexplode(F.array(*bkeys))
-                         .alias("band", "bkey")))
+    banded = _band_rows(_signatures(sh))
     is_new = F.col("doc_id") % 5 == 0
     new_b = banded.filter(is_new)
 
@@ -237,36 +184,7 @@ def incremental_dedup_retire(spark: SparkSession,
         idx = t.snapshot()
         n_index = idx.count()                         # bounded scalar
 
-        cand = (new_b.select(F.col("doc_id").alias("d"),
-                             "band", "bkey")
-                .join(idx, ["band", "bkey"])
-                .filter(F.col("doc_id") != F.col("d"))
-                .select("d", F.col("doc_id").alias("e"))
-                .distinct())
-        sa = sh.select(F.col("doc_id").alias("d"),
-                       F.col("_sh").alias("_sa"))
-        sb = sh.select(F.col("doc_id").alias("e"),
-                       F.col("_sh").alias("_sb"))
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        dup = ((2 * inter >= F.size("_sa") + F.size("_sb") - inter)
-               & ((F.col("e") % 5 != 0) | (F.col("e") < F.col("d"))))
-        perdoc = (cand.join(sb, "e").join(sa, "d")
-                  .groupBy("d")
-                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"),
-                       F.sum(F.when(dup, 1).otherwise(0))
-                        .cast("bigint").alias("n_dup")))
-        per = (sh.filter(is_new)
-               .select(F.col("doc_id").alias("d"), "source")
-               .join(perdoc, "d", "left")
-               .fillna(0, ["n_cand", "n_dup"]))
-        agg = (per.groupBy("source")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_new"),
-                    F.sum(F.when(F.col("n_dup") > 0, 1).otherwise(0))
-                     .cast("bigint").alias("n_dup_docs"),
-                    F.sum("n_cand").cast("bigint").alias("sum_cand"),
-                    F.sum(F.when(F.col("n_dup") > 0, F.col("d"))
-                          .otherwise(0)).cast("bigint")
-                     .alias("dup_id_sum"))
+        agg = (_probe_tally(sh, new_b, idx)
                .withColumn("n_index_rows",
                            F.lit(n_index).cast("bigint"))
                .withColumn("n_versions",

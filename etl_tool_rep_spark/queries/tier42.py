@@ -41,12 +41,14 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
+from ..operators.multimodal import PAYLOAD_SCHEMA
 from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
@@ -67,8 +69,10 @@ WAV_STATS_SCHEMA = T.StructType([
     T.StructField("s_wsum", T.LongType()),
 ])
 
-_WAV_ORACLE = """
-    WITH p AS (
+# the synthetic clip per doc — frame count, channels, rate and the
+# PCM16 sample rule — as the oracles restate it (`_pcm16_payloads`
+# synthesizes it on the Spark side)
+_PCM_CTES = """p AS (
       SELECT doc_id,
              120 + (doc_id % 31) * 7 AS n_frames,
              1 + doc_id % 2 AS channels,
@@ -83,7 +87,10 @@ _WAV_ORACLE = """
              ((doc_id * 1103515245 + j * 12345 + 1013904223) % 65536)
                - 32768 AS smp
       FROM s
-    )
+    )"""
+
+_WAV_ORACLE = f"""
+    WITH {_PCM_CTES}
     SELECT doc_id,
            CAST(n_frames AS BIGINT) AS n_frames,
            CAST(rate AS BIGINT) AS sample_rate,
@@ -97,6 +104,32 @@ _WAV_ORACLE = """
     FROM v
     GROUP BY doc_id, n_frames, channels, rate
 """
+
+
+def _pcm16_payloads(it: Iterator["pd.DataFrame"]
+                    ) -> Iterator["pd.DataFrame"]:
+    """mapInPandas: doc ids -> (doc_id, payload), each doc's
+    synthetic clip as a PCM16 WAV — frame count, channels and rate
+    vary per doc, samples follow the rule ``_PCM_CTES`` states."""
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.wav import encode_wav_pcm16
+
+    for pdf in it:
+        ids = pdf["doc_id"].astype("int64")
+        payloads = []
+        for d in ids:
+            d = int(d)
+            n_frames = 120 + (d % 31) * 7
+            channels = 1 + d % 2
+            rate = 8000 + 125 * (d % 5)
+            j = np.arange(n_frames * channels, dtype=np.int64)
+            smp = ((d * 1103515245 + j * 12345 + 1013904223)
+                   % 65536) - 32768
+            payloads.append(encode_wav_pcm16(
+                smp.astype("<i2").tobytes(), rate, channels))
+        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
 
 @query("wav_decode_exact", oracle=_WAV_ORACLE)
@@ -115,33 +148,10 @@ def wav_decode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages (synthesize payloads standing in for an
     object-store read; decode + per-clip stats), one Python crossing
     per batch, per-clip cost tracks payload bytes."""
-    from collections.abc import Iterator
-
-    from ..operators.wav import decode_wav_pcm16, encode_wav_pcm16
+    from ..operators.wav import decode_wav_pcm16
 
     import numpy as np
     import pandas as pd
-
-    payload_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def synth(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                n_frames = 120 + (d % 31) * 7
-                channels = 1 + d % 2
-                rate = 8000 + 125 * (d % 5)
-                j = np.arange(n_frames * channels, dtype=np.int64)
-                smp = ((d * 1103515245 + j * 12345 + 1013904223)
-                       % 65536) - 32768
-                payloads.append(encode_wav_pcm16(
-                    smp.astype("<i2").tobytes(), rate, channels))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     def stats(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
@@ -160,8 +170,8 @@ def wav_decode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               WAV_STATS_SCHEMA])
 
     d = load(spark, sf_dir, "documents")
-    payloads = d.select("doc_id").mapInPandas(synth,
-                                              schema=payload_schema)
+    payloads = d.select("doc_id").mapInPandas(_pcm16_payloads,
+                                              schema=PAYLOAD_SCHEMA)
     return payloads.mapInPandas(stats, schema=WAV_STATS_SCHEMA)
 
 

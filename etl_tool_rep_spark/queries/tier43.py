@@ -40,11 +40,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
+from ..operators.multimodal import PAYLOAD_SCHEMA
 from ..session import local_frame, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
-from .tier21 import (_BANDS, _MH_LIST_SQL, _PERMS, _ROWS, _SH_CTES,
-                     _WORD_BASE, _P, _band_key_sql, _with_shingles)
+from .tier21 import (_BANDS, _BANDS_CTE, _CAND_CTE, _MH_LIST_SQL, _ROWS,
+                     _SH_CTES, _band_rows, _candidate_pairs, _signatures,
+                     _with_shingles)
+from .tier42 import _PCM_CTES, _pcm16_payloads
 
 # ---------------------------------------------------------------------------
 # audio_downsample_exact — decode -> decimate -> encode -> decode
@@ -62,23 +65,8 @@ _DS_SCHEMA = T.StructType([
     T.StructField("s_wsum", T.LongType()),
 ])
 
-_DS_ORACLE = """
-    WITH p AS (
-      SELECT doc_id,
-             120 + (doc_id % 31) * 7 AS n_frames,
-             1 + doc_id % 2 AS channels,
-             8000 + 125 * (doc_id % 5) AS rate
-      FROM documents
-    ), s AS (
-      SELECT doc_id, n_frames, channels, rate,
-             unnest(range(0, n_frames * channels)) AS j
-      FROM p
-    ), v AS (
-      SELECT doc_id, n_frames, channels, rate, j,
-             ((doc_id * 1103515245 + j * 12345 + 1013904223) % 65536)
-               - 32768 AS smp
-      FROM s
-    ), kept AS (
+_DS_ORACLE = f"""
+    WITH {_PCM_CTES}, kept AS (
       SELECT doc_id, n_frames, channels, rate, smp,
              ((j // channels) // 2) * channels + (j % channels) AS j2
       FROM v WHERE (j // channels) % 2 = 0
@@ -122,27 +110,6 @@ def audio_downsample_exact(spark: SparkSession,
     import numpy as np
     import pandas as pd
 
-    payload_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def synth(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                n_frames = 120 + (d % 31) * 7
-                channels = 1 + d % 2
-                rate = 8000 + 125 * (d % 5)
-                j = np.arange(n_frames * channels, dtype=np.int64)
-                smp = ((d * 1103515245 + j * 12345 + 1013904223)
-                       % 65536) - 32768
-                payloads.append(encode_wav_pcm16(
-                    smp.astype("<i2").tobytes(), rate, channels))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
     def downsample(it: Iterator["pd.DataFrame"]
                    ) -> Iterator["pd.DataFrame"]:
         for pdf in it:
@@ -166,8 +133,8 @@ def audio_downsample_exact(spark: SparkSession,
                                               _DS_SCHEMA])
 
     d = load(spark, sf_dir, "documents")
-    payloads = d.select("doc_id").mapInPandas(synth,
-                                              schema=payload_schema)
+    payloads = d.select("doc_id").mapInPandas(_pcm16_payloads,
+                                              schema=PAYLOAD_SCHEMA)
     return payloads.mapInPandas(downsample, schema=_DS_SCHEMA)
 
 
@@ -266,16 +233,7 @@ _K = _BANDS * _ROWS            # signature length (16)
 _MEC_ORACLE = f"""
     WITH {_SH_CTES}, mh AS (
       SELECT doc_id, sh, [{_MH_LIST_SQL}] AS mh FROM sh
-    ), bands AS (
-      SELECT doc_id, t.b AS band,
-             {_band_key_sql('mh', 't.b')} AS bkey
-      FROM mh, (SELECT unnest(range({_BANDS})) AS b) t
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                  AND a.doc_id < b.doc_id
-    ), pairs AS (
+    ), {_BANDS_CTE}, {_CAND_CTE}, pairs AS (
       SELECT c.id_1, c.id_2,
              list_sum(list_transform(range(1, {_K + 1}),
                i -> CASE WHEN ma.mh[i] = mb.mh[i]
@@ -315,31 +273,8 @@ def minhash_estimate_census(spark: SparkSession,
     arithmetic; output is <= 11 buckets."""
     docs = load(spark, sf_dir, "documents")
     sh = pin(_with_shingles(docs))
-
-    def _perm_min(a: int, b: int):
-        return F.array_min(F.transform(
-            F.col("_sh"),
-            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
-
-    mh = sh.withColumn("_mh", F.array(*[_perm_min(a, b)
-                                        for a, b in _PERMS]))
-    bkeys = []
-    for b in range(_BANDS):
-        acc = F.element_at("_mh", _ROWS * b + 1)
-        for i in range(2, _ROWS + 1):
-            acc = F.pmod(acc * F.lit(_WORD_BASE)
-                         + F.element_at("_mh", _ROWS * b + i),
-                         F.lit(_P))
-        bkeys.append(acc)
-    bands = mh.select("doc_id",
-                      F.posexplode(F.array(*bkeys))
-                       .alias("band", "bkey"))
-    cand = (bands.alias("a")
-            .join(bands.alias("b"), ["band", "bkey"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("id_1"),
-                    F.col("b.doc_id").alias("id_2"))
-            .distinct())
+    mh = _signatures(sh)
+    cand = _candidate_pairs(_band_rows(mh))
     ma = mh.select(F.col("doc_id").alias("id_1"),
                    F.col("_sh").alias("_sa"),
                    F.col("_mh").alias("_ma"))

@@ -41,8 +41,9 @@ from ..catalog import load
 from ..session import local_frame
 from ..sinks.lakehouse import LakeTable
 from .registry import query
-from .tier22 import (_DIM, _IVF_DIST, _IVF_K, _IVF_NPROBE, _PQ_D,
-                     _PQ_K, _PQ_M, _QV_SPARK, _QV_SQL)
+from .tier22 import (_IVF_CTES, _IVF_K, _IVF_NPROBE, _PQ_CTES, _PQ_K,
+                     _PQ_M, _QV_CTE, _QV_SPARK, _head, _ivf_probes,
+                     _nearest, _pq_sub_dists, _pq_tables)
 from .tier42 import _SS_CTES, _SS_L, _dup_positions
 
 # ---------------------------------------------------------------------------
@@ -86,6 +87,22 @@ _SPAN_ORACLE = f"""
 """
 
 
+def _spans(dup_rows: DataFrame) -> DataFrame:
+    """(doc_id, i, s, e): duplicated positions merged into maximal
+    spans [s, e) — a position more than L past the previous one opens
+    a new island, a running sum numbers them."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    brk = F.when(F.col("pos") - F.lag("pos").over(w) <= _SS_L,
+                 0).otherwise(1)
+    isl = (dup_rows.select("doc_id", "pos")
+           .withColumn("b", brk)
+           .withColumn("i", F.sum("b").over(
+               w.rowsBetween(Window.unboundedPreceding, 0))))
+    return isl.groupBy("doc_id", "i").agg(
+        F.min("pos").alias("s"),
+        (F.max("pos") + F.lit(_SS_L)).alias("e"))
+
+
 @query("exact_substring_spans", oracle=_SPAN_ORACLE)
 def exact_substring_spans(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
@@ -107,17 +124,7 @@ def exact_substring_spans(spark: SparkSession,
     global sort; the final left join carries SHUFFLE_HASH (per-doc
     aggregates are a data-dimension frame, never broadcast)."""
     d, dup_rows = _dup_positions(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) <= _SS_L,
-                 0).otherwise(1)
-    isl = (dup_rows.select("doc_id", "pos")
-           .withColumn("b", brk)
-           .withColumn("i", F.sum("b").over(
-               w.rowsBetween(Window.unboundedPreceding, 0))))
-    spans = isl.groupBy("doc_id", "i").agg(
-        F.min("pos").alias("s"),
-        (F.max("pos") + F.lit(_SS_L)).alias("e"))
-    per = spans.groupBy("doc_id").agg(
+    per = _spans(dup_rows).groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_spans"),
         F.sum(F.col("e") - F.col("s")).cast("bigint")
          .alias("span_chars"),
@@ -151,60 +158,25 @@ def _ann_index_parts(spark: SparkSession, sf_dir: str):
     engines)."""
     em = load(spark, sf_dir, "embeddings")
     vecs = em.select("vec_id", F.expr(_QV_SPARK).alias("qv"))
-    head = {int(r["vec_id"]): [int(x) for x in r["qv"]]
-            for r in vecs.filter(F.col("vec_id") < _PQ_K).collect()}
+    head = _head(vecs, _PQ_K)
     if len(head) < _PQ_K:
         raise ValueError("incremental ANN: need vec_ids 0..%d"
                          % (_PQ_K - 1))
-    q0 = head[0]
-
-    # --- index construction: cid + packed PQ code per vector -------
-    cent_lit = F.expr("array(%s)" % ",".join(
-        "array(%s)" % ",".join(f"{x}L" for x in head[c])
-        for c in range(_IVF_K)))
-    cdists = F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with("qv", c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"), lambda acc, v: acc + v))
-    cid = (F.array_position(cdists, F.array_min(cdists)) - 1) \
-        .cast("bigint")
-
-    cbs = [[head[c][_PQ_D * s:_PQ_D * (s + 1)]
-            for c in range(_PQ_K)] for s in range(_PQ_M)]
+    cid = _nearest([head[c] for c in range(_IVF_K)])
+    cbs, tq = _pq_tables(head)
     packed = None
     for s in range(_PQ_M):
-        cb_lit = "array(%s)" % ",".join(
-            "array(%s)" % ",".join(f"{x}L" for x in cbs[s][c])
-            for c in range(_PQ_K))
-        sub = F.expr(
-            f"transform({cb_lit}, cw -> aggregate("
-            f" zip_with(slice(qv, {_PQ_D * s + 1}, {_PQ_D}), cw,"
-            "  (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as bigint), (a, b) -> a + b))")
+        sub = _pq_sub_dists(cbs[s], s)
         code0 = (F.array_position(sub, F.array_min(sub)) - 1) \
             .cast("bigint")
         term = F.shiftleft(code0, 4 * s)
         packed = term if packed is None else packed + term
     index = vecs.select("vec_id", cid.alias("cid"),
                         packed.alias("code"))
-
-    # --- query-side metadata (driver, from the 16 head rows) -------
-    def _d(u, v):
-        return sum((a - b) * (a - b) for a, b in zip(u, v))
-
-    probes = [c for _, c in sorted(
-        (_d(q0, head[c]), c) for c in range(_IVF_K))[:_IVF_NPROBE]]
-    # tq[s][c] = integer subdistance of the query to code c of
-    # subspace s — the ADC lookup table
-    tq = [[sum((q0[_PQ_D * s + d] - cbs[s][c][d]) ** 2
-               for d in range(_PQ_D))
-           for c in range(_PQ_K)] for s in range(_PQ_M)]
-    return index, probes, tq
+    return index, _ivf_probes(head), tq
 
 
-def _ann_probe(idx: DataFrame, probes, tq, version: int,
-               extra_filter=None) -> DataFrame:
+def _ann_probe(idx: DataFrame, probes, tq, version: int) -> DataFrame:
     """Rank the on-disk index snapshot by integer ADC over the probed
     cells; bounded top-{n} result carrying the table version."""
     adc = None
@@ -217,8 +189,6 @@ def _ann_probe(idx: DataFrame, probes, tq, version: int,
         adc = term if adc is None else adc + term
     cond = (F.col("cid").isin([int(p) for p in probes])
             & (F.col("vec_id") != 0))
-    if extra_filter is not None:
-        cond = cond & extra_filter
     return (idx.filter(cond)
             .select("vec_id", adc.cast("bigint").alias("adc_dist"),
                     "cid",
@@ -226,50 +196,11 @@ def _ann_probe(idx: DataFrame, probes, tq, version: int,
             .orderBy("adc_dist", "vec_id").limit(_ANN_TOPN))
 
 
-_ANN_ORACLE = f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
-    ), cents AS (
-      SELECT vec_id AS cid, qv AS cv FROM qv WHERE vec_id < {_IVF_K}
-    ), q AS (
-      SELECT qv AS qq FROM qv WHERE vec_id = 0
-    ), asg AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {_IVF_DIST.format(dim=_DIM, a='v.qv', b='c.cv')},
-                 c.cid) AS rn
-        FROM qv v CROSS JOIN cents c)
-      WHERE rn = 1
-    ), probes AS (
-      SELECT cid FROM (
-        SELECT c.cid,
-               row_number() OVER (ORDER BY
-                 {_IVF_DIST.format(dim=_DIM, a='q.qq', b='c.cv')},
-                 c.cid) AS rn
-        FROM cents c CROSS JOIN q)
-      WHERE rn <= {_IVF_NPROBE}
-    ), cb AS (
-      SELECT t.s, v.vec_id AS c, d.d,
-             v.qv[{_PQ_D} * t.s + d.d] AS val
-      FROM qv v
-      CROSS JOIN (SELECT unnest(range({_PQ_M})) AS s) t
-      CROSS JOIN (SELECT unnest(range(1, {_PQ_D} + 1)) AS d) d
-      WHERE v.vec_id < {_PQ_K}
-    ), sd AS (
-      SELECT v.vec_id, b.s, b.c,
-             SUM((v.qv[{_PQ_D} * b.s + b.d] - b.val)
-                 * (v.qv[{_PQ_D} * b.s + b.d] - b.val)) AS dist
-      FROM qv v CROSS JOIN cb b
-      GROUP BY 1, 2, 3
-    ), enc AS (
-      SELECT vec_id, s, c FROM (
-        SELECT vec_id, s, c,
-               row_number() OVER (PARTITION BY vec_id, s
-                                  ORDER BY dist, c) AS rn
-        FROM sd)
-      WHERE rn = 1
-    ), adc AS (
+def _ann_oracle(keep: str) -> str:
+    """Assignment, encoding and ADC recomputed from scratch; ``keep``
+    is the predicate on the surviving vectors ``a``."""
+    return f"""
+    WITH {_QV_CTE}, {_IVF_CTES}, {_PQ_CTES}, adc AS (
       SELECT e.vec_id, CAST(SUM(qd.dist) AS BIGINT) AS adc_dist
       FROM enc e
       JOIN (SELECT s, c, dist FROM sd WHERE vec_id = 0) qd
@@ -281,12 +212,12 @@ _ANN_ORACLE = f"""
     FROM asg a
     JOIN probes p ON p.cid = a.cid
     JOIN adc ON adc.vec_id = a.vec_id
-    WHERE a.vec_id <> 0
+    WHERE {keep}
     ORDER BY adc.adc_dist, a.vec_id LIMIT {_ANN_TOPN}
 """
 
 
-@query("incremental_ann_index", oracle=_ANN_ORACLE)
+@query("incremental_ann_index", oracle=_ann_oracle("a.vec_id <> 0"))
 def incremental_ann_index(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """ANN search over a PERSISTED, INCREMENTALLY-GROWN index — the
@@ -351,64 +282,8 @@ incremental_ann_index.__doc__ = incremental_ann_index.__doc__.format(
 
 _AR_MOD, _AR_REM = 7, 3  # retired slice: vec_id % 7 == 3
 
-_AR_ORACLE = f"""
-    WITH qv AS MATERIALIZED (
-      SELECT vec_id, {_QV_SQL} AS qv FROM embeddings
-    ), cents AS (
-      SELECT vec_id AS cid, qv AS cv FROM qv WHERE vec_id < {_IVF_K}
-    ), q AS (
-      SELECT qv AS qq FROM qv WHERE vec_id = 0
-    ), asg AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {_IVF_DIST.format(dim=_DIM, a='v.qv', b='c.cv')},
-                 c.cid) AS rn
-        FROM qv v CROSS JOIN cents c)
-      WHERE rn = 1
-    ), probes AS (
-      SELECT cid FROM (
-        SELECT c.cid,
-               row_number() OVER (ORDER BY
-                 {_IVF_DIST.format(dim=_DIM, a='q.qq', b='c.cv')},
-                 c.cid) AS rn
-        FROM cents c CROSS JOIN q)
-      WHERE rn <= {_IVF_NPROBE}
-    ), cb AS (
-      SELECT t.s, v.vec_id AS c, d.d,
-             v.qv[{_PQ_D} * t.s + d.d] AS val
-      FROM qv v
-      CROSS JOIN (SELECT unnest(range({_PQ_M})) AS s) t
-      CROSS JOIN (SELECT unnest(range(1, {_PQ_D} + 1)) AS d) d
-      WHERE v.vec_id < {_PQ_K}
-    ), sd AS (
-      SELECT v.vec_id, b.s, b.c,
-             SUM((v.qv[{_PQ_D} * b.s + b.d] - b.val)
-                 * (v.qv[{_PQ_D} * b.s + b.d] - b.val)) AS dist
-      FROM qv v CROSS JOIN cb b
-      GROUP BY 1, 2, 3
-    ), enc AS (
-      SELECT vec_id, s, c FROM (
-        SELECT vec_id, s, c,
-               row_number() OVER (PARTITION BY vec_id, s
-                                  ORDER BY dist, c) AS rn
-        FROM sd)
-      WHERE rn = 1
-    ), adc AS (
-      SELECT e.vec_id, CAST(SUM(qd.dist) AS BIGINT) AS adc_dist
-      FROM enc e
-      JOIN (SELECT s, c, dist FROM sd WHERE vec_id = 0) qd
-        ON qd.s = e.s AND qd.c = e.c
-      GROUP BY 1
-    )
-    SELECT a.vec_id, adc.adc_dist, a.cid,
-           CAST(2 AS BIGINT) AS n_versions
-    FROM asg a
-    JOIN probes p ON p.cid = a.cid
-    JOIN adc ON adc.vec_id = a.vec_id
-    WHERE a.vec_id <> 0 AND a.vec_id % {_AR_MOD} <> {_AR_REM}
-    ORDER BY adc.adc_dist, a.vec_id LIMIT {_ANN_TOPN}
-"""
+_AR_ORACLE = _ann_oracle(
+    f"a.vec_id <> 0 AND a.vec_id % {_AR_MOD} <> {_AR_REM}")
 
 
 @query("incremental_ann_retire", oracle=_AR_ORACLE)

@@ -34,8 +34,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exprs import let_bind
 from .registry import query
-from .tier42 import _SS_L
-from .tier44 import _ISLAND_CTES  # shared span-island CTE body
+from .tier44 import _ISLAND_CTES, _spans
 
 # ---------------------------------------------------------------------------
 # gopher_repetition — repeated n-gram character fractions
@@ -312,22 +311,11 @@ def exact_substring_cut(spark: SparkSession,
     along exactly once through a doc_id equi-join against the
     corpus — no per-character state anywhere.
     """
-    from .tier44 import exact_substring_spans  # noqa: F401 (sibling)
     from .tier42 import _dup_positions
 
     d, dup_rows = _dup_positions(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) <= _SS_L,
-                 0).otherwise(1)
-    isl = (dup_rows.select("doc_id", "pos")
-           .withColumn("b", brk)
-           .withColumn("i", F.sum("b").over(
-               w.rowsBetween(Window.unboundedPreceding, 0))))
-    spans = isl.groupBy("doc_id", "i").agg(
-        F.min("pos").alias("s"),
-        (F.max("pos") + F.lit(_SS_L)).alias("e"))
     ws = Window.partitionBy("doc_id").orderBy("s")
-    segs = spans.withColumn(
+    segs = _spans(dup_rows).withColumn(
         "prev_e", F.coalesce(F.lag("e").over(ws), F.lit(1)))
     cut = (segs.groupBy("doc_id")
            .agg(F.array_sort(F.collect_list(F.struct("s", "prev_e")))
