@@ -97,14 +97,10 @@ _DEFAULTS: dict[str, str] = {
     # the whole state map on-heap, which is what pushed the sf10
     # streaming rehearsal past a 16 g driver. Results are provider-
     # independent (oracles unchanged); artifacts/state_growth_r10
-    # re-measures the watermark plateau under RocksDB. Override with
-    # SPARK_GRAFT_STATE_STORE=hdfs to compare providers.
-    "spark.sql.streaming.stateStore.providerClass": (
+    # re-measures the watermark plateau under RocksDB.
+    "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-        if os.environ.get("SPARK_GRAFT_STATE_STORE") == "hdfs" else
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"),
+        "RocksDBStateStoreProvider",
 }
 
 
