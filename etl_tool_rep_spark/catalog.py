@@ -19,8 +19,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Columns written by the corpus generator with parquet TIMESTAMP(NANOS),
 # which Spark's vectorized reader rejects; with

@@ -41,7 +41,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     at every action, swamping the per-job scheduling it saves. So:
     one checkpointed job per round, plan depth constant."""
     check_every = 5
-    truncate_every = 1
     e = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
             .distinct())
     verts = pin(e.select(F.col("s").alias("id"))
@@ -87,8 +86,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             ranks = ck.select("id", "rank")
             if delta is not None and delta < tol:
                 break
-        elif (i + 1) % truncate_every == 0:
-            ranks = pin(stepped.select("id", "rank"))
         else:
-            ranks = stepped.select("id", "rank")
+            ranks = pin(stepped.select("id", "rank"))
     return ranks.select("id", "rank")

@@ -93,14 +93,12 @@ def compile_rule_column(rule: Rule) -> Column:
 
 def compile_pipeline(df: DataFrame, rules: list[Rule],
                      mappings: Mapping[str, DataFrame],
-                     permissive: bool = False,
-                     keep_input_columns: bool = False) -> DataFrame:
+                     permissive: bool = False) -> DataFrame:
     """Compile the whole rule list into one joined+selected DataFrame.
 
     Lookups become broadcast left joins attached before the final
     select; everything else is a pure Column expression. The result has
-    exactly the rule output columns (reference main.py:135-138), unless
-    ``keep_input_columns`` (an extension, not reference behavior).
+    exactly the rule output columns (reference main.py:135-138).
     """
     out_cols: list[Column | str] = []
     work = df
@@ -147,8 +145,6 @@ def compile_pipeline(df: DataFrame, rules: list[Rule],
                 raise
             log.warning("rule %r skipped: %s", getattr(rule, "name", rule),
                         exc)
-    if keep_input_columns:
-        out_cols = [work[c] for c in df.columns] + out_cols
     return work.select(*out_cols)
 
 

@@ -4,22 +4,9 @@ Importing this package populates the registry with every implemented
 query. Each query is a ``(spark, sf_dir) -> DataFrame`` callable plus,
 where SQL-expressible, a DuckDB oracle SQL string the driver
 hash-matches at sf0.01.
-
-Optional-dependency policy: numpy and pandas are the only imports a
-tier module may legitimately lack (they gate the Pandas-UDF-backed
-operators). Their absence is probed EXPLICITLY with find_spec below;
-any other ImportError — a typo'd module, a renamed symbol — raises at
-import time. The old blanket ``except ImportError: pass`` could
-silently drop whole tiers from the registry and surface only as
-missing driver keys.
 """
 
-from importlib.util import find_spec
-
 from .registry import ORACLES, QUERIES, query  # noqa: F401
-
-_HAVE_NUMPY_STACK = (find_spec("numpy") is not None
-                     and find_spec("pandas") is not None)
 
 # import for side effects: each module registers its queries
 from . import tier0  # noqa: F401,E402
@@ -70,12 +57,10 @@ from . import tier42  # noqa: F401,E402
 from . import tier43  # noqa: F401,E402
 from . import tier44  # noqa: F401,E402
 from . import tier45  # noqa: F401,E402
-
-if _HAVE_NUMPY_STACK:  # Pandas-UDF/numpy-kernel tiers
-    from . import tier3  # noqa: F401,E402
-    from . import tier3b  # noqa: F401,E402
-    from . import tier3c  # noqa: F401,E402
-    from . import tier4  # noqa: F401,E402
-    from . import tier5  # noqa: F401,E402
-    from . import tier24  # noqa: F401,E402
-    from . import tier27m  # noqa: F401,E402
+from . import tier3  # noqa: F401,E402
+from . import tier3b  # noqa: F401,E402
+from . import tier3c  # noqa: F401,E402
+from . import tier4  # noqa: F401,E402
+from . import tier5  # noqa: F401,E402
+from . import tier24  # noqa: F401,E402
+from . import tier27m  # noqa: F401,E402

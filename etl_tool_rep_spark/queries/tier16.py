@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.stream import (
     deduped_stream,
+    drain,
     interval_join_stream,
     read_event_stream,
     run_available_now,
@@ -326,17 +327,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession,
         agg.write.mode("overwrite").parquet(out)
         latest["path"] = out
 
-    q = (stream.writeStream
-         .foreachBatch(merge)
-         .option("checkpointLocation",
-                 os.path.join(state_root, "_ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(stream.writeStream
+          .foreachBatch(merge)
+          .option("checkpointLocation",
+                  os.path.join(state_root, "_ckpt")), 300)
     _deferred_rmtree(state_root)
     return (spark.read.parquet(latest["path"])
             .select("user_id",

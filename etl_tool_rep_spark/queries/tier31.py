@@ -31,11 +31,9 @@ from ..session import pin
 from .registry import query
 
 _PCA_ROUNDS = 6
-# level-1 salt fan-out for the Gram sum; scale-adaptive via env on a
-# cluster (default sized for <= ~3e8 embeddings, see pca docstring)
-import os as _os
-
-_GRAM_SALTS = int(_os.environ.get("SPARK_GRAFT_GRAM_SALTS", "32"))
+# level-1 salt fan-out for the Gram sum (sized for <= ~3e8
+# embeddings, see the comment in pca_top_component)
+_GRAM_SALTS = 32
 _HITS_ROUNDS = 4
 _PERC_ROUNDS = 4
 
@@ -131,8 +129,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buffers — the BigDecimal update dominated the corpus-sized
     # stage. Level 1 sums LONGs per (i, j, salt): |xq| <= ~1e6-scale
     # => product <= ~1e12, so a partial stays < 2^63 up to ~9e6 rows
-    # per (cell, salt) — ~3e8 embeddings at the default 32 salts
-    # (env knob above sizes it up past that). Level 2 sums the
+    # per (cell, salt) — ~3e8 embeddings at 32 salts. Level 2 sums the
     # d^2 x salts long partials into the same decimal(38,0) —
     # identical value (interleaved A/B at sf0.1: 5.21 -> 3.07 s).
     # Salt kept SMALL on purpose: it multiplies the level-1 group

@@ -538,7 +538,7 @@ def ingest_events_once(spark: SparkSession, staged: str, root: str,
     landed, checkpoint commit lost). tests/test_streaming_recovery.py
     uses this to prove recovery against the REAL checkpoint dir, not
     a simulated batch-id replay."""
-    from ..streaming.stream import read_event_stream
+    from ..streaming.stream import drain, read_event_stream
 
     stream = read_event_stream(spark, staged, fmt="parquet",
                                max_files_per_trigger=files_per_trigger)
@@ -571,25 +571,8 @@ def ingest_events_once(spark: SparkSession, staged: str, root: str,
             raise InjectedCrash(
                 f"injected crash after batch {batch_id}")
 
-    q = (stream.writeStream
-         .foreachBatch(merge)
-         .option("checkpointLocation", os.path.join(root, "_ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    try:
-        drained = q.awaitTermination(timeout)
-    finally:
-        if q.isActive:
-            q.stop()
-    # awaitTermination(timeout) does NOT re-raise a failed query's
-    # exception (only the no-timeout form does); surface it so a
-    # mid-stream crash reaches the caller instead of silently
-    # returning a half-ingested table
-    if q.exception() is not None:
-        raise q.exception()
-    # same silent-partial hazard on the timeout path: a still-running
-    # query was stopped above with no exception recorded
-    if not drained:
-        raise TimeoutError(
-            f"streaming ingest did not drain within {timeout}s")
+    drain(stream.writeStream
+          .foreachBatch(merge)
+          .option("checkpointLocation", os.path.join(root, "_ckpt")),
+          timeout)
     return LakeTable(spark, path)

@@ -1,7 +1,7 @@
-from .stream import (deduped_stream, read_event_stream,
+from .stream import (deduped_stream, drain, read_event_stream,
                      run_available_now, sessionized_stream,
                      windowed_agg_stream)
 
 __all__ = ["read_event_stream", "windowed_agg_stream",
            "sessionized_stream", "deduped_stream",
-           "run_available_now"]
+           "drain", "run_available_now"]

@@ -1,82 +1,25 @@
 """Custom stateful streaming operator via applyInPandasWithState —
 the escape hatch for semantics windowed aggregation can't express
-(per-key running state with timeout-driven finalization).
+(per-key running state carried across micro-batches).
 
-Example operator: per-user running profile (event count, value sum,
-last-seen timestamp) that keeps updating as micro-batches arrive. The
-state is a single compact tuple per user; with a processing-time
-timeout, idle users' state is finalized and dropped — the state-size
-bound that keeps a 1000-executor stateful job healthy (unbounded
-per-key state is the way streaming jobs die at scale).
+Example operator: per-user running profile (event count, integer-
+cents value sum) that keeps updating as micro-batches arrive. The
+state is a single compact tuple per user. It runs with
+``GroupStateTimeout.NoTimeout``: a bounded availableNow replay
+terminates, so no key is ever aged out. A continuous deployment would
+add a processing-time timeout to finalize and drop idle users' state
+— unbounded per-key state is the way streaming jobs die at scale.
 
 NOTE on hints: no ``from __future__ import annotations`` here —
 PySpark resolves these signatures at runtime.
 """
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
-
-PROFILE_OUTPUT = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-    T.StructField("total_value", T.DoubleType()),
-])
-
-PROFILE_STATE = T.StructType([
-    T.StructField("n", T.LongType()),
-    T.StructField("total", T.DoubleType()),
-])
-
-
-def _update_profile(key: tuple, batches: Iterator[pd.DataFrame],
-                    state: GroupState) -> Iterator[pd.DataFrame]:
-    (n, total) = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                        "total_value": [round(total, 6)]})
-
-
-def user_profile_stream(events: DataFrame) -> DataFrame:
-    """Running per-user profile over a streaming events frame.
-
-    Each micro-batch folds its rows into the user's state tuple and
-    emits the updated profile row (output mode: update)."""
-    return (events
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _update_profile,
-                outputStructType=PROFILE_OUTPUT,
-                stateStructType=PROFILE_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def run_update_stream(stream_df: DataFrame, query_name: str,
-                      timeout_s: int = 180) -> Any:
-    """Run an update-mode stateful stream to completion
-    (availableNow) into the memory sink; returns the result table."""
-    q = (stream_df.writeStream
-         .format("memory")
-         .queryName(query_name)
-         .outputMode("update")
-         .trigger(availableNow=True)
-         .start())
-    finished = q.awaitTermination(timeout_s)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {query_name!r} did not finish within "
-            f"{timeout_s}s — partial results discarded")
-    return stream_df.sparkSession.table(query_name)
-
 
 PROFILE_CENTS_OUTPUT = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -94,9 +37,7 @@ def _update_profile_cents(key: tuple, batches: Iterator[pd.DataFrame],
                           state: GroupState) -> Iterator[pd.DataFrame]:
     # integer-cents accumulator: floor(v*100 + 0.5) per row, summed
     # as int64 — exact, accumulation-order-independent, so the final
-    # state is bit-identical to any batch SQL engine's aggregate (the
-    # float-sum variant above is fine for dashboards but cannot be
-    # hash-matched across engines)
+    # state is bit-identical to any batch SQL engine's aggregate
     import numpy as np
     (n, cents) = state.get if state.exists else (0, 0)
     for pdf in batches:

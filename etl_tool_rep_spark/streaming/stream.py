@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -174,27 +175,37 @@ def asof_enrich_stream(probe: DataFrame, build: DataFrame,
     return p.join(b, cond).drop("_b_key")
 
 
+def drain(writer: DataStreamWriter, timeout_s: int) -> StreamingQuery:
+    """Start ``writer`` with Trigger.AvailableNow, wait until it has
+    processed all currently-available input, and return the finished
+    query (its ``recentProgress`` stays readable).
+
+    A failed query raises its ``StreamingQueryException`` (PySpark's
+    ``awaitTermination(timeout)`` re-raises it); a query still running
+    after ``timeout_s`` raises ``TimeoutError``. Either way the query
+    is stopped first, so no caller sees a partial answer or leaves a
+    query active."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish within "
+                f"{timeout_s}s — partial results discarded")
+    finally:
+        q.stop()
+    return q
+
+
 def run_available_now(stream_df: DataFrame, query_name: str,
                       timeout_s: int = 120,
                       output_mode: str = "complete") -> DataFrame:
-    """Run a streaming plan over all currently-available input
-    (Trigger.AvailableNow), collect results via the memory sink, and
-    return them as a batch DataFrame. Used by tests and the tier-16
+    """Drain a streaming plan into the memory sink and return the
+    result as a batch DataFrame. Used by tests and the tier-16
     driver-gated streaming queries to assert stream==batch
     equivalence. ``output_mode``: "complete" for aggregations,
     "append" for row-level operators (dedup, maps) that emit as they
-    process."""
-    q = (stream_df.writeStream
-         .format("memory")
-         .queryName(query_name)
-         .outputMode(output_mode)
-         .trigger(availableNow=True)
-         .start())
-    finished = q.awaitTermination(timeout_s)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {query_name!r} did not finish within "
-            f"{timeout_s}s — partial results discarded")
-    spark = stream_df.sparkSession
-    return spark.table(query_name)
+    process, "update" for stateful operators that re-emit a key's
+    running state each micro-batch."""
+    drain(stream_df.writeStream.format("memory").queryName(query_name)
+          .outputMode(output_mode), timeout_s)
+    return stream_df.sparkSession.table(query_name)

@@ -11,10 +11,13 @@ import sys
 
 import pyarrow.parquet as pq
 
+from perfbench import eventlog
+from tools.measure import _stage_metrics
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOL = os.path.join(REPO, "tools", "measure.py")
 DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-KEYS = ["groupby_agg", "kmeans_exact"]
+KEYS = ["groupby_agg", "kmeans_exact", "streaming_tumbling_agg"]
 
 
 def test_measure_two_dirs(tmp_path):
@@ -37,6 +40,11 @@ def test_measure_two_dirs(tmp_path):
         assert 0 < r["max_task_share"] <= 1
     # the count tests/test_tier22.py pins through statusTracker
     assert {r["jobs"] for r in recs if r["key"] == "kmeans_exact"} == {8}
+    # micro-batch jobs run under the stream's run id and are folded in
+    for r in recs:
+        if r["key"] == "streaming_tumbling_agg":
+            assert r["jobs"] > 1, r
+            assert "stream_runs" not in r
 
     rows = [pq.read_metadata(os.path.join(d, "lineitem.parquet")).num_rows
             for d in DIRS]
@@ -71,3 +79,13 @@ def test_unknown_key_exits_before_a_jvm(tmp_path):
     assert "unknown key: no_such_key" in p.stderr
     control = run("groupby_agg")
     assert control.returncode not in (0, 2), control.stderr[-2000:]
+
+
+def test_worst_stage_ignores_sub_granularity_stages():
+    # 4 tasks, 1 ms in total: max/mean reads 4.0 from timer rounding
+    g = eventlog.GroupStats(
+        job_spans=[(0.0, 1.0)],
+        stages={0: eventlog.StageTasks(run_ms=1, max_run_ms=1, tasks=4)})
+    m = _stage_metrics(g)
+    assert m["worst_stage"] is None
+    assert (m["jobs"], m["stages"], m["tasks"]) == (1, 1, 4)

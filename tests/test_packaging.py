@@ -10,8 +10,10 @@ installs are off, so the sdist is the strongest offline build check).
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
+import re
 import subprocess
 import sys
 import tarfile
@@ -39,6 +41,57 @@ def test_metadata_valid_and_version_synced():
     assert "openpyxl" in extras["excel"]
     assert not any("paramiko" in d or "openpyxl" in d
                    for d in meta["dependencies"])
+
+
+def _gated(handler: ast.ExceptHandler) -> bool:
+    names = (handler.type.elts if isinstance(handler.type, ast.Tuple)
+             else [handler.type])
+    return any(isinstance(n, ast.Name)
+               and n.id in ("ImportError", "ModuleNotFoundError")
+               for n in names)
+
+
+def _ungated_imports(tree: ast.AST, gated: bool = False):
+    """(module, line) for each top-level import outside a
+    ``try: ... except ImportError`` body."""
+    if isinstance(tree, ast.Try) and any(map(_gated, tree.handlers)):
+        for n in tree.body:
+            yield from _ungated_imports(n, True)
+        for n in tree.handlers + tree.orelse + tree.finalbody:
+            yield from _ungated_imports(n, gated)
+        return
+    if not gated:
+        if isinstance(tree, ast.Import):
+            for a in tree.names:
+                yield a.name.split(".")[0], tree.lineno
+        elif isinstance(tree, ast.ImportFrom) and tree.level == 0:
+            yield tree.module.split(".")[0], tree.lineno
+    for n in ast.iter_child_nodes(tree):
+        yield from _ungated_imports(n, gated)
+
+
+def test_third_party_imports_are_declared_or_gated():
+    """A plain ``pip install .`` must yield an importable engine: every
+    third-party module the package imports is a declared dependency,
+    unless the import sits under ``try/except ImportError`` (the gated
+    connectors: paramiko, openpyxl, PIL)."""
+    declared = {re.split(r"[<>=!~;\[ ]", d)[0].lower().replace("-", "_")
+                for d in _pyproject()["project"]["dependencies"]}
+    pkg = os.path.join(REPO, "etl_tool_rep_spark")
+    bad = []
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            bad += [f"{os.path.relpath(path, REPO)}:{line} {mod}"
+                    for mod, line in _ungated_imports(tree)
+                    if mod not in sys.stdlib_module_names
+                    and mod != "etl_tool_rep_spark"
+                    and mod.lower() not in declared]
+    assert not bad, "undeclared third-party imports: " + ", ".join(bad)
 
 
 def test_console_script_target_resolves():

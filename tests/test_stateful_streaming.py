@@ -6,9 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
-from etl_tool_rep_spark.streaming import read_event_stream
-from etl_tool_rep_spark.streaming.stateful import (run_update_stream,
-                                                   user_profile_stream)
+from etl_tool_rep_spark.streaming import read_event_stream, run_available_now
+from etl_tool_rep_spark.streaming.stateful import user_profile_cents_stream
 
 
 @pytest.fixture(scope="module")
@@ -24,24 +23,27 @@ def event_files(spark, sf_dir, tmp_path_factory):
 def test_state_accumulates_across_batches(spark, sf_dir, event_files):
     stream = read_event_stream(spark, event_files,
                                max_files_per_trigger=1)
-    result = run_update_stream(user_profile_stream(stream), "t_profile")
+    result = run_available_now(user_profile_cents_stream(stream),
+                               "t_profile", output_mode="update")
 
-    # update mode appends one row per (batch, user); the LAST row per
-    # user is the final state
+    # update mode appends one row per (batch, user); counts strictly
+    # increase, so the row with the most events is the final state
     final = {}
     for r in result.collect():
-        final[r["user_id"]] = (r["n_events"], r["total_value"])
+        if r["user_id"] not in final or r["n_events"] > final[r["user_id"]][0]:
+            final[r["user_id"]] = (r["n_events"], r["total_cents"])
+    n_batches = result.groupBy("user_id").count().agg(F.max("count"))
+    assert n_batches.collect()[0][0] > 1, "expected several micro-batches"
 
     batch = (load(spark, sf_dir, "events")
              .groupBy("user_id")
              .agg(F.count(F.lit(1)).alias("n"),
-                  F.round(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 6)
-                   .alias("total")))
-    expect = {r["user_id"]: (r["n"], r["total"]) for r in batch.collect()}
+                  F.sum(F.floor(F.coalesce(F.col("value"), F.lit(0.0))
+                                * 100 + 0.5).cast("bigint"))
+                   .alias("cents")))
+    expect = {r["user_id"]: (r["n"], r["cents"]) for r in batch.collect()}
 
     assert set(final) == set(expect)
-    mismatch = {u for u in expect
-                if final[u][0] != expect[u][0]
-                or abs(final[u][1] - expect[u][1]) > 1e-6}
+    mismatch = {u for u in expect if final[u] != expect[u]}
     assert not mismatch, f"{len(mismatch)} users mismatch: " \
                          f"{sorted(mismatch)[:5]}"

@@ -4,12 +4,14 @@ EXACTLY the batch answers over a static file set (availableNow trigger
 themselves DuckDB-verified, so frame-equality here chains the oracle
 through to the streaming forms."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
 from etl_tool_rep_spark.queries import QUERIES
-from etl_tool_rep_spark.streaming import (deduped_stream,
+from etl_tool_rep_spark.streaming import (deduped_stream, drain,
                                           read_event_stream,
                                           run_available_now,
                                           sessionized_stream,
@@ -106,3 +108,18 @@ def test_watermark_is_attached(spark, event_stream_dir):
     # eventTime watermark must appear in the analyzed plan
     assert "watermark" in stream._jdf.queryExecution().analyzed() \
         .toString().lower()
+
+
+def test_drain_timeout_raises_and_stops(spark, event_stream_dir, tmp_path):
+    """A micro-batch still running at ``timeout_s`` must not be
+    returned as a partial answer: ``drain`` raises ``TimeoutError``
+    and the query is stopped, not left active."""
+    def slow(batch_df, batch_id):
+        time.sleep(8)
+
+    stream = read_event_stream(spark, event_stream_dir, fmt="parquet")
+    writer = (stream.writeStream.foreachBatch(slow)
+              .option("checkpointLocation", str(tmp_path / "ckpt")))
+    with pytest.raises(TimeoutError, match="did not finish within 2s"):
+        drain(writer, timeout_s=2)
+    assert spark.streams.active == []

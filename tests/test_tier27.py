@@ -20,8 +20,6 @@ DuckDB oracle gate (which proves engine parity, not intent).
   Hamming distance; the pair list never crosses bases at sf0.001.
 """
 
-import pytest
-
 from etl_tool_rep_spark.queries import QUERIES
 
 
@@ -152,7 +150,6 @@ def test_zipf_fit_semantics(spark, monkeypatch):
 
 
 def test_image_phash_dedup_groups(spark, sf_dir):
-    pytest.importorskip("numpy")
     got = QUERIES["image_phash_dedup"](spark, sf_dir).collect()
     assert got, "expected at least one near-duplicate pair"
     assert all(r["hamming"] <= 3 for r in got)

@@ -18,8 +18,6 @@ DuckDB oracle gate (which proves engine parity, not intent).
 
 import math
 
-import pytest
-
 from etl_tool_rep_spark.queries import QUERIES
 
 
@@ -76,7 +74,6 @@ def test_chi2_independence_semantics(spark, monkeypatch):
 
 
 def test_embedding_int8_quant_exact(spark, monkeypatch):
-    pytest.importorskip("numpy")
     import etl_tool_rep_spark.queries.tier28 as t28
     # components at exact code points k * amax/127: zero error,
     # amax component saturates at 127

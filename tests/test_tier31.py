@@ -15,13 +15,10 @@ DuckDB oracle gate (which proves engine parity, not intent).
   1/(60+r) sum computed by hand.
 """
 
-import pytest
-
 from etl_tool_rep_spark.queries import QUERIES
 
 
 def test_pca_axis_aligned(spark, monkeypatch):
-    pytest.importorskip("numpy")
     import etl_tool_rep_spark.queries.tier31 as t31
     # 8-dim vectors: dim 2 carries values +/-10, everything else 0.1
     # noise-free -> top component is e_2

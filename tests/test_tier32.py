@@ -15,8 +15,6 @@ DuckDB oracle gate (which proves engine parity, not intent).
 
 import datetime
 
-import pytest
-
 from etl_tool_rep_spark.queries import QUERIES
 
 
@@ -28,7 +26,6 @@ def _emb(spark, pts):
 
 
 def test_grid_dbscan_two_blobs(spark, monkeypatch):
-    pytest.importorskip("numpy")
     import etl_tool_rep_spark.queries.tier32 as t32
     # blob A: 6 points at ~(0, 0); blob B: 6 points at ~(10, 10)
     # (40 cells apart); 1 isolated point at (-10, -10)

@@ -12,7 +12,7 @@ through real WAV bytes.
 
 from __future__ import annotations
 
-import pytest
+import numpy as np
 
 from etl_tool_rep_spark.queries import QUERIES
 import etl_tool_rep_spark.queries.tier42 as t42
@@ -138,7 +138,6 @@ def test_maxsim_scores_by_token_max_not_whole_vector(spark,
 
 def test_wav_stats_reproduce_sample_rule_through_real_bytes(
         spark, monkeypatch):
-    np = pytest.importorskip("numpy")
     rows = [(d, "t") for d in (0, 1, 5, 37)]
     monkeypatch.setattr(t42, "load", lambda s, d, n: _docs(spark, rows))
     got = {r["doc_id"]: r for r in

@@ -11,7 +11,7 @@ physically reclaim version 1 while the retained head stays correct;
 
 from __future__ import annotations
 
-import pytest
+import numpy as np
 
 from etl_tool_rep_spark.queries import QUERIES
 import etl_tool_rep_spark.queries.tier42 as t42  # noqa: F401 (docs helper)
@@ -26,7 +26,6 @@ def _docs(spark, rows):
 
 
 def test_audio_downsample_decimates_frames(spark, monkeypatch):
-    np = pytest.importorskip("numpy")
     ids = (0, 1, 5, 36)       # mono and stereo, varied rates/lengths
     monkeypatch.setattr(t43, "load",
                         lambda s, d, n: _docs(spark,

@@ -49,9 +49,6 @@ _NESTED_LOOP_OK = {
     # train left it by rooting its weight frame in Range(1) instead
     # of an opaque createDataFrame LogicalRDD.
 }
-# queries intentionally scanning whole small tables w/o filters
-_NO_FILTER_OK = True  # pushdown flagged only when a filter exists
-
 # Round-9 (verdict item #1): declared keys whose RETURN materializes
 # a data-sized dimension (per-user streaming state) and therefore
 # MUST come back as a distributed file read — any LogicalRDD or
@@ -62,16 +59,6 @@ _DISTRIBUTED_SNAPSHOT_REQUIRED = {
     "streaming_foreachbatch_upsert",
     "streaming_lakehouse_ingest",
 }
-
-# queries where an UNPARTITIONED window (global sort) is acceptable
-# because the frame it consumes is tiny by construction but not
-# provably so from the plan alone (post-aggregation frames whose
-# Aggregate is hidden behind a join/union, dimension-sized inputs).
-# Every entry must state the bound. Round 8: the bound propagator
-# below (_row_bound) proves post-aggregation frames through their
-# grouping-key domains, so entries only belong here when the frame's
-# bound is real but outside what the propagator can trace.
-_GLOBAL_WINDOW_OK = set()
 
 # Documented domain bounds for grouping keys: an Aggregate grouping
 # ONLY on these columns has at most the product of their bounds as
@@ -472,16 +459,13 @@ def audit_window_partitions(name: str, df) -> tuple[list[str],
     """Round-7 verdict item #3: flag any Window node whose partition
     spec is EMPTY (global sort — 'Moving all data to a single
     partition') unless the frame it consumes is provably small
-    (post-aggregation / limited / literal) or the query is
-    allowlisted with a stated bound.
+    (post-aggregation / limited / literal).
 
     Returns (flags, notes): a PROVEN-bounded global window emits a
     note instead of a flag — the justification line that tells a
     reader why the runtime's 'WindowExec: No Partition Defined'
     warning for this key is benign (round-11 verdict hygiene ask),
     so nobody re-investigates it from the sweep/bench log tails."""
-    if name in _GLOBAL_WINDOW_OK:
-        return [], []
     bad, notes = [], []
     stack = [df._jdf.queryExecution().optimizedPlan()]
     while stack:

@@ -19,11 +19,13 @@ after it; from the event log (parsed with ``perfbench/eventlog.py``
 after the session stops): jobs, stages, tasks, ``max_task_share`` (the
 sum over stages of each stage's longest task over the sum of all task
 time, as perfbench defines it) and ``worst_stage``, the stage of at
-least 4 tasks with the highest max/mean task time. A run that starts a
-streaming query also records the state-row, state-byte and RocksDB
-memory peaks its progress events reported, per query; micro-batch jobs
-run under the stream's own job group, so they are not in the run's job
-counts.
+least 4 tasks with the highest max/mean task time among stages whose
+mean task time is at least 10 ms (task times are whole milliseconds,
+so shorter stages read as skewed from timer granularity alone). A run
+that starts a streaming query also records the state-row, state-byte
+and RocksDB memory peaks its progress events reported, per query;
+Spark runs each stream's micro-batches under a job group named by the
+stream's run id, and those groups are folded into the run's counts.
 
 stdout gets one JSON line per key with each dir's median and runs and,
 with more than one dir, the scaling exponent log(t_b/t_a)/log(ratio)
@@ -53,6 +55,8 @@ import bench  # noqa: E402
 from perfbench import eventlog  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
+# 10x the 1 ms granularity of event-log task times
+WORST_STAGE_MIN_MEAN_MS = 10
 
 
 class StatePeaks(StreamingQueryListener):
@@ -62,12 +66,13 @@ class StatePeaks(StreamingQueryListener):
         self.reset()
 
     def reset(self):
-        self.started = False
+        self.run_ids: list[str] = []
         self.peaks: dict[str, dict] = {}
 
     def onQueryStarted(self, event):  # noqa: N802
-        # called before DataStreamWriter.start() returns
-        self.started = True
+        # called before DataStreamWriter.start() returns; the run id is
+        # the job group of the stream's micro-batch jobs
+        self.run_ids.append(str(event.runId))
 
     def onQueryProgress(self, event):  # noqa: N802
         p = json.loads(event.progress.json)
@@ -107,7 +112,7 @@ def _stage_metrics(g: eventlog.GroupStats) -> dict:
     worst = None
     for sid, s in stages.items():
         mean = s.run_ms / s.tasks
-        if s.tasks >= 4 and mean and (
+        if s.tasks >= 4 and mean >= WORST_STAGE_MIN_MEAN_MS and (
                 worst is None or s.max_run_ms / mean > worst["max_mean"]):
             worst = {"stage": sid, "tasks": s.tasks,
                      "max_ms": s.max_run_ms, "mean_ms": round(mean, 1),
@@ -162,9 +167,10 @@ def _session(keys, dirs, iters, plans, log_dir):
                     rec = {"key": key, "dir": d, "pass": p, "group": group,
                            "wall_s": round(wall, 3), "gc_ms": gc,
                            "load1": round(load1, 2)}
-                    if peaks.started:
+                    if peaks.run_ids:
                         _quiesce(spark)
                         rec["state_peaks"] = peaks.peaks
+                        rec["stream_runs"] = peaks.run_ids
                     rec["heap_used_mb"] = round(
                         heap.getHeapMemoryUsage().getUsed() / 2**20)
                     if p == 0 and plans:
@@ -238,8 +244,14 @@ def main(argv=None) -> int:
     finally:
         shutil.rmtree(log_dir, ignore_errors=True)
     for rec in records:
-        rec.update(_stage_metrics(
-            groups.get(rec["group"]) or eventlog.GroupStats()))
+        # fold in the run's streams: _stage_metrics reads only the
+        # job spans and stages
+        g = eventlog.GroupStats()
+        for name in [rec["group"], *rec.pop("stream_runs", [])]:
+            if name in groups:
+                g.job_spans += groups[name].job_spans
+                g.stages.update(groups[name].stages)
+        rec.update(_stage_metrics(g))
     if args.out:
         with open(args.out, "w") as fh:
             for rec in records:

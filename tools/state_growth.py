@@ -66,7 +66,8 @@ def run_interval_join(spark, root: str, n_tranches: int) -> list[dict]:
     `interval_join_stream`, drain with availableNow, and return one
     record per micro-batch: {batch, input_rows, state_rows,
     state_bytes, rows_dropped_by_watermark}."""
-    from etl_tool_rep_spark.streaming.stream import interval_join_stream
+    from etl_tool_rep_spark.streaming.stream import (drain,
+                                                     interval_join_stream)
 
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
@@ -76,18 +77,11 @@ def run_interval_join(spark, root: str, n_tranches: int) -> list[dict]:
     joined = interval_join_stream(stream, stream,
                                   horizon="1 hour", watermark="1 hour")
     out = tempfile.mkdtemp(prefix="state_growth_sink_")
-    q = (joined.writeStream
-         .format("parquet")
-         .option("path", os.path.join(out, "data"))
-         .option("checkpointLocation", os.path.join(out, "_ckpt"))
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    try:
-        q.awaitTermination(600)
-    finally:
-        if q.isActive:
-            q.stop()
+    q = drain(joined.writeStream
+              .format("parquet")
+              .option("path", os.path.join(out, "data"))
+              .option("checkpointLocation", os.path.join(out, "_ckpt"))
+              .outputMode("append"), 600)
     recs = []
     for p in q.recentProgress:
         ops = p.get("stateOperators") or []
