@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sources.readers import read_parquet
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -31,7 +33,7 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one table (nanos-timestamp normalized)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NANO_TS_COLS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType,
                                             T.LongType):

@@ -16,8 +16,10 @@ A user of the reference tool maps 1:1 onto this API:
 
 Unlike the reference (eager pandas in session RAM, main.py:190), the
 inventory is lazy DataFrames — nothing materializes until run/export.
-The one eager step of a load, CSV schema inference (two Spark jobs per
-file), runs in a background thread: ``add_file`` and
+The one eager step of a load, CSV schema inference, is two Spark jobs
+on the first load of a file version; a repeat load of the unchanged
+file (the same upload read again) reuses its schema and runs none.
+Loads run in a background thread: ``add_file`` and
 ``add_mapping_file`` return at once and the loads of several uploads
 overlap. The first call that needs a table (``primary``, ``columns``,
 ``run``, ``data_inventory``, ``mapping_dfs``) waits for its load and

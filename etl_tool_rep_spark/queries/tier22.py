@@ -155,9 +155,11 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry each cluster's size as `n` (a cluster with no rows there
     is empty, n = 0), so no second groupBy re-runs the final
     assignment, and the 512 rows go back as a `local_frame` (a JVM
-    LocalTableScan). A pass is 8 jobs: the scan, the pin, the init
-    collect, 2 per round, and the consumer's. Measured on a 4-core
-    host: 12 -> 8 jobs, perfbench `iterative` pass 2.30 -> 1.24 s."""
+    LocalTableScan). A pass is 7 jobs: the pin, the init collect, 2
+    per round, and the consumer's, plus the parquet schema inference
+    on the first read of a file version (8 jobs cold). Measured on a
+    4-core host: 12 -> 8 jobs, perfbench `iterative` pass 2.30 ->
+    1.24 s."""
     em = load(spark, sf_dir, "embeddings")
     vecs = pin(em.select("vec_id", F.expr(_QV_SPARK).alias("qv")))
     # keyed by cid and read in sorted(cents) order: no orderBy needed

@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -27,3 +28,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def group_jobs(spark):
+    """``group_jobs(group, fn)`` -> (fn(), the number of jobs fn ran).
+    fn runs under job group ``group``; a sentinel job run after it shows
+    that the tracker, which the listener bus updates asynchronously but
+    in event order, has seen every job fn started."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        try:
+            sc.setJobGroup(group, group)
+            out = fn()
+            sc.setJobGroup(f"{group}-sentinel", "sentinel")
+            spark.range(1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        status = sc.statusTracker()
+        deadline = time.time() + 10
+        while not status.getJobIdsForGroup(f"{group}-sentinel") \
+                and time.time() < deadline:
+            time.sleep(0.05)
+        return out, len(status.getJobIdsForGroup(group))
+    return run

@@ -2,7 +2,6 @@
 rules -> run -> export) through the ETLEngine facade."""
 
 import os
-import time
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -86,23 +85,25 @@ def test_missing_file_fails_at_first_use(spark, workdir):
     assert list(eng.mapping_dfs) == ["customer_mapping"]
 
 
-def test_loads_run_in_caller_job_group(spark, workdir):
-    sc = spark.sparkContext
-    sc.setJobGroup("engine-loads", "engine loads")
-    try:
-        eng = ETLEngine(spark)
-        eng.set_primary(eng.add_file(str(workdir / "orders_main.csv")))
-        eng.add_mapping_file(str(workdir / "customer_mapping.csv"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+def _load(spark, d) -> ETLEngine:
+    eng = ETLEngine(spark)
+    eng.set_primary(eng.add_file(str(d / "orders_main.csv")))
+    eng.add_mapping_file(str(d / "customer_mapping.csv"))
+    # wait for both background loads
     assert eng.columns() == ["row_id", "cust_id", "amount", "status"]
     assert list(eng.mapping_dfs) == ["customer_mapping"]
-    status = sc.statusTracker()
-    deadline = time.time() + 10
-    # two schema-inference jobs per CSV; the listener bus updates the
-    # tracker asynchronously
-    while len(status.getJobIdsForGroup("engine-loads")) < 4 \
-            and time.time() < deadline:
-        time.sleep(0.1)
-    assert len(status.getJobIdsForGroup("engine-loads")) == 4
+    return eng
+
+
+def test_loads_run_in_caller_job_group(spark, workdir, tmp_path,
+                                       group_jobs):
+    """A first load of each CSV runs its two schema-inference jobs in
+    the caller's job group; a second engine loading the unchanged
+    files reuses their schemas and runs none."""
+    for f in ("orders_main.csv", "customer_mapping.csv"):
+        (tmp_path / f).write_bytes((workdir / f).read_bytes())
+    _, cold = group_jobs("engine-loads", lambda: _load(spark, tmp_path))
+    warm, jobs = group_jobs("engine-loads-warm",
+                            lambda: _load(spark, tmp_path))
+    assert (cold, jobs) == (4, 0)
+    assert warm.primary().count() == 4

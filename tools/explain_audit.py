@@ -534,14 +534,8 @@ def scan_driver_materialization(df) -> list[str]:
 # ones reuse (fast mode). This audit finds that static signature:
 # group every Exchange in the pre-execution plan by its canonicalized
 # subtree; any group of >= 2 with no ReusedExchange covering it is a
-# runtime-race candidate and must either be pinned (localCheckpoint
-# twin of the oracle's AS MATERIALIZED) or carry an explicit
-# bounded-recompute justification below.
-
-# name -> why the duplicate exchange is an ACCEPTABLE bounded
-# recompute (printed with the audit line, never silently passed)
-_DUP_EXCHANGE_OK: dict[str, str] = {}
-
+# runtime-race candidate and must be pinned (localCheckpoint twin of
+# the oracle's AS MATERIALIZED).
 
 def _iter_plan(node):
     yield node
@@ -550,9 +544,9 @@ def _iter_plan(node):
         yield from _iter_plan(ch.apply(i))
 
 
-def audit_static_reuse(name: str, df) -> tuple[list[str], list[str]]:
-    """Returns (flags, notes). Flags any >= 2 canonicalized-identical
-    Exchange subtrees not covered by a static ReusedExchange."""
+def audit_static_reuse(df) -> list[str]:
+    """Flags any >= 2 canonicalized-identical Exchange subtrees not
+    covered by a static ReusedExchange."""
     jqe = df._jdf.queryExecution()
     plan = jqe.executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
@@ -566,18 +560,10 @@ def audit_static_reuse(name: str, df) -> tuple[list[str], list[str]]:
             dup_groups[key] = dup_groups.get(key, 0) + 1
         elif cls == "ReusedExchangeExec":
             reused.add(node.child().canonicalized().toString())
-    flags, notes = [], []
-    for key, cnt in dup_groups.items():
-        if cnt >= 2 and key not in reused:
-            head = key.strip().splitlines()[0][:90]
-            msg = (f"{cnt}x identical exchange with no static reuse "
-                   f"(AQE-race candidate): {head}")
-            if name in _DUP_EXCHANGE_OK:
-                notes.append(f"dup exchange OK ({_DUP_EXCHANGE_OK[name]})"
-                             f": {head}")
-            else:
-                flags.append(msg)
-    return flags, notes
+    return [f"{cnt}x identical exchange with no static reuse "
+            f"(AQE-race candidate): {key.strip().splitlines()[0][:90]}"
+            for key, cnt in dup_groups.items()
+            if cnt >= 2 and key not in reused]
 
 
 def audit_plan(name: str, plan: str) -> list[str]:
@@ -635,13 +621,13 @@ def main() -> None:
         if mat_bad:
             failures += 1
             flags.extend(mat_bad)
-        reuse_bad, reuse_notes = audit_static_reuse(name, df)
+        reuse_bad = audit_static_reuse(df)
         if reuse_bad:
             failures += 1
             flags.extend(reuse_bad)
         status = " | ".join(flags) if flags else "clean"
         print(f"=== {name}: {status}")
-        for note in win_notes + reuse_notes:
+        for note in win_notes:
             print(f"    {note}")
         if len(sys.argv) > 1:  # detail only when explicitly named
             print(plan)
