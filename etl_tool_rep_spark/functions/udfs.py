@@ -32,9 +32,10 @@ def sigmoid_score(col):
 
 
 def make_hyperplane_sig_udf(planes):
-    """Vectorized random-hyperplane signature: sign bits of P @ v
-    packed into one int64. Same arithmetic as the JVM fold in
-    operators/knn.hyperplane_signature, at numpy speed."""
+    """Vectorized random-hyperplane signature: bit i of the int64 is
+    sign(<v, h_i>) > 0 for the i-th row h_i of ``planes``, so vectors
+    with cosine ~1 agree on almost all bits (a NULL vector stays
+    NULL)."""
     key = ("hyperplane", len(planes), len(planes[0]))
     if key not in _cache:
         P = np.array(planes, dtype=np.float64)          # (bits, dim)

@@ -35,7 +35,12 @@ def connected_components(pairs: DataFrame,
 
     Returns (id, cluster_id) where cluster_id is the minimum vertex id
     reachable from ``id``; isolated vertices are not emitted (callers
-    left-join and coalesce to self). Deterministic for any input."""
+    left-join and coalesce to self). Deterministic for any input.
+
+    The initial label min(self, neighbors) covers one hop and each
+    iteration one more, so a loop cut by ``max_iterations`` labels
+    each vertex with the min id within ``max_iterations + 1`` hops
+    (tier20's `dedup_components_exact` relies on this bound)."""
     edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
              .unionByName(
                  pairs.select(F.col(dst).alias("a"),

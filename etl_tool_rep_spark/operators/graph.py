@@ -1,4 +1,5 @@
-"""Graph analytics: PageRank by distributed power iteration.
+"""Graph analytics: the co-supplier graph every graph key runs on, and
+PageRank by distributed power iteration.
 
 Each iteration is two joins + one aggregation, all keyed by vertex —
 the canonical iterative-Spark shape (same discipline as
@@ -24,6 +25,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import pin
+
+
+def co_supplier_edges(lineitem: DataFrame) -> DataFrame:
+    """The co-supplier graph of ``lineitem``: distinct (a, b) supplier
+    pairs that share an order, each edge in both directions. Keys that
+    want one orientation filter ``a < b``; Catalyst pushes the filter
+    into the join condition.
+
+    (order, supplier) is made distinct BEFORE the self-join: a
+    supplier on m lines of one order would otherwise fan the join out
+    m^2-fold per pair only for the final distinct to collapse it — at
+    sf10 that was the 360M-row transient that OOM'd a 64 g heap
+    (SCALE.md). The edge set is identical."""
+    li = lineitem.select("l_orderkey", "l_suppkey").distinct()
+    x, y = li.alias("x"), li.alias("y")
+    return (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+                   & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
+             .select(F.col("x.l_suppkey").alias("a"),
+                     F.col("y.l_suppkey").alias("b"))
+             .distinct())
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",

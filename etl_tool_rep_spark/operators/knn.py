@@ -72,27 +72,6 @@ def brute_force_topk(queries: DataFrame, candidates: DataFrame,
                     F.col("_cid").alias(cand_id), "score", "rank"))
 
 
-def hyperplane_signature(vec: Column, dim: int, n_bits: int = 16,
-                         seed: int = 42) -> Column:
-    """Random-hyperplane LSH signature for cosine similarity: bit i =
-    sign(<v, h_i>) with h_i a fixed seeded +-1 hyperplane. Vectors
-    with cosine ~1 agree on almost all bits, so equal signatures (or
-    equal signature bands) bucket near-duplicates together.
-
-    Deterministic: hyperplanes derive from a seeded RNG, not runtime
-    randomness — signatures are stable across runs and cluster sizes."""
-    import random
-    rng = random.Random(seed)
-    planes = [[rng.choice((-1.0, 1.0)) for _ in range(dim)]
-              for _ in range(n_bits)]
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        h = F.array(*[F.lit(x) for x in plane])
-        d = dot(vec, h)
-        sig = sig + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
-
-
 def lsh_near_dup_pairs(vectors: DataFrame, vec_id: str, vec_col: str,
                        dim: int, threshold: float = 0.4,
                        n_bits: int = 16, bands: int = 4) -> DataFrame:
@@ -138,8 +117,8 @@ def lsh_near_dup_pairs(vectors: DataFrame, vec_id: str, vec_col: str,
     rng = random.Random(42)
     planes = [[rng.choice((-1.0, 1.0)) for _ in range(dim)]
               for _ in range(n_bits)]
-    # numpy kernel (same seeded planes as the JVM reference form in
-    # hyperplane_signature; dense per-vector compute is the pandas-UDF
+    # numpy kernel over seeded +-1 planes (deterministic across runs
+    # and cluster sizes; dense per-vector compute is the pandas-UDF
     # sweet spot, like the MinHash kernel)
     sig_udf = make_hyperplane_sig_udf(planes)
     base = (vectors.select(F.col(vec_id).alias("_id"),

@@ -146,13 +146,3 @@ def compile_pipeline(df: DataFrame, rules: list[Rule],
             log.warning("rule %r skipped: %s", getattr(rule, "name", rule),
                         exc)
     return work.select(*out_cols)
-
-
-def run_pipeline(df: DataFrame, spec, mappings: Mapping[str, DataFrame],
-                 permissive: bool = False) -> DataFrame:
-    """Parse-if-needed + compile. The declarative front door
-    (Pipeline JSON -> DataFrame), replacing reference main.py:427-430."""
-    from .spec import parse_pipeline
-    rules = spec if isinstance(spec, list) and spec \
-        and not isinstance(spec[0], dict) else parse_pipeline(spec)
-    return compile_pipeline(df, rules, mappings, permissive=permissive)

@@ -1,5 +1,5 @@
 """Oracle-SQL fragments shared by every query built on the exact
-3-gram set of the documents table.
+3-gram set of the documents table, or on the co-supplier graph.
 
 One definition of the trigram universe (tokenize on whitespace,
 distinct word 3-grams per (doc, source block), per-doc gram counts)
@@ -44,3 +44,18 @@ NGRAM_JACCARD_PAIRS_CTES = NGRAM_GRAM_CTES + NGRAM_INTER_UNDIRECTED + r""", pair
       JOIN counts cb ON cb.doc_id = i.id_2
       WHERE i.ni * 1.0 / (ca.n + cb.n - i.ni) >= 0.05
     )"""
+
+# the co-supplier graph (suppliers sharing an order, both directions)
+# the graph oracles walk — the SQL twin of
+# operators/graph.co_supplier_edges. (order, supplier) is made
+# distinct BEFORE the self-join: m duplicate supplier lines per order
+# would fan the join m^2-fold only for the outer DISTINCT to collapse
+# it (at sf10 the raw-lineitem form blew a 40 GB DuckDB temp fence).
+CO_SUPPLIER_EDGES_CTES = """
+    li AS MATERIALIZED (
+      SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
+    edges AS MATERIALIZED (
+      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
+      FROM li l1 JOIN li l2
+        ON l1.l_orderkey = l2.l_orderkey
+       AND l1.l_suppkey <> l2.l_suppkey)"""

@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.graph import co_supplier_edges
 from ..session import local_frame, pin
+from . import shared_sql
 from .registry import query
 
 _HOPS = 4
@@ -37,11 +39,7 @@ _HOPS = 4
 @query(
     "bfs_distances",
     oracle=f"""
-    WITH RECURSIVE edges AS (
-      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-      FROM lineitem l1
-      JOIN lineitem l2 ON l1.l_orderkey = l2.l_orderkey
-                      AND l1.l_suppkey <> l2.l_suppkey),
+    WITH RECURSIVE {shared_sql.CO_SUPPLIER_EDGES_CTES},
     walk(id, d) AS (
       SELECT (SELECT MIN(l_suppkey) FROM lineitem), 0
       UNION
@@ -79,19 +77,8 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     graphs. No driver probes — a fixed {hops}-round loop whose empty
     late rounds cost one empty-exchange job each.
     """
-    # pre-distinct (order, supplier) BEFORE the self-join: the same
-    # m^2 per-order fan-out guard kcore_decomposition gained in r12
-    # (SCALE.md sf10 OOM lesson); edge set identical, plan transient
-    # bounded by distinct pairs instead of raw line counts
-    li = (load(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    e = pin(li.alias("x").join(
-               li.alias("y"),
-               (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-               & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-            .select(F.col("x.l_suppkey").alias("a"),
-                    F.col("y.l_suppkey").alias("b"))
-            .distinct())
+    li = load(spark, sf_dir, "lineitem")
+    e = pin(co_supplier_edges(li))
     src = li.agg(F.min("l_suppkey")).first()[0]
     settled = local_frame(spark, [(src, 0)], "id long, dist int")
     frontier = settled

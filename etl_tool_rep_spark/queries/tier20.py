@@ -8,11 +8,11 @@ LLM-data-pipeline surface mandated by BASELINE.json.
 * `dedup_components_exact` upgrades the connected-components story:
   `near_dedup_clusters` (tier 3) is rows-only because MinHash
   candidates are sketch-dependent — here the SAME iterative
-  min-label-propagation loop runs over the EXACT 3-gram-Jaccard pair
-  graph and is hash-matched against a DuckDB RECURSIVE CTE. After
-  bfs_distances this is the second iterative operator with an exact
-  SQL oracle, and the one that certifies the dedup clustering loop
-  itself.
+  min-label-propagation loop (`operators/cluster.connected_components`)
+  runs over the EXACT 3-gram-Jaccard pair graph and is hash-matched
+  against a DuckDB RECURSIVE CTE. After bfs_distances this is the
+  second iterative operator with an exact SQL oracle, and the one
+  that certifies the dedup clustering loop itself.
 * `rolling_active_users` is the trailing-24 h distinct-user series —
   the operator behind every DAU/WAU dashboard. Spark has no
   COUNT(DISTINCT) OVER a range frame; the scalable form is the
@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ..operators.cluster import connected_components
+from ..operators.graph import co_supplier_edges
 from ..session import pin
 from . import shared_sql
 from .registry import query
@@ -64,48 +66,32 @@ _PAIR_CTE = shared_sql.NGRAM_JACCARD_PAIRS_CTES
 def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (min-label within {hops} hops) over the
     EXACT 3-gram-Jaccard near-dup pair graph, hash-matched against a
-    DuckDB RECURSIVE CTE — certifying the same iterative label-
-    propagation loop `near_dedup_clusters` runs on MinHash candidates
-    (rows-only there, because sketch candidates aren't
-    SQL-reproducible; the exact pair graph is).
+    DuckDB RECURSIVE CTE. It runs `near_dedup_clusters`' own loop,
+    `operators/cluster.connected_components`, so the oracle certifies
+    the dedup clustering loop itself (rows-only there, because sketch
+    candidates aren't SQL-reproducible; the exact pair graph is).
 
-    Equivalence: k rounds of v.lbl = min(v.lbl, min(neighbor lbls))
-    propagate a label exactly k edges per round, so after H rounds
-    each node holds the min label reachable within <= H hops — the
-    same quantity the CTE's bounded walk aggregates. Both sides use
-    the bound H={hops}, so parity holds EVEN IF a component's
-    diameter exceeds it (both would report the same partial labels).
-
-    Scale: the pair graph is orders of magnitude smaller than the
-    corpus (near-dup candidates only); each round is one
-    (edges join labels) shuffle + a min-aggregate, lineage-truncated
-    per round like operators/graph.py; durability follows session.pin.
+    Equivalence: the loop's initial label min(self, neighbors) is hop
+    1 and each round v.lbl = min(v.lbl, min(neighbor lbls)) adds one
+    more, so H - 1 rounds leave each node the min label reachable
+    within <= H hops — the same quantity the CTE's bounded walk
+    aggregates. Both sides use the bound H={hops}, so parity holds
+    EVEN IF a component's diameter exceeds it (both report the same
+    partial labels); a round that changes no label ends the loop
+    early, since later rounds could not change one either.
     """
     docs = load(spark, sf_dir, "documents")
     # truncate the pair pipeline's lineage BEFORE the symmetrizing
     # union: pairs feeds both union branches, and without this the
     # gram self-join + jaccard filter (the dominant cost) would run
-    # twice when the eager edge checkpoint materializes
+    # twice when the loop's eager edge checkpoint materializes
     pairs = pin(D.ngram_jaccard_pairs(docs, min_jaccard=0.05)
                  .select("id_1", "id_2"), eager=False)
-    edges = pin(pairs.select(F.col("id_1").alias("a"),
-                             F.col("id_2").alias("b"))
-                .unionByName(pairs.select(F.col("id_2").alias("a"),
-                                          F.col("id_1").alias("b"))))
-    lbl = (edges.select(F.col("a").alias("id")).distinct()
-           .select("id", F.col("id").alias("lbl")))
-    for _ in range(_COMP_HOPS):
-        nb_min = (edges.join(lbl.select(F.col("id").alias("a"),
-                                        F.col("lbl").alias("_nl")), "a")
-                  .groupBy(F.col("b").alias("id"))
-                  .agg(F.min("_nl").alias("_m")))
-        lbl = pin(lbl.join(nb_min, "id", "left")
-                  .select("id", F.least(F.col("lbl"),
-                                        F.coalesce(F.col("_m"),
-                                                   F.col("lbl")))
-                           .alias("lbl")))
-    return lbl.select(F.col("id").cast("bigint").alias("doc_id"),
-                      F.col("lbl").cast("bigint").alias("component"))
+    cc = connected_components(pairs, "id_1", "id_2",
+                              max_iterations=_COMP_HOPS - 1)
+    return cc.select(F.col("id").cast("bigint").alias("doc_id"),
+                     F.col("cluster_id").cast("bigint")
+                      .alias("component"))
 
 
 dedup_components_exact.__doc__ = dedup_components_exact.__doc__.format(
@@ -188,13 +174,9 @@ def _pr_round_sql(k: int) -> str:
     )"""
 
 
-_PR_ORACLE = """
-    WITH edges AS MATERIALIZED (
-      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-      FROM lineitem l1
-      JOIN lineitem l2 ON l1.l_orderkey = l2.l_orderkey
-                      AND l1.l_suppkey <> l2.l_suppkey
-    ), deg AS MATERIALIZED (
+_PR_ORACLE = f"""
+    WITH {shared_sql.CO_SUPPLIER_EDGES_CTES},
+    deg AS MATERIALIZED (
       SELECT a, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY a
     ), nodes AS MATERIALIZED (
       SELECT a AS id FROM deg
@@ -240,19 +222,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round (``session.pin``). N arrives as
     a broadcast 1-row aggregate, never a driver action.
     """
-    # pre-distinct (order, supplier) BEFORE the self-join — same
-    # m^2-fan-out guard kcore_decomposition gained in r12 (a supplier
-    # on m lines of one order otherwise inflates the join transient
-    # m^2-fold only for the post-join DISTINCT to collapse it; the
-    # sf10 OOM lesson in SCALE.md). Edge set unchanged.
-    li = (load(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    x, y = li.alias("x"), li.alias("y")
-    edges = (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                    & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-              .select(F.col("x.l_suppkey").alias("a"),
-                      F.col("y.l_suppkey").alias("b"))
-              .distinct())
+    edges = co_supplier_edges(load(spark, sf_dir, "lineitem"))
     deg = edges.groupBy("a").agg(F.count(F.lit(1)).cast("bigint")
                                   .alias("d"))
     # fold the (static) out-degree into the edge list ONCE — each

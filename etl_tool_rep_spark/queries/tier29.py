@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.graph import co_supplier_edges
 from ..session import pin
+from . import shared_sql
 from .registry import query
 
 _KCORE_K = 3
@@ -69,18 +71,7 @@ def _kcore_oracle() -> str:
         f"SELECT node, {r} AS r FROM p{r}"
         for r in range(1, _KCORE_ROUNDS + 1))
     return f"""
-    WITH li AS MATERIALIZED (
-      -- pre-distinct (order, supplier) BEFORE the self-join, same as
-      -- the Spark side: m duplicate supplier lines per order would
-      -- fan the join m^2-fold only for the outer DISTINCT to collapse
-      -- it (at sf10 the raw-lineitem form was the temp hog that blew
-      -- the 40 GB fence before the peel even started)
-      SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-      FROM li l1 JOIN li l2
-        ON l1.l_orderkey = l2.l_orderkey
-       AND l1.l_suppkey <> l2.l_suppkey),
+    WITH {shared_sql.CO_SUPPLIER_EDGES_CTES},
     nodes AS MATERIALIZED (SELECT DISTINCT a AS node FROM edges),
     d0 AS MATERIALIZED (
       SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS deg
@@ -111,28 +102,16 @@ def kcore_decomposition(spark: SparkSession,
     Both engines execute the SAME bounded-round semantics, so the
     result is exact even if the peel has not fully converged.
 
-    Scale: the edge build is the one fact-table self-join (shared
-    with `bfs_distances`, order-key co-partitioned); each peel round
+    Scale: the edge build is the one fact-table self-join
+    (`operators/graph.co_supplier_edges`, shared with every
+    co-supplier graph key, order-key co-partitioned); each peel round
     is a semi-join of the edge list against the surviving node set
     followed by a map-side-combinable degree count. Rounds are a
     fixed constant; on a cluster each round's frontier shrinks
     monotonically, and `pin` truncates the plan exactly
     like the other iterative operators in `operators/graph.py`.
     """
-    # pre-distinct (order, supplier) BEFORE the self-join: a supplier
-    # appearing on m lines of one order would otherwise fan the join
-    # out m^2-fold per pair only for the final distinct to collapse
-    # it — at sf10 this was the 360M-row transient that OOM'd a 64 g
-    # heap (SCALE.md). Edge set is identical (the oracle's DISTINCT
-    # collapses the same duplicates).
-    li = (load(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    x, y = li.alias("x"), li.alias("y")
-    edges = pin(x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                       & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-                .select(F.col("x.l_suppkey").alias("a"),
-                        F.col("y.l_suppkey").alias("b"))
-                .distinct())
+    edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem")))
     deg0 = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree0"))
     # r13 DELTA PEEL — the same restructure the DuckDB oracle got in

@@ -26,8 +26,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.graph import co_supplier_edges
 from ..operators.rank import global_row_number, grouped_row_number
 from ..session import pin
+from . import shared_sql
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -66,11 +68,7 @@ def _mis_oracle() -> str:
         sel.append(f"SELECT node, {r} AS mis_round FROM mis{r}")
         prev_und = f"und{r}"
     return f"""
-    WITH edges AS MATERIALIZED (
-      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-      FROM lineitem l1 JOIN lineitem l2
-        ON l1.l_orderkey = l2.l_orderkey
-       AND l1.l_suppkey <> l2.l_suppkey),
+    WITH {shared_sql.CO_SUPPLIER_EDGES_CTES},
     nodes AS MATERIALIZED (
       SELECT DISTINCT a AS node FROM edges),
     und0 AS MATERIALIZED (
@@ -106,16 +104,7 @@ def maximal_independent_set(spark: SparkSession,
     the fixed unroll covers the bulk and the output marks what
     remains undecided (NULL round, in_mis false).
     """
-    # pre-distinct before the self-join (kcore's r12 m^2-fan-out
-    # guard; edge set identical)
-    li = (load(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    x, y = li.alias("x"), li.alias("y")
-    edges = pin(x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-                       & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
-                .select(F.col("x.l_suppkey").alias("a"),
-                        F.col("y.l_suppkey").alias("b"))
-                .distinct())
+    edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem")))
     nodes = edges.select(F.col("a").alias("node")).distinct()
     und = nodes.withColumn(
         "pri", F.expr("(node * 2654435761) % 2147483648"

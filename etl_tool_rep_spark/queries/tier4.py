@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.graph import co_supplier_edges
 from ..session import pin
+from . import shared_sql
 from .registry import query
 
 _BITS = 10
@@ -80,20 +82,18 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "triangle_count",
-    oracle="""
-    WITH edges AS (
-      SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-      FROM lineitem l1
-      JOIN lineitem l2 ON l1.l_orderkey = l2.l_orderkey
-                      AND l1.l_suppkey < l2.l_suppkey),
+    oracle=f"""
+    WITH {shared_sql.CO_SUPPLIER_EDGES_CTES},
+    oriented AS (SELECT a, b FROM edges WHERE a < b),
     tri AS (
-      SELECT COUNT(*) AS nt FROM edges e1
-      JOIN edges e2 ON e1.b = e2.a
-      JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b)
+      SELECT COUNT(*) AS nt FROM oriented e1
+      JOIN oriented e2 ON e1.b = e2.a
+      JOIN oriented e3 ON e3.a = e1.a AND e3.b = e2.b)
     SELECT CAST((SELECT nt FROM tri) AS BIGINT) AS n_triangles,
-           CAST((SELECT COUNT(*) FROM edges) AS BIGINT) AS n_edges,
+           CAST((SELECT COUNT(*) FROM oriented) AS BIGINT) AS n_edges,
            CAST((SELECT COUNT(DISTINCT a) FROM
-                 (SELECT a FROM edges UNION ALL SELECT b FROM edges) u(a))
+                 (SELECT a FROM oriented UNION ALL
+                  SELECT b FROM oriented) u(a))
                 AS BIGINT) AS n_nodes
     """,
 )
@@ -125,27 +125,21 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint regions short-circuit to 0 on the range test. With no
     fixed global row width there is no span cap, so the old driver
     min/max strategy probe AND the array_intersect fallback are both
-    gone — zero driver actions, one strategy. Adjacency
-    sides flow through plain equi-joins: Catalyst/AQE broadcasts
-    them while they fit (local fixtures) and falls back to shuffle
-    joins at cluster scale. Edge construction is a per-order pair
-    expansion on the orderkey shuffle (baskets <= 7 suppliers),
-    pinned once for the three consuming branches.
+    gone — zero driver actions, one strategy. The edges are the
+    shared co-supplier graph (`operators/graph.co_supplier_edges`)
+    oriented a < b — Catalyst pushes the filter into the self-join
+    condition — pinned once for the three consuming branches.
+
+    The signature table (n_nodes rows) joins both edge ends as a
+    broadcast hint: the pinned self-join keeps Catalyst's inner-join
+    size estimate (the product of its sides: 2.7 TiB at sf0.1 for
+    450k edges), so nothing derived from it broadcasts by size, and
+    the sort-merge joins that leaves took sf0.1 runs from 4.9 to
+    6.3 s. A dense graph's table grows as n_nodes^2 / 8 bytes
+    (~1.25 GB at 100k suppliers); past that the hint must go.
     """
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # per-order pair expansion (one shuffle on orderkey, map-side
-    # combinable collect_set; baskets are <=7 suppliers) instead of a
-    # row-level self-join — same distinct oriented edge set
-    pairs_expr = F.expr("""
-        flatten(transform(_s, x ->
-            filter(transform(_s, y ->
-                       if(x < y, struct(x AS a, y AS b), null)),
-                   p -> p IS NOT NULL)))""")
-    edges = (li.groupBy("l_orderkey")
-               .agg(F.collect_set("l_suppkey").alias("_s"))
-               .select(F.explode(pairs_expr).alias("_p"))
-               .select("_p.a", "_p.b").distinct())
-    edges = pin(edges)
+    edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem"))
+                .filter(F.col("a") < F.col("b")))
 
     adj = edges.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
     # interval bitset: row = (lo word, words[lo..hi]) covering only
@@ -219,8 +213,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"k": [int(total)]})
 
     # every edge's a has outgoing edges (inner join safe); b may not
-    tri = (edges.join(sa, "a")
-           .join(sb, "b", "left")
+    tri = (edges.join(F.broadcast(sa), "a")
+           .join(F.broadcast(sb), "b", "left")
            .select("_la", "_wa", "_lb", "_wb")
            .mapInPandas(tri_batches, "k long")
            .agg(F.sum("k").cast("bigint").alias("n_triangles")))

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..operators.graph import pagerank
+from ..operators.graph import co_supplier_edges, pagerank
 from ..operators.sketches import heavy_hitters
 from .registry import query
 
@@ -185,17 +185,8 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, edges in both directions). Convergence and mass
     conservation are asserted in tests against a numpy power
     iteration on the same graph."""
-    # pre-distinct before the self-join (kcore's r12 m^2-fan-out
-    # guard; the pair set after DISTINCT is identical)
-    li = (load(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    l1 = li.toDF("ok", "a")
-    l2 = li.toDF("ok2", "b")
-    pairs = (l1.join(l2, (F.col("ok") == F.col("ok2"))
-                     & (F.col("a") != F.col("b")))
-               .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-               .distinct())
-    return (pagerank(pairs, damping=0.85, max_iterations=30)
+    edges = co_supplier_edges(load(spark, sf_dir, "lineitem"))
+    return (pagerank(edges, "a", "b", damping=0.85, max_iterations=30)
             .select(F.col("id").alias("supplier"),
                     F.round("rank", 7).alias("rank")))
 

@@ -101,6 +101,10 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
+    # StreamingQuery.stop() waits this long for a running micro-batch,
+    # then throws (Spark's default, 0, waits forever): a foreachBatch
+    # handler that never returns cannot hang streaming.stream.drain
+    "spark.sql.streaming.stopTimeout": "60s",
 }
 
 

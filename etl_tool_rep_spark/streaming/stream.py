@@ -184,7 +184,10 @@ def drain(writer: DataStreamWriter, timeout_s: int) -> StreamingQuery:
     ``awaitTermination(timeout)`` re-raises it); a query still running
     after ``timeout_s`` raises ``TimeoutError``. Either way the query
     is stopped first, so no caller sees a partial answer or leaves a
-    query active."""
+    query active. Stopping waits for the running micro-batch for at
+    most ``spark.sql.streaming.stopTimeout`` (a session default); a
+    batch that outlives it also raises ``TimeoutError``, and its
+    handler keeps running in the background until it returns."""
     q = writer.trigger(availableNow=True).start()
     try:
         if not q.awaitTermination(timeout_s):
@@ -192,7 +195,18 @@ def drain(writer: DataStreamWriter, timeout_s: int) -> StreamingQuery:
                 f"streaming query {q.name or q.id} did not finish within "
                 f"{timeout_s}s — partial results discarded")
     finally:
-        q.stop()
+        try:
+            q.stop()
+        except Exception as exc:
+            # py4j's Py4JJavaError carries the Java exception
+            java = getattr(exc, "java_exception", None)
+            if (java is None or java.getClass().getName()
+                    != "java.util.concurrent.TimeoutException"):
+                raise
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not stop within "
+                "spark.sql.streaming.stopTimeout — its micro-batch is "
+                "still running") from exc
     return q
 
 

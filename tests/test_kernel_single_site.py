@@ -75,6 +75,31 @@ def _gini(n) -> bool:
             and _callee(n.right.left) == "cast")
 
 
+def _mentions(node, column: str) -> bool:
+    return any(isinstance(c, ast.Constant) and isinstance(c.value, str)
+               and column in c.value for c in ast.walk(node))
+
+
+def _compares(node, op, column: str) -> bool:
+    return any(isinstance(c, ast.Compare) and isinstance(c.ops[0], op)
+               and all(_mentions(s, column)
+                       for s in (c.left, *c.comparators))
+               for c in ast.walk(node))
+
+
+def _co_supplier_edges(n) -> bool:
+    # x.join(y, (..l_orderkey == ..l_orderkey)
+    #           & (..l_suppkey != ..l_suppkey))...distinct()
+    if not (isinstance(n, ast.Call) and _callee(n) == "distinct"
+            and isinstance(n.func, ast.Attribute)):
+        return False
+    return any(isinstance(j, ast.Call) and _callee(j) == "join"
+               and len(j.args) >= 2
+               and _compares(j.args[1], ast.Eq, "l_orderkey")
+               and _compares(j.args[1], ast.NotEq, "l_suppkey")
+               for j in ast.walk(n.func.value))
+
+
 KERNELS = {
     "MinHash band fold": (
         _band_fold, "etl_tool_rep_spark/queries/tier21.py:_band_rows"),
@@ -87,6 +112,9 @@ KERNELS = {
         _pixel_lcg, "etl_tool_rep_spark/operators/multimodal.py:pixel_grid"),
     "Gini gain": (
         _gini, "etl_tool_rep_spark/queries/tier30.py:_gini_gain_q.gini"),
+    "co-supplier edge build": (
+        _co_supplier_edges,
+        "etl_tool_rep_spark/operators/graph.py:co_supplier_edges"),
 }
 
 

@@ -4,6 +4,7 @@ EXACTLY the batch answers over a static file set (availableNow trigger
 themselves DuckDB-verified, so frame-equality here chains the oracle
 through to the streaming forms."""
 
+import threading
 import time
 
 import pytest
@@ -122,4 +123,36 @@ def test_drain_timeout_raises_and_stops(spark, event_stream_dir, tmp_path):
               .option("checkpointLocation", str(tmp_path / "ckpt")))
     with pytest.raises(TimeoutError, match="did not finish within 2s"):
         drain(writer, timeout_s=2)
+    assert spark.streams.active == []
+
+
+def test_drain_raises_when_stop_times_out(spark, event_stream_dir,
+                                          tmp_path):
+    """A micro-batch that outlives ``timeout_s`` AND the stop timeout
+    must not hang ``drain``: the stop's Java ``TimeoutException``
+    surfaces as ``TimeoutError`` while the handler is still running."""
+    returned = threading.Event()
+
+    def stuck(batch_df, batch_id):
+        time.sleep(10)
+        returned.set()
+
+    key = "spark.sql.streaming.stopTimeout"
+    old = spark.conf.get(key)
+    # read when the query starts, so set it before drain starts one
+    spark.conf.set(key, "1s")
+    try:
+        stream = read_event_stream(spark, event_stream_dir, fmt="parquet")
+        writer = (stream.writeStream.foreachBatch(stuck)
+                  .option("checkpointLocation", str(tmp_path / "ckpt")))
+        with pytest.raises(TimeoutError, match="did not stop within"):
+            drain(writer, timeout_s=2)
+        assert not returned.is_set()
+    finally:
+        spark.conf.set(key, old)
+        # let the abandoned micro-batch end before the next test
+        assert returned.wait(60)
+        deadline = time.monotonic() + 30
+        while spark.streams.active and time.monotonic() < deadline:
+            time.sleep(0.2)
     assert spark.streams.active == []

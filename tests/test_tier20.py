@@ -2,7 +2,8 @@
 
 * dedup_components_exact: a 3-doc near-dup chain (A~B~C, A!~C)
   collapses to one component labeled by the min doc_id; an isolated
-  pair forms its own; non-duplicated docs are absent.
+  pair forms its own; non-duplicated docs are absent; on a chain
+  longer than the hop bound each doc keeps the min within the bound.
 * rolling_active_users: exact trailing-24h distinct counts on a
   hand-placed timeline, including the window boundary at exactly
   23 hours back (inclusive) and 24 hours back (excluded).
@@ -44,6 +45,41 @@ def test_components_chain_and_island(spark, chain_docs, monkeypatch):
     assert got[10] == got[11] == got[12] == 10   # chain collapses
     assert got[20] == got[21] == 20              # island pair
     assert 30 not in got                         # singleton absent
+
+
+def test_components_hop_bound_on_long_chain(spark, monkeypatch):
+    """On a chain longer than the hop bound, each doc's component is
+    the min doc_id within ``_COMP_HOPS`` hops (what the oracle's
+    bounded walk computes), not the chain's minimum: no fixture graph
+    has a diameter above the bound, so only a chain shows an
+    off-by-one in the loop's round count."""
+    import etl_tool_rep_spark.queries.tier20 as t20
+    # doc k = block k + block k+1 (3 words each): neighbours share
+    # exactly the 3-gram of their common block (Jaccard 1/7), docs two
+    # apart share none; the minimum id sits at one end
+    ids = [1, 8, 3, 10, 5, 7, 2, 9, 4, 6]
+
+    def block(k):
+        return f"a{k} b{k} c{k}"
+
+    docs = spark.createDataFrame(
+        [(d, f"{block(k)} {block(k + 1)}", "en", "s", 0)
+         for k, d in enumerate(ids)],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long")
+    monkeypatch.setattr(t20, "load", lambda s, d, n: docs)
+    want = {}
+    for k, d in enumerate(ids):
+        seen, frontier = {k}, {k}
+        for _ in range(t20._COMP_HOPS):
+            frontier = {j for i in frontier for j in (i - 1, i + 1)
+                        if 0 <= j < len(ids)} - seen
+            seen |= frontier
+        want[d] = min(ids[j] for j in seen)
+    got = {r["doc_id"]: r["component"] for r in
+           QUERIES["dedup_components_exact"](spark, "ignored").collect()}
+    assert got == want
+    assert got[ids[-1]] != min(ids)
 
 
 def test_rolling_active_users_boundaries(spark, monkeypatch):
