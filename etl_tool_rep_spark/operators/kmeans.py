@@ -17,7 +17,7 @@ reproducible — no seeded RNG in the data path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -80,16 +80,3 @@ def kmeans_assign(vectors: DataFrame, id_col: str, vec_col: str,
                      for i in range(k)]
 
     return assigned.select(id_col, "cluster", "sq_dist")
-
-
-def kmeans_inertia_per_iter(vectors: DataFrame, id_col: str,
-                            vec_col: str, k: int = 8,
-                            n_iter: int = 4) -> list[float]:
-    """Total within-cluster squared distance after each iteration —
-    the monotone-decrease property tests assert."""
-    out = []
-    for i in range(1, n_iter + 1):
-        a = kmeans_assign(vectors, id_col, vec_col, k=k, n_iter=i)
-        out.append(a.agg(F.sum("sq_dist").alias("s"))
-                    .collect()[0]["s"])
-    return out

@@ -132,21 +132,6 @@ FEATURES_SCHEMA = T.StructType([
 ])
 
 
-def attach_payload(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
-    """Model a raw multimodal table: binary payload column + typed
-    metadata struct (content type, size, digest)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return df.select(
-        F.col(id_col),
-        payload.alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("content_type"),
-            F.octet_length(payload).cast("long").alias("n_bytes"),
-            F.sha2(payload, 256).alias("sha256"),
-        ).alias("meta"))
-
-
 def write_payload_files(df: DataFrame, out_dir: str,
                         id_col: str = "doc_id") -> int:
     """Materialize one real ``.png`` FILE per id under ``out_dir`` —
@@ -226,22 +211,6 @@ def decode_pixel_stats(df: DataFrame) -> DataFrame:
 
     return df.select("doc_id", "payload").mapInPandas(
         stats, schema=PIXEL_STATS_SCHEMA)
-
-
-def decode_image(payload: bytes) -> tuple[bytes, int, int, int]:
-    """Decode an image payload -> (pixels, width, height, channels).
-    PNG decodes via the pure-stdlib codec; other formats need PIL
-    (absent in this container)."""
-    payload = bytes(payload)
-    if payload[:8] == _PNG_SIG:
-        return png.decode_png(payload)
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "non-PNG image decode requires PIL; not available in this "
-            "environment (PNG decodes natively via operators/png.py)")
-    import io
-    img = Image.open(io.BytesIO(payload))
-    return img.tobytes(), img.width, img.height, len(img.getbands())
 
 
 def resize_image(payload: bytes, width: int, height: int) -> bytes:

@@ -22,18 +22,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from .registry import query
-
-
-def _dec(c):
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast("decimal(18,4)")
-
-
-def _REV():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-_REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
+from .tier1 import _dec
+from .tpch_like import _REV, _REV_DEC
 
 # q1 salt fan-out: 1024 partials per group bounds each long partial
 # sum to < 2^63 through ~sf1e5 (see tpch_q1_pricing docstring)

@@ -17,17 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
 
 
-def _shuffle_width_default() -> int:
-    """Shuffle width tracks the declared core count (floor 16).
-    Tolerates a non-numeric SPARK_GRAFT_CPUS instead of failing every
-    import with a bare ValueError (r13 ADVICE)."""
-    try:
-        return max(int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32"),
-                   16)
-    except ValueError:
-        return 32
-
-
 _MEMINFO = "/proc/meminfo"
 
 
@@ -58,14 +47,6 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # r13: scale-adaptive instead of a hard-coded 32 — follow the
-    # provisioned core count when the harness declares it (the
-    # driver benches at several core counts; shuffle width should
-    # track them), floor 16 so tiny-core runs keep AQE coalescing
-    # headroom, and the 32 default stands elsewhere. On a cluster,
-    # override via spark-submit --conf (partitions should then track
-    # data volume, not this local heuristic).
-    "spark.sql.shuffle.partitions": str(_shuffle_width_default()),
     # 64 MiB input splits keep ~100 TB scans at ~1.6M tasks w/ AQE
     # coalescing; at local SF it just avoids tiny-partition overhead.
     "spark.sql.files.maxPartitionBytes": "134217728",
@@ -113,7 +94,9 @@ def get_spark(app_name: str = "etl_tool_rep_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the session. ``master`` defaults to
     ``local[$SPARK_GRAFT_CPUS]`` locally; on a cluster leave None and
-    let spark-submit decide."""
+    let spark-submit decide. The shuffle width is the master's core
+    count (``defaultParallelism``) unless ``extra_conf`` or the launch
+    conf (spark-submit ``--conf``) sets one."""
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -131,7 +114,11 @@ def get_spark(app_name: str = "etl_tool_rep_spark",
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    width = "spark.sql.shuffle.partitions"
+    if width not in conf and not sc.getConf().contains(width):
+        spark.conf.set(width, str(sc.defaultParallelism))
     return spark
 
 

@@ -161,22 +161,14 @@ def test_read_excel_gated_without_openpyxl(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal decode/resize (PIL gate)
+# Multimodal resize (PIL gate)
 # ---------------------------------------------------------------------------
 
 class _FakeImg:
     format = "JPEG"
-    width = 2
-    height = 1
 
     def __init__(self, data):
         self.data = data
-
-    def tobytes(self):
-        return self.data
-
-    def getbands(self):
-        return ("L",)
 
     def resize(self, size):
         self.size = size
@@ -195,10 +187,8 @@ def fake_pil(monkeypatch):
     return image_mod
 
 
-def test_decode_and_resize_with_fake_pil(fake_pil):
+def test_resize_with_fake_pil(fake_pil):
     # non-PNG payloads route through the (mocked) PIL path
-    pixels, w, h, ch = multimodal.decode_image(b"pixels")
-    assert (pixels, w, h, ch) == (b"pixels", 2, 1, 1)
     out = multimodal.resize_image(b"pixels", 4, 4)
     assert out == b"resized:pixels"
 
@@ -206,8 +196,6 @@ def test_decode_and_resize_with_fake_pil(fake_pil):
 def test_multimodal_gated_without_pil():
     if multimodal._HAS_PIL:  # pragma: no cover - env-dependent
         pytest.skip("PIL installed here")
-    with pytest.raises(NotImplementedError, match="PIL"):
-        multimodal.decode_image(b"x")
     with pytest.raises(NotImplementedError, match="PIL"):
         multimodal.resize_image(b"x", 2, 2)
 

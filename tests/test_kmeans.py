@@ -4,14 +4,19 @@ monotone inertia, full coverage, deterministic reruns."""
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
-from etl_tool_rep_spark.operators.kmeans import (
-    kmeans_assign, kmeans_inertia_per_iter)
+from etl_tool_rep_spark.operators.kmeans import kmeans_assign
+
+
+def _inertia_per_iter(vectors, k, n_iter):
+    """Total within-cluster squared distance after each iteration."""
+    return [kmeans_assign(vectors, "vec_id", "embedding", k=k, n_iter=i)
+            .agg(F.sum("sq_dist")).collect()[0][0]
+            for i in range(1, n_iter + 1)]
 
 
 def test_inertia_monotone_decreasing(spark, sf_dir):
     em = load(spark, sf_dir, "embeddings")
-    inertia = kmeans_inertia_per_iter(em, "vec_id", "embedding",
-                                      k=4, n_iter=3)
+    inertia = _inertia_per_iter(em, k=4, n_iter=3)
     assert all(b <= a * (1 + 1e-9)
                for a, b in zip(inertia, inertia[1:])), inertia
 

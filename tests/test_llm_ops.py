@@ -11,8 +11,7 @@ from etl_tool_rep_spark.operators import (brute_force_topk, exact_dedup,
                                           minhash_candidate_pairs,
                                           ngram_jaccard_pairs,
                                           simhash_candidate_pairs)
-from etl_tool_rep_spark.operators.multimodal import (attach_payload,
-                                                     extract_features)
+from etl_tool_rep_spark.operators.multimodal import extract_features
 
 BASE = ("the quick brown fox jumps over the lazy dog and then runs far "
         "away into the deep dark forest to hide from the angry farmer")
@@ -178,8 +177,9 @@ def test_lsh_near_dup_recall(spark, sf_dir):
 
 
 def test_multimodal_features_deterministic(docs):
-    out1 = extract_features(attach_payload(docs)).orderBy("doc_id")
-    out2 = extract_features(attach_payload(docs)).orderBy("doc_id")
+    raw = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
+    out1 = extract_features(raw).orderBy("doc_id")
+    out2 = extract_features(raw).orderBy("doc_id")
     r1 = [tuple(r) for r in out1.collect()]
     r2 = [tuple(r) for r in out2.collect()]
     assert r1 == r2

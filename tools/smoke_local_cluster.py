@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""local-cluster smoke of the file-touching keys (round-11 verdict
-ask #7). Every prior run used local[32] — ONE JVM, where an
-accidental driver-only-filesystem or closure-serialization assumption
-in the binaryFile / lakehouse / streaming families could hide.
+"""local-cluster smoke of the file-touching keys, a manual check.
+Local mode runs everything in ONE JVM, where an accidental
+driver-only-filesystem or closure-serialization assumption in the
+binaryFile / lakehouse / streaming families could hide.
 ``local-cluster[2,2,8192]`` puts the two executors in SEPARATE JVM
 processes (still one machine, shared FS — matching the repo's
 local-filesystem lakehouse contract) and would surface:
@@ -15,8 +15,8 @@ local-filesystem lakehouse contract) and would surface:
 
 Each key must return the same ROW COUNT as a plain local[4] run in
 the same process pass (full value hashes are the sweep's job — this
-is an execution-model smoke, run per round on the ~30 file-touching
-keys).
+is an execution-model smoke over the ~30 file-touching keys; run it
+by hand after changing how those keys read or write files).
 
     python tools/smoke_local_cluster.py [names...]
 """
@@ -72,11 +72,8 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR",
                             "/root/testdata/sf0.01")
-    if sys.argv[1:] == ["--all"]:       # close_round.py: whole registry
-        names = sorted(QUERIES)
-    else:
-        names = sys.argv[1:] or sorted(
-            k for k in QUERIES if re.search(_PATTERN, k))
+    names = sys.argv[1:] or sorted(
+        k for k in QUERIES if re.search(_PATTERN, k))
     print(f"== local[4] baseline pass ({len(names)} keys, {sf_dir})")
     base = run_pass("local[4]", sf_dir, names)
     print("== local-cluster[2,2,8192] pass (2 executor JVMs)")
