@@ -187,8 +187,9 @@ def fake_pil(monkeypatch):
     return image_mod
 
 
-def test_resize_with_fake_pil(fake_pil):
-    # non-PNG payloads route through the (mocked) PIL path
+def test_decode_and_resize_with_fake_pil(fake_pil):
+    # non-PNG payloads are decoded, resized and re-encoded through the
+    # (mocked) PIL path
     out = multimodal.resize_image(b"pixels", 4, 4)
     assert out == b"resized:pixels"
 
