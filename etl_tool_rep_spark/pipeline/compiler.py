@@ -12,19 +12,25 @@ Reproduces the semantics of the reference's ``apply_rules_engine``
 * Lookup (main.py:159-171) is a string-coerced (both sides
   ``astype(str)``, main.py:168-169), last-duplicate-wins
   (``dict(zip(...))``, main.py:168), miss->NULL broadcast equi-join.
-  Faithful Spark plan: dedup the mapping, read as one partition, with a
-  row_number window over a load-order column (descending -> last wins;
-  no shuffle), cast both keys to string, left join with an explicit
-  ``F.broadcast`` hint. Mapping tables are small dimension tables by
-  construction, so the broadcast never shuffles the fact table — at
-  100 TB the probe side streams map-side only.
+  Faithful Spark plan: read the mapping as one partition and keep,
+  per key, ``max_by(value, load order)`` (last wins; no window, no
+  shuffle), then left join with an explicit ``F.broadcast`` hint.
+  Keys compare in their own family where string coercion cannot
+  change the result: integral vs integral as ``bigint``, string vs
+  string as is (int -> string is injective and keeps equality); any
+  other pair casts both sides to string, so DOUBLE 1.0 still misses
+  key '1' (SURVEY.md §2.1 pt 5). Mapping tables are small dimension
+  tables by construction, so the broadcast never shuffles the fact
+  table — at 100 TB the probe side streams map-side only.
 * Conditional (main.py:148-157) is ``CASE WHEN <expr> THEN lit
   ELSE lit END``; NULL-valued conditions fall to ELSE in both pandas
   eval and SQL (SURVEY.md §2.1 pt 6) — no special handling.
 * Per-rule failure isolation (main.py:141,173-174): in
   ``permissive=True`` mode a rule that fails to compile/validate is
   dropped with a warning, matching the reference's per-rule
-  try/except; default is strict (fail fast at compile time).
+  try/except (each Conditional is analyzed against the primary on
+  its own). Default is strict: fail fast at compile time, where the
+  select over the primary analyzes every rule at once.
 """
 
 from __future__ import annotations
@@ -32,8 +38,10 @@ from __future__ import annotations
 import logging
 from typing import Mapping
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ByteType, DataType, IntegerType, LongType,
+                               ShortType, StringType)
 
 from .expr import translate_expr
 from .spec import ConditionalRule, DirectMapRule, LookupRule, Rule
@@ -41,54 +49,66 @@ from .spec import ConditionalRule, DirectMapRule, LookupRule, Rule
 log = logging.getLogger(__name__)
 
 _ORDER_COL = "_src_order"
+_INTEGRAL = (ByteType, IntegerType, LongType, ShortType)
 
 
-def with_load_order(mapping: DataFrame) -> DataFrame:
-    """Attach a monotonically-increasing load-order column so "last
-    occurrence" is well-defined under distribution.
+def key_type(a: DataType, b: DataType) -> str | None:
+    """The type both sides of a Lookup key compare as: ``bigint`` for
+    two integral types, None (as is) for two plain strings, else
+    ``string`` — the reference's ``astype(str)`` on both sides. In the
+    first two families the cast to string is injective and keeps
+    equality, so skipping it changes no match."""
+    if isinstance(a, _INTEGRAL) and isinstance(b, _INTEGRAL):
+        return "bigint"
+    if a == StringType() and b == StringType():
+        return None
+    return "string"
 
-    ``monotonically_increasing_id`` is increasing within a partition
-    and partition ids follow file/split order, so for a mapping table
-    read from parquet it reproduces pandas' file-order ``dict(zip)``
-    last-wins semantics (SURVEY.md §2.1 pt 3)."""
-    if _ORDER_COL in mapping.columns:
-        return mapping
-    return mapping.withColumn(_ORDER_COL, F.monotonically_increasing_id())
+
+def _as_key(col: Column, cast: str | None) -> Column:
+    return col if cast is None else col.cast(cast)
 
 
-def dedup_last_wins(mapping: DataFrame, key_col: str,
-                    val_col: str) -> DataFrame:
-    """Keep the LAST row per string-coerced key — the reference's
-    ``dict(zip(keys, vals))`` semantics (main.py:168). Plain
-    ``dropDuplicates`` keeps an arbitrary row; this is deterministic.
+def dedup_last_wins(mapping: DataFrame, key: Column, val_col: str,
+                    key_name: str, val_name: str) -> DataFrame:
+    """``(key_name, val_name)``: the LAST row's value per ``key`` — the
+    reference's ``dict(zip(keys, vals))`` semantics (main.py:168).
+    Plain ``dropDuplicates`` keeps an arbitrary row; this is
+    deterministic.
 
-    The mapping is read as one partition (``coalesce(1)`` keeps split
-    order), which already satisfies the window's distribution: no
-    shuffle. A Lookup broadcasts the result, so the mapping is bounded
-    by the broadcast size and collected whole either way."""
-    m = with_load_order(mapping.coalesce(1))
-    key_str = F.col(key_col).cast("string").alias("_lk_key")
-    w = Window.partitionBy("_lk_key").orderBy(F.col(_ORDER_COL).desc())
-    return (m.select(key_str, F.col(val_col).alias("_lk_val"),
-                     F.col(_ORDER_COL))
-             .withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1)
-             .select("_lk_key", "_lk_val"))
+    "Last" is the mapping's own ``_src_order`` column when it has one,
+    else ``monotonically_increasing_id`` over the mapping read as one
+    partition: ``coalesce(1)`` keeps split order, so the id follows
+    file order (SURVEY.md §2.1 pt 3). One partition also satisfies the
+    aggregate's distribution: no shuffle. A Lookup broadcasts the
+    result, so the mapping is bounded by the broadcast size and
+    collected whole either way. ``max_by`` keeps a NULL value of the
+    last row, as ``dict`` does."""
+    m = mapping.coalesce(1)
+    order = (F.col(_ORDER_COL) if _ORDER_COL in mapping.columns
+             else F.monotonically_increasing_id())
+    return (m.select(key.alias(key_name), F.col(val_col).alias(val_name),
+                     order.alias("_lk_order"))
+             .groupBy(key_name)
+             .agg(F.max_by(val_name, "_lk_order").alias(val_name)))
 
 
 def compile_rule_column(rule: Rule) -> Column:
-    """Compile a non-Lookup rule to a Column over the primary table."""
+    """Compile a non-Lookup rule to an unnamed Column over the primary
+    table."""
     if isinstance(rule, DirectMapRule):
-        return F.col(rule.source).alias(rule.name)
+        return F.col(rule.source)
     if isinstance(rule, ConditionalRule):
         cond = F.expr(translate_expr(rule.expression, "spark"))
         # then/else are LITERALS from the UI text inputs — output is
         # always the literal's type (string in the reference's UI,
         # main.py:155,387-389).
-        return (F.when(cond, F.lit(rule.then))
-                 .otherwise(F.lit(rule.else_))
-                 .alias(rule.name))
+        return F.when(cond, F.lit(rule.then)).otherwise(F.lit(rule.else_))
     raise TypeError(f"not a column rule: {rule!r}")
+
+
+def _types(df: DataFrame) -> dict[str, DataType]:
+    return {f.name: f.dataType for f in df.schema.fields}
 
 
 def compile_pipeline(df: DataFrame, rules: list[Rule],
@@ -96,53 +116,66 @@ def compile_pipeline(df: DataFrame, rules: list[Rule],
                      permissive: bool = False) -> DataFrame:
     """Compile the whole rule list into one joined+selected DataFrame.
 
-    Lookups become broadcast left joins attached before the final
-    select; everything else is a pure Column expression. The result has
-    exactly the rule output columns (reference main.py:135-138).
+    One select over the primary evaluates every non-Lookup rule and
+    every Lookup's probe key, then names them by position (``_r<i>``,
+    ``_p<i>``). Its list holds no alias, so no rule can reach another
+    rule's output through a lateral column alias: a rule names primary
+    columns only, and strict mode raises on a bad rule right there, at
+    compile time. Lookups attach as broadcast left joins (``_k<i>`` =
+    ``_p<i>``, value ``_r<i>``), and the final select renames the rule
+    columns, in rule order. The result has exactly the rule output
+    columns (reference main.py:135-138). Existence checks and key
+    types read each input's schema, which PySpark fetches once per
+    DataFrame.
     """
-    out_cols: list[Column | str] = []
-    work = df
-    n_lookups = 0
+    types = _types(df)
+    cols: list[Column] = []
+    internal: list[str] = []
+    lookups: list[tuple[int, DataFrame]] = []
+    names: list[str] = []
     for rule in rules:
+        i = len(names)
         try:
             if isinstance(rule, LookupRule):
                 if rule.map_name not in mappings:
                     raise KeyError(f"unknown mapping table {rule.map_name!r}")
                 mapping = mappings[rule.map_name]
+                mtypes = _types(mapping)
                 for c in (rule.key_col, rule.val_col):
-                    if c not in mapping.columns:
+                    if c not in mtypes:
                         raise KeyError(
                             f"mapping {rule.map_name!r} has no column {c!r}")
-                if rule.in_col not in df.columns:
+                if rule.in_col not in types:
                     raise KeyError(f"primary table has no column "
                                    f"{rule.in_col!r}")
-                lk = dedup_last_wins(mapping, rule.key_col, rule.val_col)
-                key_alias = f"_lk{n_lookups}_key"
-                val_alias = f"_lk{n_lookups}_val"
-                lk = lk.select(F.col("_lk_key").alias(key_alias),
-                               F.col("_lk_val").alias(val_alias))
-                n_lookups += 1
-                work = work.join(
-                    F.broadcast(lk),
-                    work[rule.in_col].cast("string") == lk[key_alias],
-                    "left").drop(key_alias)
-                out_cols.append(F.col(val_alias).alias(rule.name))
+                cast = key_type(types[rule.in_col], mtypes[rule.key_col])
+                lookups.append((i, dedup_last_wins(
+                    mapping, _as_key(F.col(rule.key_col), cast),
+                    rule.val_col, f"_k{i}", f"_r{i}")))
+                cols.append(_as_key(F.col(rule.in_col), cast))
+                internal.append(f"_p{i}")
             else:
-                # validate eagerly for failure isolation: a bad
-                # Conditional expression (unknown column, syntax)
-                # must fail HERE, inside the per-rule try, not at the
-                # final select — df.select() analyzes immediately.
                 col = compile_rule_column(rule)
                 if isinstance(rule, DirectMapRule) \
-                        and rule.source not in df.columns:
+                        and rule.source not in types:
                     raise KeyError(f"primary table has no column "
                                    f"{rule.source!r}")
-                if isinstance(rule, ConditionalRule):
-                    df.select(col)  # analysis-only; no execution
-                out_cols.append(col)
+                if permissive and isinstance(rule, ConditionalRule):
+                    # isolate a bad expression (unknown column, type)
+                    # to its own rule; strict mode leaves it to the
+                    # select below, which analyzes every rule at once
+                    df.select(col)
+                cols.append(col)
+                internal.append(f"_r{i}")
+            names.append(rule.name)
         except Exception as exc:  # noqa: BLE001 — per-rule isolation
             if not permissive:
                 raise
             log.warning("rule %r skipped: %s", getattr(rule, "name", rule),
                         exc)
-    return work.select(*out_cols)
+    work = df.select(*cols).toDF(*internal)
+    for i, lk in lookups:
+        work = work.join(F.broadcast(lk), F.col(f"_p{i}") == F.col(f"_k{i}"),
+                         "left")
+    return work.select(*[F.col(f"_r{i}").alias(n)
+                         for i, n in enumerate(names)])

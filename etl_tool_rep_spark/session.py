@@ -89,22 +89,39 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def _launch_master(conf: dict[str, str]) -> str:
+    """The master for ``get_spark(master=None)``. Reading the launch
+    conf needs the JVM, so this starts it with ``conf`` (the same
+    settings the session builder would launch it with: driver memory
+    must be set at launch). spark-submit fills in ``local[*]`` when the
+    launch names no master, so that value reads as unset and
+    ``SPARK_GRAFT_CPUS`` applies over it."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+    launched = SparkConf().get("spark.master", None)
+    if launched and launched != "local[*]":
+        return launched
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return f"local[{cpus}]" if cpus else "local[*]"
+
+
 def get_spark(app_name: str = "etl_tool_rep_spark",
               master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """Build (or fetch) the session. ``master`` defaults to
-    ``local[$SPARK_GRAFT_CPUS]`` locally; on a cluster leave None and
-    let spark-submit decide. The shuffle width is the master's core
-    count (``defaultParallelism``) unless ``extra_conf`` or the launch
-    conf (spark-submit ``--conf``) sets one."""
-    builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = builder.master(master)
+    """Build (or fetch) the session. With ``master=None`` the launch
+    conf's master wins (spark-submit ``--master`` or ``--conf
+    spark.master``, ``PYSPARK_SUBMIT_ARGS``, spark-defaults), else
+    ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``; on a cluster leave
+    None and let spark-submit decide. The shuffle width is the master's
+    core count (``defaultParallelism``) unless ``extra_conf`` or the
+    launch conf (spark-submit ``--conf``) sets one."""
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    if master is None:
+        master = _launch_master(conf)
+    builder = SparkSession.builder.appName(app_name).master(master)
     if master.startswith("local"):
         # Python workers import the package from wherever the driver
         # runs; on a cluster it ships with --py-files instead.

@@ -36,6 +36,9 @@ def test_measure_two_dirs(tmp_path):
         sorted((k, d, 1) for k in KEYS for d in DIRS)
     for r in recs:
         assert r["wall_s"] > 0
+        assert r["build_s"] >= 0 and r["exec_s"] >= 0
+        # each of the three is rounded to 1 ms on its own
+        assert abs(r["build_s"] + r["exec_s"] - r["wall_s"]) <= 0.002
         assert r["jobs"] >= 1 and r["tasks"] >= r["stages"] >= 1
         assert 0 < r["max_task_share"] <= 1
     # the warm count tests/test_tier22.py pins through statusTracker:

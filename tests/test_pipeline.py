@@ -3,11 +3,13 @@ verified quirk of the reference engine (main.py:130-176) asserted
 against hand-checked expected output."""
 
 import json
+import re
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from etl_tool_rep_spark.pipeline import (compile_pipeline, parse_pipeline,
-                                         translate_expr)
+from etl_tool_rep_spark.pipeline import (compile_pipeline, compiler,
+                                         parse_pipeline, translate_expr)
 from etl_tool_rep_spark.pipeline.spec import (ConditionalRule, DirectMapRule,
                                               LookupRule, export_pipeline)
 
@@ -118,6 +120,22 @@ def test_permissive_failure_isolation(main_df, mapping_df):
     assert out.count() == 5
 
 
+def test_strict_bad_conditional_raises_at_compile(main_df, mapping_df):
+    """Strict mode raises on a Conditional that names no primary
+    column, before anything runs: also when the name is an earlier
+    rule's output or an internal column of the compiled select."""
+    for name in ("no_such_col", "a", "nm", "_r0", "_p1", "_k1", "_r1"):
+        with pytest.raises(AnalysisException):
+            compile_pipeline(main_df, parse_pipeline([
+                {"name": "a", "type": "Direct Map", "source": "amount"},
+                {"name": "nm", "type": "Lookup", "map_name": "m",
+                 "in_col": "cust_id", "key_col": "id", "val_col": "name"},
+                {"name": "bad", "type": "Conditional",
+                 "expression": f"(`{name}` > 1)", "then": "T",
+                 "else": "F"},
+            ]), {"m": mapping_df})
+
+
 def test_permissive_isolates_bad_conditional(main_df):
     """Regression: an unresolvable Conditional expression must be
     dropped in permissive mode, not abort the final select."""
@@ -216,6 +234,10 @@ def test_in_list_rule_runs(main_df):
     assert by_rid[1] == "Y" and by_rid[3] == "N" and by_rid[5] == "N"
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_lookup_last_wins_across_splits_without_shuffle(main_df, spark,
                                                         tmp_path):
     """A mapping CSV read as several splits, with each key repeated in
@@ -237,10 +259,82 @@ def test_lookup_last_wins_across_splits_without_shuffle(main_df, spark,
              "in_col": "cust_id", "key_col": "id", "val_col": "name"},
         ]), {"m": mapping})
         by_rid = {r["rid"]: r["nm"] for r in out.collect()}
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = _plan(out)
     finally:
         spark.conf.set(key, old)
     assert by_rid == {1: "v0397", 2: "v0398", 3: "v0399", 4: None,
                       5: None}
     assert "BroadcastExchange" in plan
     assert "Exchange hashpartitioning" not in plan
+    # last wins by max_by over the load order, not a row_number window
+    assert "Window" not in plan
+    # long cust_id against the inferred int id: compared as bigint,
+    # neither join key is cast to string
+    assert "BroadcastHashJoin" in plan and "as string" not in plan
+
+
+def test_lookup_last_wins_follows_own_src_order(main_df, spark):
+    """A mapping that carries ``_src_order`` is deduped by that column,
+    not by the order its rows come in."""
+    mapping = spark.createDataFrame(
+        [(1, "late", 30), (1, "early", 10), (2, "y", 7), (2, "x", 5)],
+        "id long, name string, _src_order long").coalesce(1)
+    rows = run(main_df, {"m": mapping}, [
+        {"name": "rid", "type": "Direct Map", "source": "row_id"},
+        {"name": "nm", "type": "Lookup", "map_name": "m",
+         "in_col": "cust_id", "key_col": "id", "val_col": "name"},
+    ])
+    assert {r["rid"]: r["nm"] for r in rows} == {
+        1: "late", 2: "y", 3: None, 4: None, 5: None}
+
+
+# (key, value) in file order: key 8 repeats (the later row wins), key 1
+# repeats with a NULL last value (the result is NULL, as dict(zip)
+# gives), and one mapping key is NULL (it matches nothing)
+_KEYED = [(7, "a"), (8, "b"), (None, "n"), (8, "c"), (1, "d"), (1, None)]
+_PROBE = [7, 8, 9, None, 1]
+_WANT = {7: "a", 8: "c", 9: None, None: None, 1: None}
+
+
+def _lookup(spark, main_rows, main_type, map_rows, map_type):
+    main = spark.createDataFrame(
+        list(enumerate(main_rows)), f"rid int, k {main_type}")
+    mapping = spark.createDataFrame(
+        map_rows, f"id {map_type}, name string").coalesce(1)
+    out = compile_pipeline(main, parse_pipeline([
+        {"name": "rid", "type": "Direct Map", "source": "rid"},
+        {"name": "nm", "type": "Lookup", "map_name": "m",
+         "in_col": "k", "key_col": "id", "val_col": "name"},
+    ]), {"m": mapping})
+    got = {r["rid"]: r["nm"] for r in out.collect()}
+    return [got[i] for i in range(len(main_rows))], out
+
+
+@pytest.mark.parametrize("main_type,map_type", [
+    ("bigint", "int"), ("int", "bigint"), ("smallint", "bigint"),
+    ("tinyint", "smallint"), ("int", "int"), ("string", "string")])
+def test_native_keys_match_string_cast(spark, monkeypatch, main_type,
+                                       map_type):
+    """Integral/integral and string/string Lookups compare keys in
+    their own type; the result equals the reference's cast of both
+    sides to string."""
+    def conv(v):
+        return None if v is None else \
+            (str(v) if main_type == "string" else v)
+    probe = [conv(v) for v in _PROBE]
+    keyed = [(conv(k), v) for k, v in _KEYED]
+    native, out = _lookup(spark, probe, main_type, keyed, map_type)
+    assert "as string" not in _plan(out)
+    monkeypatch.setattr(compiler, "key_type", lambda a, b: "string")
+    as_string, _ = _lookup(spark, probe, main_type, keyed, map_type)
+    assert native == as_string == [_WANT[v] for v in _PROBE]
+
+
+def test_int_column_against_string_key_compares_as_string(spark):
+    """INT 7 stringifies to '7': it matches key '7' and not '007', a
+    later row whose key is 7 as a number."""
+    got, out = _lookup(spark, [7, 70, None], "int",
+                       [("7", "seven"), ("007", "padded"), (None, "n")],
+                       "string")
+    assert got == ["seven", None, None]
+    assert re.search(r"cast\(k#\d+ as string\)", _plan(out))

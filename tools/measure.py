@@ -13,7 +13,10 @@ drift on the host hits every key and dir alike. Each run is a noop
 write timed with ``perf_counter`` under the job group
 ``key@dir#pass``.
 
-Each timed run is one JSONL record: its ``group``, ``wall_s``, the JVM
+Each timed run is one JSONL record: its ``group``, ``wall_s`` split
+into ``build_s`` (the query call: DataFrame building, analysis and any
+eager jobs inside it) and ``exec_s`` (the noop write), as perfbench's
+``QueryOp`` splits ``queries.build`` and ``queries.exec``, the JVM
 GC-time delta, ``load1`` sampled just before the run and heap used
 after it; from the event log (parsed with ``perfbench/eventlog.py``
 after the session stops): jobs, stages, tasks, ``max_task_share`` (the
@@ -159,13 +162,16 @@ def _session(keys, dirs, iters, plans, log_dir):
                     gc0 = gc_ms()
                     t0 = time.perf_counter()
                     df = QUERIES[key](spark, d)
+                    t1 = time.perf_counter()
                     df.write.format("noop").mode("overwrite").save()
-                    wall = time.perf_counter() - t0
+                    t2 = time.perf_counter()
                     gc = gc_ms() - gc0
                     sc.setLocalProperty("spark.jobGroup.id", None)
                     sc.setLocalProperty("spark.job.description", None)
                     rec = {"key": key, "dir": d, "pass": p, "group": group,
-                           "wall_s": round(wall, 3), "gc_ms": gc,
+                           "wall_s": round(t2 - t0, 3),
+                           "build_s": round(t1 - t0, 3),
+                           "exec_s": round(t2 - t1, 3), "gc_ms": gc,
                            "load1": round(load1, 2)}
                     if peaks.run_ids:
                         _quiesce(spark)
