@@ -8,13 +8,16 @@ approximation):
     label(v) <- min(label(v), min over neighbors(label(n)))
 
 repeated until no label changes. Each iteration is one join + one
-aggregation (shuffle by vertex); convergence takes O(diameter)
-iterations — near-dup clusters are tiny and star-shaped, so 2-4
-rounds in practice. A pin truncates the growing lineage each round
-(without it, iteration k re-executes all k-1 prior joins and the
-driver eventually OOMs planning the plan tree — the classic
-iterative-Spark failure at scale); its durability follows the session
-(``session.pin``).
+aggregation (shuffle by vertex, at the session's shuffle width) and
+runs as ONE job: the aggregate carries each vertex's previous label
+beside its new one, and the convergence probe over that pair is the
+action that materializes the round's lazy pin. Convergence takes
+O(diameter) iterations — near-dup clusters are tiny and star-shaped,
+so 2-4 rounds in practice. The pin truncates the growing lineage
+each round (without it, iteration k re-executes all k-1 prior joins
+and the driver eventually OOMs planning the plan tree — the classic
+iterative-Spark failure at scale); its durability follows the
+session (``session.pin``).
 
 This is one of the declared non-SQL-expressible operators (rows-only
 oracle): the fixpoint loop has no single-query SQL equivalent.
@@ -40,24 +43,13 @@ def connected_components(pairs: DataFrame,
     The initial label min(self, neighbors) covers one hop and each
     iteration one more, so a loop cut by ``max_iterations`` labels
     each vertex with the min id within ``max_iterations + 1`` hops
-    (tier20's `dedup_components_exact` relies on this bound)."""
-    edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-             .unionByName(
-                 pairs.select(F.col(dst).alias("a"),
-                              F.col(src).alias("b")))
-             .distinct())
-    edges = pin(edges)
-    # candidate-pair graphs are usually far smaller than the corpus:
-    # right-size the iteration's shuffle width so per-round fixed cost
-    # doesn't dominate (AQE coalesces stage-by-stage, but the loop's
-    # repeated tiny shuffles still pay scheduling overhead at full
-    # width). Large edge sets keep the session's configured width.
-    n_edges = edges.count()
-    spark = pairs.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    small_width = max(2, min(width, n_edges // 50_000 + 2))
-    if small_width < width:
-        edges = edges.repartition(small_width, "a")
+    (tier20's `dedup_components_exact` and tier32's `grid_dbscan`
+    rely on this bound)."""
+    edges = pin(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+                .unionByName(
+                    pairs.select(F.col(dst).alias("a"),
+                                 F.col(src).alias("b")))
+                .distinct())
 
     # initial label: min neighbor vs self
     labels = (edges.groupBy("a")
@@ -65,21 +57,24 @@ def connected_components(pairs: DataFrame,
               .select(F.col("a").alias("id"), "label"))
 
     for _ in range(max_iterations):
-        # propagate: my new label = min(my label, labels of neighbors)
+        # propagate: my new label = min(my label, labels of neighbors);
+        # my own row alone carries _own, so min(_own) is my old label
         neighbor_labels = (edges
                            .join(labels, edges.b == labels.id)
-                           .select(F.col("a").alias("id"),
-                                   F.col("label")))
-        new_labels = (labels.unionByName(neighbor_labels)
-                      .groupBy("id")
-                      .agg(F.min("label").alias("label")))
-        new_labels = pin(new_labels)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "id")
-                   .filter(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
+                           .select(F.col("a").alias("id"), "label",
+                                   F.lit(None).alias("_own")))
+        stepped = (labels.withColumn("_own", F.col("label"))
+                   .unionByName(neighbor_labels)
+                   .groupBy("id")
+                   .agg(F.min("label").alias("label"),
+                        F.min("_own").alias("_prev")))
+        # lazy pin: the convergence probe is the action that
+        # materializes this round — one job for update + probe
+        ck = pin(stepped, eager=False)
+        changed = ck.agg(
+            F.max(F.col("label") != F.col("_prev"))).first()[0]
+        labels = ck.select("id", "label")
+        if not changed:
             break
     return labels.select("id", F.col("label").alias("cluster_id"))
 

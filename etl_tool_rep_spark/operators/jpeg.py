@@ -54,7 +54,7 @@ import struct
 
 import numpy as np
 
-_MAX_PIXEL_BYTES = 256 * 1024 * 1024
+from .png import _MAX_PIXEL_BYTES
 
 
 class JpegError(ValueError):

@@ -33,9 +33,7 @@ from ..catalog import load
 from ..operators.rank import global_row_number, grouped_prefix_sum
 from ..session import pin
 from .registry import query
-
-_LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
-        " AS BIGINT)")
+from .tier28 import _LNQ
 
 
 # ---------------------------------------------------------------------------

@@ -25,12 +25,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.cluster import connected_components
 from ..session import local_frame, pin
 from .registry import query
+from .tier28 import _LNQ
 from .tier30 import _GAIN_Q_SQL, _gini_gain_q
-
-_LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
-        " AS BIGINT)")
 
 _DBSCAN_ROUNDS = 6
 _CELL = 250000          # 0.25 embedding units on the 1e6 grid
@@ -104,8 +103,17 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the `dedup_components_exact` discipline) — the density-based
     clustering family (k-means' complement: finds arbitrary-shape
     clusters and leaves sparse noise unlabeled) in its scalable
-    grid-approximation form. Both engines execute the same bounded
-    rounds, so labels match exactly even before full convergence.
+    grid-approximation form.
+
+    The rounds run in `cluster.connected_components` with
+    ``max_iterations=5``. The oracle starts at lab0 = key and takes
+    the min over the 8-neighborhood, self included, 6 times: the min
+    key within 6 hops. `connected_components` starts at min(self,
+    neighbors), one hop, and each iteration adds one, so 5 iterations
+    reach the same 6 hops; a round that changes no label is a
+    fixpoint, so its early exit gives the same labels. The (0, 0)
+    offset pairs every core cell with itself, so every core cell is
+    in the edge list and gets a label.
 
     Scale: the cell census is the only corpus-sized stage (map-side
     combinable); density and adjacency are 9-way equi-joins on the
@@ -140,22 +148,15 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = core.select(F.col("gx").alias("bgx"),
                      F.col("gy").alias("bgy"),
                      F.col("key").alias("bkey"))
-    adj = pin(core.crossJoin(F.broadcast(offs))
-              .join(cb, (F.col("bgx") == F.col("gx") + F.col("dx"))
-                    & (F.col("bgy") == F.col("gy") + F.col("dy")))
-              .select(F.col("key").alias("akey"), "bkey"))
-    lab = core.select("key", F.col("key").alias("lab"))
-    for _ in range(_DBSCAN_ROUNDS):
-        nl = lab.select(F.col("key").alias("bkey"),
-                        F.col("lab").alias("nlab"))
-        lab = pin(lab.join(adj, lab.key == adj.akey)
-                  .join(nl, "bkey")
-                  .groupBy("key", "lab")
-                  .agg(F.min("nlab").alias("mn"))
-                  .select("key", F.least("lab", "mn").alias("lab")))
-    return (core.join(lab, "key")
+    adj = (core.crossJoin(F.broadcast(offs))
+           .join(cb, (F.col("bgx") == F.col("gx") + F.col("dx"))
+                 & (F.col("bgy") == F.col("gy") + F.col("dy")))
+           .select(F.col("key").alias("akey"), "bkey"))
+    lab = connected_components(adj, "akey", "bkey",
+                               max_iterations=_DBSCAN_ROUNDS - 1)
+    return (core.join(lab, core.key == lab.id)
             .select("gx", "gy", "cnt", "nbr_cnt",
-                    F.col("lab").cast("bigint").alias("cluster")))
+                    F.col("cluster_id").cast("bigint").alias("cluster")))
 
 
 # ---------------------------------------------------------------------------

@@ -31,9 +31,7 @@ from ..operators.rank import global_row_number, grouped_row_number
 from ..session import pin
 from . import shared_sql
 from .registry import query
-
-_LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
-        " AS BIGINT)")
+from .tier28 import _LNQ
 
 _MIS_ROUNDS = 4
 

@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..session import pin
 from .registry import query
-
-_LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
-        " AS BIGINT)")
+from .tier28 import _LNQ
 
 
 # ---------------------------------------------------------------------------

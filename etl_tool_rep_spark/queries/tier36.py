@@ -25,9 +25,7 @@ from ..catalog import load
 from ..operators.rank import global_row_number, grouped_prefix_sum
 from ..session import local_frame, pin
 from .registry import query
-
-_LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
-        " AS BIGINT)")
+from .tier28 import _LNQ
 
 # negative_sampling: expected candidates kept per anchor by the
 # hash-range cut (margin over the 2 actually used; starved anchors

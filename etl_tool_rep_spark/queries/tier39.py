@@ -36,8 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from .registry import query
-
-_EV_CENTS = "CAST(FLOOR(COALESCE(value, 0) * 100 + 0.5) AS BIGINT)"
+from .tier38 import _EV_CENTS
 
 
 @query(

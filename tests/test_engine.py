@@ -107,3 +107,33 @@ def test_loads_run_in_caller_job_group(spark, workdir, tmp_path,
                             lambda: _load(spark, tmp_path))
     assert (cold, jobs) == (4, 0)
     assert warm.primary().count() == 4
+
+
+def test_add_dataframe_add_rule_preview(spark):
+    """The in-memory side of the facade: frames added without a file,
+    a rule appended one at a time, and the display truncation of
+    ``result_df.head(100)`` (reference main.py:433)."""
+    eng = ETLEngine(spark)
+    orders = spark.createDataFrame([(i, i % 3) for i in range(5)],
+                                   "row_id long, cust_id long")
+    names = spark.createDataFrame([(0, "Ann"), (1, "Bo")],
+                                  "id long, name string")
+    eng.add_dataframe("orders", orders)
+    eng.add_dataframe("names", names, mapping=True)
+    assert list(eng.data_inventory) == ["orders"]
+    assert list(eng.mapping_dfs) == ["names"]
+    eng.set_primary("orders")
+
+    eng.add_rule({"name": "Name", "type": "Lookup", "map_name": "names",
+                  "in_col": "cust_id", "key_col": "id",
+                  "val_col": "name"})
+    eng.add_rule({"name": "Row", "type": "Direct Map",
+                  "source": "row_id"})
+    assert len(eng.rules) == 2
+    result = eng.run()
+    assert result.columns == ["Name", "Row"]
+    assert {(r["Row"], r["Name"]) for r in result.collect()} == {
+        (0, "Ann"), (1, "Bo"), (2, None), (3, "Ann"), (4, "Bo")}
+
+    assert len(eng.preview(result, 3)) == 3
+    assert len(eng.preview(result)) == 5  # fewer rows than the cap

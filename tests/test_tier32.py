@@ -3,7 +3,8 @@ where the expected answer is computable by eye — complementing the
 DuckDB oracle gate (which proves engine parity, not intent).
 
 * grid_dbscan: two dense blobs separated by empty cells form two
-  clusters; a far-away single point is not core.
+  clusters; a far-away single point is not core; the labels come
+  from cluster.connected_components.
 * burst_viterbi: a flat series never enters the burst state (base
   path strictly cheaper); a series whose tail doubles makes the
   burst path cheaper at the end.
@@ -39,6 +40,26 @@ def test_grid_dbscan_two_blobs(spark, monkeypatch):
     assert len(clusters) == 2  # two blobs, isolated point not core
     assert all(r["nbr_cnt"] >= 5 for r in got)
     assert sum(r["cnt"] for r in got) == 12
+
+
+def test_grid_dbscan_runs_connected_components(spark, monkeypatch):
+    """grid_dbscan's min-label rounds are cluster.connected_components,
+    cut at 5 iterations (6 hops, the oracle's 6 rounds)."""
+    import etl_tool_rep_spark.queries.tier32 as t32
+    pts = [(0.01 * i, 0.0) for i in range(6)]
+    monkeypatch.setattr(t32, "load",
+                        lambda s, d, n: _emb(spark, pts))
+    calls = []
+    real = t32.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append((args[1:], kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(t32, "connected_components", spy)
+    got = QUERIES["grid_dbscan"](spark, "x").collect()
+    assert calls == [(("akey", "bkey"), {"max_iterations": 5})]
+    assert len({r["cluster"] for r in got}) == 1
 
 
 def test_burst_viterbi_flat_vs_burst(spark, monkeypatch):

@@ -124,6 +124,19 @@ def _has_broadcast_hint(join, side: str) -> bool:
         opt.get().toString().lower()
 
 
+def _iter_plan(root):
+    """Every node of the plan tree under ``root``, root first, walked
+    with an explicit stack: an iterative key's plan can nest deeper
+    than Python's recursion limit."""
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        yield node
+        ch = node.children()
+        for i in range(ch.size()):
+            stack.append(ch.apply(i))
+
+
 def audit_cross_sides(df) -> list[str]:
     """Walk the optimized logical plan; every cross/condition-less
     join must have a side that is provably <=1 row (scalar attach) or
@@ -131,11 +144,7 @@ def audit_cross_sides(df) -> list[str]:
     sets). This runs on ALLOWLISTED queries too — the allowlist
     permits the join shape, not an unbounded cartesian."""
     bad = []
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
+    for node in _iter_plan(df._jdf.queryExecution().optimizedPlan()):
         if node.getClass().getSimpleName() != "Join":
             continue
         cross = (node.joinType().toString() == "Cross"
@@ -333,13 +342,7 @@ def _attr_bounds(root) -> dict[int, int]:
     Project/Aggregate aliases whose EXPRESSION domain is bounded
     (post-order so producer bounds exist before consumers)."""
     env: dict[int, int] = {}
-    order, stack = [], [root]
-    while stack:
-        n = stack.pop()
-        order.append(n)
-        for i in range(n.children().size()):
-            stack.append(n.children().apply(i))
-    for n in reversed(order):             # children before parents
+    for n in reversed(list(_iter_plan(root))):  # children first
         cls = n.getClass().getSimpleName()
         if cls in ("Project", "Aggregate"):
             exprs = (n.projectList() if cls == "Project"
@@ -428,11 +431,7 @@ def audit_nonequi_joins(name: str, df) -> list[str]:
       data-sized left against an unbounded right."""
     allow = name in _NESTED_LOOP_OK
     bad = []
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
+    for node in _iter_plan(df._jdf.queryExecution().optimizedPlan()):
         if node.getClass().getSimpleName() != "Join":
             continue
         if _has_equi_conjunct(node):
@@ -467,11 +466,7 @@ def audit_window_partitions(name: str, df) -> tuple[list[str],
     warning for this key is benign (round-11 verdict hygiene ask),
     so nobody re-investigates it from the sweep/bench log tails."""
     bad, notes = [], []
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
+    for node in _iter_plan(df._jdf.queryExecution().optimizedPlan()):
         if node.getClass().getSimpleName() != "Window":
             continue
         if not node.partitionSpec().isEmpty():
@@ -502,11 +497,7 @@ def scan_driver_materialization(df) -> list[str]:
     relation node. Shared by the audit and its negative-control test
     (tests/test_plan_pushdown.py)."""
     bad = []
-    stack = [df._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
+    for node in _iter_plan(df._jdf.queryExecution().optimizedPlan()):
         cls = node.getClass().getSimpleName()
         if cls == "LogicalRDD":
             bad.append("driver-materialized LogicalRDD in a "
@@ -536,13 +527,6 @@ def scan_driver_materialization(df) -> list[str]:
 # subtree; any group of >= 2 with no ReusedExchange covering it is a
 # runtime-race candidate and must be pinned (localCheckpoint twin of
 # the oracle's AS MATERIALIZED).
-
-def _iter_plan(node):
-    yield node
-    ch = node.children()
-    for i in range(ch.size()):
-        yield from _iter_plan(ch.apply(i))
-
 
 def audit_static_reuse(df) -> list[str]:
     """Flags any >= 2 canonicalized-identical Exchange subtrees not
