@@ -244,7 +244,8 @@ def groupby_agg(spark, sf_dir):
     The distinct count runs as its own grouped aggregate joined back
     on the (4-group) keys: mixing it into the main agg triggers
     Catalyst's Expand rewrite (every row duplicated through the
-    shuffle, null-padded — measured ~2x on this query)."""
+    shuffle, null-padded — measured ~2x on this query). The join back
+    is null-safe, so NULL groups survive it as GROUP BY keeps them."""
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     keys = [F.col("l_returnflag").alias("returnflag"),
@@ -264,7 +265,10 @@ def groupby_agg(spark, sf_dir):
                  F.count(F.lit(1)).alias("count_order")))
     nd = (filtered.groupBy(*keys)
           .agg(F.countDistinct("l_partkey").alias("n_parts")))
-    return base.join(F.broadcast(nd), ["returnflag", "linestatus"])
+    on = (F.col("b.returnflag").eqNullSafe(F.col("n.returnflag"))
+          & F.col("b.linestatus").eqNullSafe(F.col("n.linestatus")))
+    return (base.alias("b").join(F.broadcast(nd.alias("n")), on)
+            .select("b.*", "n.n_parts"))
 
 
 _ROLLUP_AGG_SPARK = lambda g: g.agg(  # noqa: E731

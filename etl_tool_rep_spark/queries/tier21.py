@@ -32,11 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.text import ROLLING_HASH_MOD as _P  # Karp-Rabin modulus
 from ..session import pin
 from .registry import query
 
-_P = 1_000_000_007      # Karp-Rabin modulus (matches operators/text)
-_CHAR_BASE = 31         # per-character Horner base (matches)
+_CHAR_BASE = 31         # per-character Horner base (matches operators/text)
 _WORD_BASE = 1_000_003  # word-combine base (keeps a*h < 2^63)
 
 # Deterministic affine permutations, embedded as literals on BOTH

@@ -23,9 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.text import ROLLING_HASH_MOD as _P
 from .registry import query
 
-_P = 1_000_000_007
 _B = 31
 _W = 8          # rolling window width (chars)
 _MASK = 64      # boundary when window-hash % 64 == 0 (~64-char chunks)

@@ -37,10 +37,9 @@ from pyspark.sql import types as T
 from ..catalog import load
 from ..operators import multimodal as M
 from ..operators import png
+from ..operators.text import ROLLING_HASH_MOD as _P
 from ..session import local_frame
 from .registry import query
-
-_P = 1_000_000_007
 
 # shared pixel rule (valid in Spark SQL and DuckDB; see
 # operators/multimodal.pixel_rule_sql)
