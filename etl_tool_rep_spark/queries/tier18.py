@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.graph import co_supplier_edges
-from ..session import local_frame, pin
+from ..session import hold, local_frame, pin
 from . import shared_sql
 from .registry import query
 
@@ -83,12 +83,12 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     settled = local_frame(spark, [(src, 0)], "id long, dist int")
     frontier = settled
     for k in range(1, _HOPS + 1):
-        new = pin(e.join(frontier.select(F.col("id").alias("a")), "a")
-                   .select(F.col("b").alias("id")).distinct()
-                   .join(settled, "id", "left_anti")
-                   .select("id", F.lit(k).cast("int").alias("dist")))
-        # settled = union of per-round checkpointed frontiers: its
-        # lineage is already flat, no extra checkpoint job needed
+        new = hold(e.join(frontier.select(F.col("id").alias("a")), "a")
+                    .select(F.col("b").alias("id")).distinct()
+                    .join(settled, "id", "left_anti")
+                    .select("id", F.lit(k).cast("int").alias("dist")))
+        # settled = union of per-round held frontiers: its lineage is
+        # already flat, no extra materialization needed
         settled = settled.unionByName(new)
         frontier = new
     return settled.select(F.col("id").cast("bigint").alias("id"),

@@ -29,7 +29,7 @@ from ..catalog import load
 from ..operators import dedup as D
 from ..operators.cluster import connected_components
 from ..operators.graph import co_supplier_edges
-from ..session import pin
+from ..session import hold, pin
 from . import shared_sql
 from .registry import query
 
@@ -218,9 +218,10 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round, one (ranks ⋈ deg ⋈ edges) shuffle keyed by the
     source node and one integer sum keyed by the target — the same
-    volume profile as operators/graph.pagerank; lineage is truncated
-    per round (``session.pin``). N arrives as
-    a broadcast 1-row aggregate, never a driver action.
+    volume profile as operators/graph.pagerank; each round's rank
+    frame is node-sized and held on the driver (``session.hold``), so
+    the next round's join broadcasts it. N arrives as a broadcast
+    1-row aggregate, never a driver action.
     """
     edges = co_supplier_edges(load(spark, sf_dir, "lineitem"))
     deg = edges.groupBy("a").agg(F.count(F.lit(1)).cast("bigint")
@@ -232,7 +233,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges_w = pin(edges.join(deg, "a")
                        .select(F.col("a").alias("_ea"),
                                F.col("b").alias("_eb"), "d"))
-    nodes = pin(deg.select(F.col("a").alias("id")))
+    nodes = hold(deg.select(F.col("a").alias("id")))
     nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     # r13 (guide §2.4): the vertex count rides the rank frame as a
     # constant column instead of a per-round crossJoin(broadcast(nn))
@@ -256,13 +257,13 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "_n"))
         s = c.groupBy("id").agg(F.sum("c").cast("bigint").alias("s"),
                                 F.max("_n").alias("_n"))
-        r = pin(s.select("id",
-                         (F.floor((F.lit(1 - _PR_DAMP) / F.col("_n")
-                                   + F.lit(_PR_DAMP)
-                                   * (F.col("s") / F.lit(1e12)))
-                                  * F.lit(1e12) + F.lit(0.5))
-                          / F.lit(1e12)).alias("r"),
-                         "_n"))
+        r = hold(s.select("id",
+                          (F.floor((F.lit(1 - _PR_DAMP) / F.col("_n")
+                                    + F.lit(_PR_DAMP)
+                                    * (F.col("s") / F.lit(1e12)))
+                                   * F.lit(1e12) + F.lit(0.5))
+                           / F.lit(1e12)).alias("r"),
+                          "_n"))
     return r.select(F.col("id").cast("bigint").alias("id"),
                     F.col("r").alias("pr"))
 
@@ -329,7 +330,8 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: classic iterative relaxation — each round joins the
     current distance frame to the weighted edge list and takes the
-    elementwise min. Lineage truncated per round (``session.pin``).
+    elementwise min. Each round's node-sized distance frame is held
+    on the driver (``session.hold``).
     Unreachable-within-{rounds} nodes carry the
     INF sentinel internally and are filtered at the end on BOTH
     engines.
@@ -367,12 +369,12 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                             (F.col("d") + F.col("w")).alias("_cand"))
                     .groupBy("id")
                     .agg(F.min("_cand").alias("_best")))
-        d = pin(d.join(relaxed, "id", "left")
-                 .select("id",
-                         F.least("d", F.coalesce("_best",
-                                                 F.lit(_BF_INF)
-                                                 .cast("bigint")))
-                          .alias("d")))
+        d = hold(d.join(relaxed, "id", "left")
+                  .select("id",
+                          F.least("d", F.coalesce("_best",
+                                                  F.lit(_BF_INF)
+                                                  .cast("bigint")))
+                           .alias("d")))
     return (d.filter(F.col("d") < _BF_INF)
              .select("id", F.col("d").alias("dist")))
 

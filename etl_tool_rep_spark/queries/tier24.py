@@ -38,7 +38,7 @@ from ..catalog import load
 from ..operators import multimodal as M
 from ..operators import png
 from ..operators.text import ROLLING_HASH_MOD as _P
-from ..session import local_frame
+from ..session import hold
 from .registry import query
 
 # shared pixel rule (valid in Spark SQL and DuckDB; see
@@ -293,7 +293,7 @@ def multimodal_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.min("pix_min").alias("min_pix"),
                     F.max("pix_max").alias("max_pix"),
                     F.sum("pix_wsum").alias("sum_wsum")))
-        rows = agg.collect()
-        return local_frame(spark, rows, agg.schema)
+        # held: the payload files are removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)

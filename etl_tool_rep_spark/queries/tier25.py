@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import local_frame
+from ..session import hold
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 
@@ -117,12 +117,8 @@ def lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.max("k").alias("max_key"))
                 .withColumn("n_versions",
                             F.lit(t.version()).cast("bigint")))
-        # bounded driver materialization (<= #priorities+2 rows, never
-        # data-sized) so the on-disk table can be cleaned up before
-        # returning — same boundedness class as the profile/centroid
-        # collects audited in tools/explain_audit.py
-        rows = agg.collect()
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk table is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -186,8 +182,8 @@ def lakehouse_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                            F.lit(t.version()).cast("bigint"))
                .withColumn("files_shrank",
                            F.lit(bool(n_files_after < n_files_before))))
-        rows = agg.collect()                 # 1 row, then cleanup
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk table is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -236,7 +232,7 @@ def lakehouse_read_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("k").alias("max_key"))
                .withColumn("files_skipped",
                            F.lit(bool(len(kept) < total))))
-        rows = agg.collect()                 # 1 row, then cleanup
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk table is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.graph import co_supplier_edges
-from ..session import pin
+from ..session import hold, pin
 from . import shared_sql
 from .registry import query
 
@@ -108,8 +108,8 @@ def kcore_decomposition(spark: SparkSession,
     is a semi-join of the edge list against the surviving node set
     followed by a map-side-combinable degree count. Rounds are a
     fixed constant; on a cluster each round's frontier shrinks
-    monotonically, and `pin` truncates the plan exactly
-    like the other iterative operators in `operators/graph.py`.
+    monotonically, and each round's node-sized frames are held on
+    the driver (``session.hold``), so its joins broadcast them.
     """
     edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem")))
     deg0 = edges.groupBy(F.col("a").alias("node")).agg(
@@ -129,19 +129,19 @@ def kcore_decomposition(spark: SparkSession,
     cur = deg0.select("node", F.col("degree0").alias("deg"))
     drops = []
     for r in range(1, _KCORE_ROUNDS + 1):
-        dropped = pin(cur.filter(F.col("deg") < _KCORE_K)
-                      .select("node"))
+        dropped = hold(cur.filter(F.col("deg") < _KCORE_K)
+                       .select("node"))
         drops.append(dropped.withColumn(
             "peel_round", F.lit(r).cast("bigint")))
         dec = (edges.join(dropped.withColumnRenamed("node", "b"), "b")
                .groupBy(F.col("a").alias("node"))
                .agg(F.count(F.lit(1)).cast("bigint").alias("_dec")))
-        cur = pin(cur.filter(F.col("deg") >= _KCORE_K)
-                  .join(dec, "node", "left")
-                  .select("node",
-                          (F.col("deg")
-                           - F.coalesce(F.col("_dec"), F.lit(0)))
-                          .alias("deg")))
+        cur = hold(cur.filter(F.col("deg") >= _KCORE_K)
+                   .join(dec, "node", "left")
+                   .select("node",
+                           (F.col("deg")
+                            - F.coalesce(F.col("_dec"), F.lit(0)))
+                           .alias("deg")))
     peeled = drops[0]
     for d in drops[1:]:
         peeled = peeled.unionByName(d)

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import pin
+from ..session import hold, pin
 from .registry import query
 
 _PCA_ROUNDS = 6
@@ -136,31 +136,34 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     # space; a 1024-salt attempt blew the map-side hash to 4M groups
     # and regressed.
     salt = F.pmod(F.xxhash64(F.col("a.vec_id")), F.lit(_GRAM_SALTS))
-    gram = pin(a.join(b, F.col("a.vec_id") == F.col("b.vec_id"))
-               .groupBy(F.col("a.i").alias("i"),
-                        F.col("b.i").alias("j"), salt.alias("_salt"))
-               .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("pg"))
-               .groupBy("i", "j")
-               .agg(F.sum(F.col("pg").cast("decimal(38,0)")).alias("g")))
+    # d x d cells whatever the corpus size: held, so every join of
+    # the loop broadcasts by size
+    gram = hold(a.join(b, F.col("a.vec_id") == F.col("b.vec_id"))
+                .groupBy(F.col("a.i").alias("i"),
+                         F.col("b.i").alias("j"), salt.alias("_salt"))
+                .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("pg"))
+                .groupBy("i", "j")
+                .agg(F.sum(F.col("pg").cast("decimal(38,0)")).alias("g")))
     v = gram.select("i").distinct().select(
         F.col("i").alias("j"),
         F.lit(1000000).cast("bigint").alias("vq"))
     for _ in range(_PCA_ROUNDS):
-        # pin u: it feeds both the max and the rescale; d-sized
-        # frame, and the recompute would re-run the gram join
-        u = pin(gram.join(F.broadcast(v), "j")
+        # pin u lazily: it feeds both the max and the rescale, and
+        # v's hold writes it; held instead, the key ran 47 jobs at
+        # sf0.1 against 41
+        u = pin(gram.join(v, "j")
                 .groupBy("i")
-                .agg(F.sum(F.col("g") * F.col("vq")).alias("u")), eager=False)
+                .agg(F.sum(F.col("g") * F.col("vq")).alias("u")),
+                eager=False)
         mx = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        v = pin(u.crossJoin(F.broadcast(mx))
-                .select(F.col("i").alias("j"),
-                        F.expr("CAST(u * 1000000 DIV m AS BIGINT)")
-                        .alias("vq")))
+        v = hold(u.crossJoin(F.broadcast(mx))
+                 .select(F.col("i").alias("j"),
+                         F.expr("CAST(u * 1000000 DIV m AS BIGINT)")
+                         .alias("vq")))
     num = (gram
-           .join(F.broadcast(v.select(F.col("j").alias("i"),
-                                      F.col("vq").alias("va"))), "i")
-           .join(F.broadcast(v.select("j",
-                                      F.col("vq").alias("vb"))), "j")
+           .join(v.select(F.col("j").alias("i"), F.col("vq").alias("va")),
+                 "i")
+           .join(v.select("j", F.col("vq").alias("vb")), "j")
            .agg(F.sum(F.col("g") * F.col("va") * F.col("vb"))
                 .alias("vgv")))
     den = v.agg(F.sum(F.col("vq").cast("decimal(38,0)")
@@ -231,9 +234,10 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each half-round is one edge-list equi-join + map-side-
     combinable sum — two shuffles per round over the distinct edge
-    list, score vectors are node-sized. The edge build is one
-    DISTINCT over a 2-column projection. At 100 TB: identical plan,
-    AQE handles hub skew; pin durability follows session.pin.
+    list, score vectors are node-sized and held on the driver
+    (``session.hold``). The edge build is one DISTINCT over a 2-column
+    projection. At 100 TB: identical plan, AQE handles hub skew; the
+    edge pin's durability follows session.pin.
     """
     li = load(spark, sf_dir, "lineitem")
     edges = pin(li.select(F.col("l_suppkey").alias("s"),
@@ -255,9 +259,9 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.sum(F.col("aq").cast("decimal(38,0)"))
                    .alias("t")))
         hmx = hr.agg(F.max("t").alias("m"))
-        h = pin(hr.crossJoin(F.broadcast(hmx))
-                .select("s", F.expr("CAST(t * 1000000 DIV m AS BIGINT)")
-                        .alias("hq")))
+        h = hold(hr.crossJoin(F.broadcast(hmx))
+                 .select("s", F.expr("CAST(t * 1000000 DIV m AS BIGINT)")
+                         .alias("hq")))
     deg = edges.groupBy("s").agg(
         F.count(F.lit(1)).cast("bigint").alias("out_degree"))
     return (h.join(deg, "s")

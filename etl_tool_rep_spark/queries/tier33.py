@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.graph import co_supplier_edges
 from ..operators.rank import global_row_number, grouped_row_number
-from ..session import pin
+from ..session import hold, pin
 from . import shared_sql
 from .registry import query
 from .tier28 import _LNQ
@@ -115,16 +115,16 @@ def maximal_independent_set(spark: SparkSession,
                                 F.col("pri").alias("npri")), "b")
                .groupBy("a").agg(F.min("npri").alias("minp"))
                .withColumnRenamed("a", "node"))
-        mis = pin(und.join(nbr, "node", "left")
-                  .filter(F.col("minp").isNull()
-                          | (F.col("pri") < F.col("minp")))
-                  .select("node"))
+        mis = hold(und.join(nbr, "node", "left")
+                   .filter(F.col("minp").isNull()
+                           | (F.col("pri") < F.col("minp")))
+                   .select("node"))
         mis_parts.append(mis.withColumn(
             "mis_round", F.lit(r).cast("bigint")))
         rem = (edges.join(mis.withColumnRenamed("node", "a"), "a")
                .select(F.col("b").alias("node")).distinct())
-        und = pin(und.join(mis, "node", "left_anti")
-                  .join(rem, "node", "left_anti"))
+        und = hold(und.join(mis, "node", "left_anti")
+                   .join(rem, "node", "left_anti"))
     mis_all = mis_parts[0]
     for p in mis_parts[1:]:
         mis_all = mis_all.unionAll(p)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.graph import co_supplier_edges
-from ..session import pin
+from ..session import hold, pin
 from . import shared_sql
 from .registry import query
 
@@ -128,15 +128,11 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone — zero driver actions, one strategy. The edges are the
     shared co-supplier graph (`operators/graph.co_supplier_edges`)
     oriented a < b — Catalyst pushes the filter into the self-join
-    condition — pinned once for the three consuming branches.
-
-    The signature table (n_nodes rows) joins both edge ends as a
-    broadcast hint: the pinned self-join keeps Catalyst's inner-join
-    size estimate (the product of its sides: 2.7 TiB at sf0.1 for
-    450k edges), so nothing derived from it broadcasts by size, and
-    the sort-merge joins that leaves took sf0.1 runs from 4.9 to
-    6.3 s. A dense graph's table grows as n_nodes^2 / 8 bytes
-    (~1.25 GB at 100k suppliers); past that the hint must go.
+    condition — pinned once for the three consuming branches. The
+    signature table (n_nodes rows) is held (``session.hold``), so both
+    edge ends join it as broadcasts by size. A dense graph's table
+    grows as n_nodes^2 / 8 bytes, all on the driver: ~1.25 GB at 100k
+    suppliers, which the row bound does not catch.
     """
     edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem"))
                 .filter(F.col("a") < F.col("b")))
@@ -170,8 +166,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out_w.append(words.view(np.int64))
             yield pd.DataFrame({"a": out_a, "_lo": out_lo, "_w": out_w})
 
-    sigs = adj.mapInPandas(sig_batches, "a long, _lo int, _w array<long>")
-    sigs = pin(sigs)
+    sigs = hold(adj.mapInPandas(sig_batches,
+                                "a long, _lo int, _w array<long>"))
     sa = sigs.select("a", F.col("_lo").alias("_la"),
                      F.col("_w").alias("_wa"))
     sb = sigs.select(F.col("a").alias("b"), F.col("_lo").alias("_lb"),
@@ -213,8 +209,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"k": [int(total)]})
 
     # every edge's a has outgoing edges (inner join safe); b may not
-    tri = (edges.join(F.broadcast(sa), "a")
-           .join(F.broadcast(sb), "b", "left")
+    tri = (edges.join(sa, "a")
+           .join(sb, "b", "left")
            .select("_la", "_wa", "_lb", "_wb")
            .mapInPandas(tri_batches, "k long")
            .agg(F.sum("k").cast("bigint").alias("n_triangles")))

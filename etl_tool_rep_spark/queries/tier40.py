@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import global_row_number
-from ..session import local_frame, pin
+from ..session import hold, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import _MH_CTES, _band_rows, _signatures, _with_shingles
@@ -164,10 +164,8 @@ def incremental_minhash_dedup(spark: SparkSession,
         t.append(new_b, batch_id="batch-1")   # crash-retry: no-op
         agg = _probe_tally(sh, new_b, t.snapshot()).withColumn(
             "n_versions", F.lit(t.version()).cast("bigint"))
-        # bounded driver materialization (<= |sources| rows) so the
-        # on-disk index can be cleaned up before returning
-        rows = agg.collect()
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk index is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -326,8 +324,8 @@ def lakehouse_zorder_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("l_suppkey").cast("bigint").alias("max_sk"))
                .withColumn("pruned",
                            F.lit(len(kept) * 2 < total)))
-        rows = agg.collect()          # 1-row frame, bounded
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk table is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

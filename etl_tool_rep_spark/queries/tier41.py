@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import local_frame, pin
+from ..session import hold, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import _MH_CTES, _band_rows, _signatures, _with_shingles
@@ -105,8 +105,8 @@ def lakehouse_zorder_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max(F.unix_date("odate")).cast("bigint")
                      .alias("max_day"))
                .withColumn("pruned", F.lit(len(kept) * 2 < total)))
-        rows = agg.collect()          # 1-row frame, bounded
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk table is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -189,9 +189,7 @@ def incremental_dedup_retire(spark: SparkSession,
                            F.lit(n_index).cast("bigint"))
                .withColumn("n_versions",
                            F.lit(t.version()).cast("bigint")))
-        # bounded driver materialization (<= |sources| rows) so the
-        # on-disk index can be cleaned up before returning
-        rows = agg.collect()
-        return local_frame(spark, rows, agg.schema)
+        # held: the on-disk index is removed on return
+        return hold(agg)
     finally:
         shutil.rmtree(root, ignore_errors=True)

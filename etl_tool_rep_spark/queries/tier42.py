@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load
 from ..operators.multimodal import PAYLOAD_SCHEMA
-from ..session import local_frame, pin
+from ..session import hold, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 
@@ -428,10 +428,8 @@ def lakehouse_time_travel(spark: SparkSession,
                .unionByName(agg(t.snapshot(), "head"))
                .withColumn("n_versions",
                            F.lit(t.version()).cast("bigint")))
-        # bounded driver materialization (<= 2x|statuses| rows) so
-        # the on-disk table can be cleaned up before returning
-        rows = out.collect()
-        return local_frame(spark, rows, out.schema)
+        # held: the on-disk table is removed on return
+        return hold(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -515,10 +513,8 @@ def lakehouse_schema_evolution(spark: SparkSession,
                .withColumn("head_ncols",
                            F.lit(len(t.snapshot().columns))
                             .cast("bigint")))
-        # bounded driver materialization (<= |channels|+1 rows) so
-        # the on-disk table can be cleaned up before returning
-        rows = out.collect()
-        return local_frame(spark, rows, out.schema)
+        # held: the on-disk table is removed on return
+        return hold(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

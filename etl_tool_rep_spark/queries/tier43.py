@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load
 from ..operators.multimodal import PAYLOAD_SCHEMA
-from ..session import local_frame, pin
+from ..session import hold, pin
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier21 import (_BANDS, _BANDS_CTE, _CAND_CTE, _MH_LIST_SQL, _ROWS,
@@ -216,10 +216,8 @@ def lakehouse_vacuum_retention(spark: SparkSession,
                            F.lit(t.version()).cast("bigint"))
                .withColumn("v1_reclaimed",
                            F.lit(len(removed) >= 1)))
-        # bounded driver materialization (<= |statuses| rows) so the
-        # on-disk table can be cleaned up before returning
-        rows = out.collect()
-        return local_frame(spark, rows, out.schema)
+        # held: the on-disk table is removed on return
+        return hold(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

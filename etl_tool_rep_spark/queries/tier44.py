@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import local_frame
+from ..session import hold
 from ..sinks.lakehouse import LakeTable
 from .registry import query
 from .tier22 import (_IVF_CTES, _IVF_K, _IVF_NPROBE, _PQ_CTES, _PQ_K,
@@ -264,10 +264,8 @@ def incremental_ann_index(spark: SparkSession,
         t.append(index.filter(is_new), batch_id="batch-1")
         t.append(index.filter(is_new), batch_id="batch-1")  # replay
         res = _ann_probe(t.snapshot(), probes, tq, t.version())
-        # bounded driver materialization (top-{n} rows) so the
-        # on-disk index can be cleaned up before returning
-        rows = res.collect()
-        return local_frame(spark, rows, res.schema)
+        # held: the on-disk index is removed on return
+        return hold(res)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -315,10 +313,8 @@ def incremental_ann_retire(spark: SparkSession,
         t.delete_where(cond, batch_id="retire-1")
         t.delete_where(cond, batch_id="retire-1")   # replay: no-op
         res = _ann_probe(t.snapshot(), probes, tq, t.version())
-        # bounded driver materialization (top-{n} rows) so the
-        # on-disk index can be cleaned up before returning
-        rows = res.collect()
-        return local_frame(spark, rows, res.schema)
+        # held: the on-disk index is removed on return
+        return hold(res)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -8,6 +8,17 @@ DuckDB oracle), Arrow transfer for the Pandas-UDF slow path.
 On a real cluster the same factory applies; only master/memory come
 from the environment (spark-submit), never hardcoded here.
 
+State that a query keeps between steps takes one of three forms:
+- ``hold(df)``: a computed frame of at most ``HOLD_ROWS`` (1M) rows,
+  such as per-node loop state or a final aggregate, collected once
+  through Arrow into a local relation with its true size (about 24 MB
+  of driver memory at the bound for 24-byte rows). Joins against it
+  broadcast by size; above the bound it falls back to ``pin``.
+- ``pin(df)``: data-sized state, or a frame the call site cannot
+  bound, checkpointed on the executors; it keeps its pre-pin size
+  estimate.
+- ``local_frame(spark, rows, schema)``: rows the driver built itself.
+
 Cold start: the driver JVM maps a JDK dynamic class-data-sharing
 (AppCDS) archive of the classes a session loads, which halves the
 time to a first answer (perfbench ``etl_roundtrip`` setup median
@@ -127,8 +138,9 @@ _DEFAULTS: dict[str, str] = {
 # keep the JVM's class-data-sharing log lines off stdout, which
 # bench.py and the CLI hand to their callers
 _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
-# how long a Python process waits at exit for its JVM to write the
-# archive (about 20 s for a full session's classes) before killing it
+# how long a Python process waits at exit for its JVM to exit (about
+# 20 s when it writes the archive of a full session's classes) before
+# killing it
 _DUMP_WAIT_S = 120
 
 
@@ -231,11 +243,12 @@ def _cds_launch(spark_home: str) -> tuple[str, str, str | None] | None:
     return f"{opts} {_CDS_QUIET}", os.path.join(d, "conf"), part
 
 
-def _publish_at_exit(proc: subprocess.Popen, part: str) -> None:
+def _stop_at_exit(proc: subprocess.Popen, part: str | None) -> None:
     """Let the driver JVM exit (the gateway exits when its stdin
-    closes), wait while it writes ``part``, then publish ``part`` as
-    the archive if the JVM exited cleanly. A JVM killed by a signal
-    leaves nothing, and the next session records again."""
+    closes) and wait for it, so no JVM outlives its Python process.
+    With ``part``, the JVM writes the archive there as it exits; it is
+    published as the archive if the JVM exited cleanly. A JVM killed
+    by a signal leaves nothing, and the next session records again."""
     from pyspark import SparkContext
 
     if proc.poll() is None:
@@ -249,6 +262,8 @@ def _publish_at_exit(proc: subprocess.Popen, part: str) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
+    if part is None:
+        return
     base = part.rsplit(".", 2)[0]  # <dir>/<key>
     try:
         size = os.path.getsize(part)
@@ -265,7 +280,10 @@ def _publish_at_exit(proc: subprocess.Popen, part: str) -> None:
 def _start_driver(conf: dict[str, str]) -> None:
     """Start the driver JVM with ``conf`` (driver memory must be set at
     launch) unless one runs already, with the class-data-sharing
-    archive when it applies."""
+    archive when it applies. A JVM started here is stopped and waited
+    for (at most ``_DUMP_WAIT_S``) when Python exits; else it would
+    quit on its own about 1-1.5 s after its stdin closes, outliving
+    the process."""
     from pyspark import SparkConf, SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
@@ -295,8 +313,9 @@ def _start_driver(conf: dict[str, str]) -> None:
                 del os.environ["SPARK_CONF_DIR"]
             else:
                 os.environ["SPARK_CONF_DIR"] = saved
-    if part:
-        atexit.register(_publish_at_exit, SparkContext._gateway.proc, part)
+    proc = SparkContext._gateway.proc
+    if proc is not None:  # None when PYSPARK_GATEWAY_PORT named the JVM
+        atexit.register(_stop_at_exit, proc, part)
 
 
 def _launch_master() -> str:
@@ -357,7 +376,10 @@ def get_spark(app_name: str = "etl_tool_rep_spark",
 
 def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` once and cut its lineage — the one place the
-    engine chooses between Spark's two checkpoint kinds.
+    engine chooses between Spark's two checkpoint kinds. Use it for
+    data-sized state (edge lists, per-row frames) and for frames whose
+    size the call site cannot bound; a frame of at most ``HOLD_ROWS``
+    rows (per-node state, an aggregate) goes through ``hold``.
 
     Durability follows the SparkContext: when it has a checkpoint
     directory (``spark.checkpoint.dir`` at startup, or
@@ -366,6 +388,10 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     ``localCheckpoint()`` that keeps blocks on the executors only —
     fine for local mode, fatal to the lineage on a cluster that loses
     one. Results are the same either way.
+
+    A pinned frame keeps the size estimate of the plan it cut (for an
+    inner join, the product of its sides), so joins against it do not
+    broadcast by size.
 
     When to pin (measured over the r14 repeated-scan census): pin TINY
     frames that sit over EXPENSIVE subtrees and feed several
@@ -380,14 +406,50 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager)
 
 
+# the most rows ``hold`` keeps on the driver: about sf100's 1M
+# suppliers, the largest node set of a held loop key there
+HOLD_ROWS = 1 << 20
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Run ``df`` now (one ``toArrow()`` job) and return its rows as a
+    JVM local relation that plans with its true size, so joins against
+    it broadcast by size; it reads no executor block, so it needs no
+    checkpoint dir. For small computed state: per-node loop frames,
+    final aggregates.
+
+    At most ``HOLD_ROWS`` rows: at 24 bytes a row that is about 24 MB
+    of driver memory at sf100 (1M suppliers); sf1000's 10M (240 MB)
+    is past the bound. Over it ``hold`` returns ``pin(df)``, which runs
+    ``df`` a second time after the driver held all of it once. A frame
+    over ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB
+    of Arrow data) plans over an RDD, without its true size. The bound
+    is read from ``num_rows``: ``df.limit(HOLD_ROWS + 1)`` would plan a
+    ``CollectLimit``, whose incremental fetch ran 2 jobs in 0.26 s
+    against 1 job in 0.07 s at sf0.1."""
+    table = df.toArrow()
+    if table.num_rows > HOLD_ROWS:
+        return pin(df)
+    return _arrow_frame(df.sparkSession, table, df.schema)
+
+
+def _arrow_frame(spark: SparkSession, table,
+                 schema: StructType) -> DataFrame:
+    """A ``pyarrow.Table`` under ``schema`` as a JVM local relation
+    (``LocalTableScan``): the tail ``hold`` and ``local_frame``
+    share."""
+    return spark.createDataFrame(table, schema)
+
+
 def local_frame(spark: SparkSession, rows,
                 schema: StructType | str) -> DataFrame:
     """A driver-built frame (``rows`` of tuples, lists, dicts or
     ``Row``s under ``schema``, a ``StructType`` or DDL string) as a
     JVM local relation — the one way the engine hands small driver
-    tables back to Spark.
+    tables back to Spark. A frame Spark computed comes back with
+    ``hold``, never through ``collect()`` and this.
 
-    ``spark.createDataFrame(list, schema)`` plans as ``Scan
+    ``spark.createDataFrame`` over a list plans as ``Scan
     ExistingRDD`` over a pickled Python RDD, so every job that reads
     it starts Python workers to unpickle the rows. Here the rows
     become one ``pyarrow.Table`` typed by Spark's own Arrow mapping
@@ -411,4 +473,4 @@ def local_frame(spark: SparkSession, rows,
     table = pa.Table.from_arrays(
         [pa.array([r[i] for r in internal], type=f.type)
          for i, f in enumerate(arrow)], schema=arrow)
-    return spark.createDataFrame(table, schema)
+    return _arrow_frame(spark, table, schema)

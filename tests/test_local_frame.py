@@ -1,7 +1,9 @@
 """``session.local_frame`` must build the same frame as
 ``createDataFrame(rows, schema)`` (rows, schema and nullability) for
 every type the engine passes, while planning as a JVM
-``LocalTableScan`` instead of a scan over a pickled Python RDD."""
+``LocalTableScan`` instead of a scan over a pickled Python RDD; and
+``session.hold`` must bring a computed frame back the same way, with
+its true size, in one job."""
 
 import datetime
 import decimal
@@ -13,7 +15,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from etl_tool_rep_spark.session import local_frame
+from etl_tool_rep_spark import session
+from etl_tool_rep_spark.session import hold, local_frame, pin
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -81,3 +84,67 @@ def test_naive_datetimes_keep_list_path_meaning_off_utc():
                        capture_output=True, text=True, timeout=300)
     assert p.returncode == 0, p.stderr[-3000:]
     assert p.stdout.strip().splitlines()[-1] == "MATCH"
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def test_held_frame_has_its_true_size_and_broadcasts(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from etl_tool_rep_spark.catalog import load
+    from etl_tool_rep_spark.operators.graph import co_supplier_edges
+
+    edges = pin(co_supplier_edges(load(spark, sf_dir, "lineitem")))
+    deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+    held = hold(deg)
+    n = held.count()
+    assert _optimized(held).getClass().getSimpleName() == "LocalRelation"
+    # 8-byte id + 8-byte count + Spark's 8-byte row overhead
+    assert int(str(_optimized(held).stats().sizeInBytes())) == 24 * n
+    # the same frame pinned reads too big to broadcast
+    assert int(str(_optimized(pin(deg)).stats().sizeInBytes())) > int(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    plan = _plan(edges.join(held, "a"))
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+
+def test_held_frame_keeps_schema_and_cells(spark):
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("big", T.DecimalType(38, 0)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ids", T.ArrayType(T.LongType())),
+    ])
+    rows = [(1, 1.5, decimal.Decimal(10 ** 37 + 7),
+             datetime.date(2020, 2, 29),
+             datetime.datetime(2021, 3, 14, 1, 59, 26, 535897),
+             [1, None, 3]),
+            (2, None, None, None, None, None),
+            (3, -0.0, decimal.Decimal(-(10 ** 37)),
+             datetime.date(1969, 12, 31),
+             datetime.datetime(1969, 12, 31, 23, 59, 59, 999999), [])]
+    # computed by Spark (a filter over the scan), not a local relation
+    df = spark.createDataFrame(rows, schema).filter("k > 0")
+    got = hold(df)
+    assert got.schema == df.schema
+    assert sorted(got.collect()) == sorted(df.collect())
+    assert "LocalTableScan" in _plan(got)
+
+
+def test_over_the_bound_hold_is_a_pin(spark, monkeypatch):
+    df = spark.range(25).selectExpr("id", "id * id AS sq")
+    monkeypatch.setattr(session, "HOLD_ROWS", 10)
+    got = hold(df)
+    assert _optimized(got).getClass().getSimpleName() == "LogicalRDD"
+    assert sorted(got.collect()) == sorted(pin(df).collect())
+
+
+def test_hold_runs_one_job(spark, group_jobs):
+    df = spark.range(1000).selectExpr("id", "id % 7 AS m")
+    held, jobs = group_jobs("hold-one-job", lambda: hold(df))
+    assert jobs == 1
+    assert held.count() == 1000

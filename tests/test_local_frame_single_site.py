@@ -1,6 +1,7 @@
 """Driver-built frames have one way back into Spark:
-``session.local_frame`` is the only code in the engine and its tools
-that calls ``createDataFrame``, apart from the two pandas inputs of
+``session.local_frame`` and ``session.hold``, through their shared
+Arrow tail ``session._arrow_frame``, are the only code in the engine
+and its tools that calls ``createDataFrame``, apart from the two pandas inputs of
 ``sources/readers.py``, so no list of rows is planned as a scan over a
 pickled Python RDD."""
 
@@ -13,7 +14,7 @@ _CALL = re.compile(r"createDataFrame\(")
 
 # (file, function) pairs allowed to call createDataFrame
 _ALLOWED = {
-    ("session.py", "local_frame"),          # the Arrow table
+    ("session.py", "_arrow_frame"),         # the Arrow table
     ("sources/readers.py", "read_excel"),   # pandas from read_excel
     ("sources/readers.py", "read_excel_many"),  # pandas schema probe
 }

@@ -184,12 +184,15 @@ def test_nlj_allowlist_stays_small():
 
 @pytest.mark.parametrize("name", ["ann_pq_knn", "ann_ivf_knn",
                                   "perceptron_train",
-                                  "late_interaction_maxsim"])
+                                  "late_interaction_maxsim",
+                                  "spatial_radius_join",
+                                  "spatial_cell_rollup"])
 def test_deallowlisted_queries_prove_their_bounds(spark, sf_dir, name):
     """The three round-9 graduates (plus tier 42's MaxSim, born with
-    a plan-visible bound): their probe/weight bounds are plan-visible
-    (limit(5)/limit(4) / Range(1)), so the non-equi rule must
-    pass WITHOUT an allowlist entry."""
+    a plan-visible bound, and the spatial keys, whose offset grids are
+    ``local_frame`` local relations): their probe/weight/grid bounds
+    are plan-visible (limit(5)/limit(4) / Range(1) / LocalRelation),
+    so the non-equi rule must pass WITHOUT an allowlist entry."""
     from tools.explain_audit import _NESTED_LOOP_OK, audit_nonequi_joins
     assert name not in _NESTED_LOOP_OK
     df = QUERIES[name](spark, sf_dir)

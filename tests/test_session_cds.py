@@ -110,6 +110,7 @@ def test_warm_session_maps_the_archive(recorded, sf_dir, want_sum,
     assert rec["sum"] == want_sum
     assert _uses(rec, "-XX:SharedArchiveFile=")
     assert not _uses(rec, "-XX:ArchiveClassesAtExit=")
+    assert not _alive(rec["pid"]), "the driver JVM outlived its process"
     shared = [ln for ln in loads.read_text().splitlines()
               if "org.apache.spark.SparkContext " in ln]
     assert shared and "source: shared objects file (top)" in shared[0]

@@ -22,7 +22,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # Queries whose non-equi/cross join has a REAL bound the logical
 # plan cannot expose (round 8 shrank this list from ~70 names to the
-# six below: `audit_nonequi_joins` now PROVES the bounded side for
+# three below: `audit_nonequi_joins` now PROVES the bounded side for
 # everything else — scalar attaches, literal grids, rank-utility
 # triangular offsets — via the row-bound/attr-provenance propagator,
 # and the old text-only BroadcastNestedLoopJoin check was retired in
@@ -40,9 +40,6 @@ _NESTED_LOOP_OK = {
     # domain (per-nation frames — real bound 25, but the grouping
     # column is produced by a join the propagator won't cross)
     "ratio_to_report",
-    # spatial: cells cross the 9-row neighbor-offset / 3-row zoom
-    # grids built via createDataFrame -> LogicalRDD (opaque bound)
-    "spatial_radius_join", "spatial_cell_rollup",
     # Round-9 (verdict item #3): ann_pq_knn / ann_ivf_knn left the
     # list via a plan-visible limit(5) on their probe frames (plus
     # ArrowEvalPython row-preservation in _row_bound); perceptron_
